@@ -64,11 +64,9 @@ object Graph {
     * checkpoints are released before return.
     */
   def pageRank(edges: DataFrame, src: Column, dst: Column,
-               iters: Int = 5, dampingPct: Int = 85,
-               checkpointEvery: Int = 1): DataFrame = {
+               iters: Int = 5, dampingPct: Int = 85): DataFrame = {
     require(iters >= 0, "iters must be non-negative")
     require(dampingPct >= 0 && dampingPct <= 100, "dampingPct in [0,100]")
-    require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
 
     // Edges cross the wire ONCE, hash-partitioned by the per-iteration
     // join key (r19): the previous checkpoint kept the distinct's
@@ -96,35 +94,20 @@ object Graph {
     val teleport = ((100L - dampingPct) * 1000000L) / (100L * n)
 
     var ranks = nodes.withColumn("rank", lit(1000000L / n)).localCheckpoint()
-    var done = 0
-    while (done < iters) {
-      // segment size is a knob, default 1 (r19 measurement: fusing 5
-      // iterations into one job cut jobs 61 -> 34 but cost +24% wall —
-      // AQE re-optimizes the whole fused plan at every shuffle-stage
-      // boundary, and the deep plan makes each re-optimization pay more
-      // than the saved materializations; raise checkpointEvery only
-      // where driver round-trips dominate, e.g. very high-latency
-      // clusters). Within a segment the plan chains linearly (each
-      // round references the previous exactly once — never the round-3
-      // self-join doubling hazard).
-      val segment = math.min(checkpointEvery, iters - done)
-      var cur = ranks
-      for (_ <- 1 to segment) {
-        // contrib truncated to a long BEFORE the sum → order-independent.
-        val contribs = eDeg.join(cur, eDeg("src") === cur("id"))
-          .select(col("dst").as("id"),
-            expr("rank div outdeg").as("contrib")) // integral div: exact
-          .groupBy("id").agg(sum("contrib").as("inflow"))
-        cur = nodes.join(contribs, Seq("id"), "left")
-          .select(col("id"),
-            (lit(teleport) +
-              expr(s"(${dampingPct}L * coalesce(inflow, 0L)) div 100")
-            ).as("rank"))
-      }
-      val materialized = cur.localCheckpoint()
+    for (_ <- 1 to iters) {
+      // contrib truncated to a long BEFORE the sum → order-independent.
+      val contribs = eDeg.join(ranks, eDeg("src") === ranks("id"))
+        .select(col("dst").as("id"),
+          expr("rank div outdeg").as("contrib")) // integral div: exact
+        .groupBy("id").agg(sum("contrib").as("inflow"))
+      val next = nodes.join(contribs, Seq("id"), "left")
+        .select(col("id"),
+          (lit(teleport) +
+            expr(s"(${dampingPct}L * coalesce(inflow, 0L)) div 100")
+          ).as("rank"))
+        .localCheckpoint()
       org.apache.spark.sql.GraftColumnBridge.unpersistCheckpoint(ranks)
-      ranks = materialized
-      done += segment
+      ranks = next
     }
     // loop-only inputs: the returned ranks are a materialized checkpoint
     // with truncated lineage, so these blocks can go now

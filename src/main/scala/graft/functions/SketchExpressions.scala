@@ -20,13 +20,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   */
 
 /** MinHash signature from an `array<long>` of shingle hashes:
-  * out[j] = min over x of (a[j]·(x mod 2³¹) + b[j]) mod P, P = 2⁶¹−1.
+  * out[j] = min over x of (a[j]·(x mod 2³¹) + b[j]) mod P, P = 2³¹−1.
+  * The modulus must be smaller than a[j]·x + b[j] can grow (a[j] < 2²⁰):
+  * a modulus that never reduces leaves every hash increasing in x, and
+  * all minima then come from the same shingle.
   */
 case class MinHashFromHashes(child: Expression, numHashes: Int,
                              as: Seq[Long], bs: Seq[Long])
     extends UnaryExpression with Serializable {
 
-  private val P = 2305843009213693951L
+  private val P = 2147483647L
 
   override def prettyName: String = "minhash_signature"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)

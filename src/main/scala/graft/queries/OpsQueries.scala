@@ -17,9 +17,24 @@ import org.apache.spark.sql.types._
   */
 object OpsQueries {
 
+  /** Parent of every op gate's scratch warehouse: created once per JVM
+    * and removed, with everything under it, by one shutdown hook. The
+    * gates return lazy frames over their warehouses, so no gate can
+    * delete its own when it returns.
+    */
+  private lazy val tmpRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft-ops-wh")
+    sys.addShutdownHook(
+      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile))
+    root
+  }
+
+  /** A fresh scratch warehouse directory under [[tmpRoot]]. */
+  private[graft] def tmpWarehouseDir(): String =
+    java.nio.file.Files.createTempDirectory(tmpRoot, "wh").toString
+
   private def tmpWarehouse(s: SparkSession): SparkWarehouse =
-    new SparkWarehouse(s,
-      java.nio.file.Files.createTempDirectory("graft-ops-wh").toString)
+    new SparkWarehouse(s, tmpWarehouseDir())
 
   /** The SCD2 fixture history shared by op_scd2 / op_scd2_asof: a 100-key
     * snapshot at 2020-01-01, batch1 (renames 1-5, segment moves 11-15,

@@ -58,10 +58,9 @@ object SchemaInference {
     */
   private def walk(v: Any, idx: Long, errors: ErrorCounter): Lat = v match {
     case m: scala.collection.Map[_, _] =>
-      val fields = m.toSeq.map { case (k, value) =>
+      record(m.toSeq.map { case (k, value) =>
         Sanitize.cleanFieldKey(k) -> walk(value, idx, errors)
-      }
-      LRecord(fields.toVector, fields.map(_._1 -> idx).toMap)
+      }, idx)
     case m: java.util.Map[_, _] => walk(m.asScala, idx, errors)
     case it: Iterable[_] =>
       foldList(it.toSeq, idx, errors)
@@ -76,6 +75,18 @@ object SchemaInference {
   }
 
   private final class ErrorCounter { var n: Long = 0L }
+
+  /** One record's sanitised fields. Keys that clean to the same name
+    * keep the LAST value at the FIRST key's position — the rule of
+    * `Ingest.canonicalizeJsonLine` and the reference's dict rewrite
+    * (data.py:13-120), so the schema names exactly the columns the
+    * loaded rows carry.
+    */
+  private def record(fields: Seq[(String, Lat)], idx: Long): LRecord = {
+    val byKey = scala.collection.mutable.LinkedHashMap.empty[String, Lat]
+    fields.foreach { case (k, lat) => byKey(k) = lat }
+    LRecord(byKey.toVector, byKey.keysIterator.map(_ -> idx).toMap)
+  }
 
   private def foldList(elems: Seq[Any], idx: Long, errors: ErrorCounter): Lat = {
     val lats = elems.map(walk(_, idx, errors))
@@ -123,10 +134,9 @@ object SchemaInference {
 
   private def walkJson(node: JsonNode, idx: Long, errors: ErrorCounter): Lat = {
     if (node.isObject) {
-      val fields = node.properties().asScala.toVector.map { e =>
+      record(node.properties().asScala.toSeq.map { e =>
         Sanitize.cleanFieldKey(e.getKey) -> walkJson(e.getValue, idx, errors)
-      }
-      LRecord(fields, fields.map(_._1 -> idx).toMap)
+      }, idx)
     } else if (node.isArray) {
       val elems = node.elements().asScala.toSeq.map(walkJson(_, idx, errors))
       val hasRecord = elems.exists(_.isInstanceOf[LRecord])

@@ -354,6 +354,12 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
         else existingSchema ++
           dataSchema.filterNot(f => existingSchema.exists(_.name == f.name))
 
+      // refused before the table is created or its schema evolved
+      val aligned = alignToTable(prepared, Widen.toStructType(resolved)) match {
+        case Left(e) => return Left(e)
+        case Right(df) => df
+      }
+
       if (!fs.exists(tablePath(name))) {
         create(name, resolved) match {
           case Left(e) => return Left(e)
@@ -369,16 +375,6 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
           case _ => ()
         }
       }
-
-      // align the data with the resolved table schema: every appended
-      // parquet file must carry the table's column types or later scans
-      // hit footer-schema conflicts
-      val target = Widen.toStructType(resolved)
-      val aligned = prepared.select(target.fields.toSeq.map { f =>
-        if (prepared.columns.contains(f.name))
-          col(f.name).cast(f.dataType).as(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      }: _*)
 
       val sized = aligned.withColumn("_graft_size", Ingest.rowJsonSize(aligned))
       Chunker.greedyChunkIds(sized, "_graft_size", sizeLimit) match {
@@ -417,6 +413,41 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
       case e: IllegalArgumentException => Left(RowsInvalid(e.getMessage))
       case e: Exception => Left(TableGenericError(e.getMessage, Some(e)))
     }
+
+  /** `data` aligned to the table's columns — its order and types,
+    * absent columns as typed nulls — so every appended parquet file
+    * carries the table's column types (later scans would otherwise hit
+    * footer-schema conflicts). A fractional column bound for an integral
+    * table column is refused, naming the column and both types: the
+    * cast would silently truncate (1.5 → 1). The check compares schemas
+    * on the driver; no job runs.
+    */
+  private def alignToTable(data: DataFrame, target: StructType)
+      : Either[WarehouseError, DataFrame] = {
+    import org.apache.spark.sql.types._
+    def fractional(t: DataType) = t match {
+      case FloatType | DoubleType => true
+      case d: DecimalType => d.scale > 0
+      case _ => false
+    }
+    def integral(t: DataType) = t match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+    val narrowing = target.fields.toSeq.flatMap { f =>
+      data.schema.find(_.name == f.name).map(_.dataType)
+        .filter(t => fractional(t) && integral(f.dataType))
+        .map(t => s"'${f.name}' (${t.sql} into ${f.dataType.sql})")
+    }
+    if (narrowing.nonEmpty)
+      Left(RowsInvalid("fractional values would be truncated by loading " +
+        s"them into integer columns: ${narrowing.mkString(", ")}"))
+    else Right(data.select(target.fields.toSeq.map { f =>
+      if (data.columns.contains(f.name))
+        col(f.name).cast(f.dataType).as(f.name)
+      else lit(null).cast(f.dataType).as(f.name)
+    }: _*))
+  }
 
   /** `.update` — append or overwrite rows (the reference leaves this a
     * stub; mode maps to SaveMode).
@@ -466,13 +497,10 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
           val missing = keys.filterNot(prepared.columns.contains)
           if (missing.nonEmpty)
             return Left(InvalidInput(s"upsert keys absent from data: $missing"))
-          // align incoming columns to the table schema (same discipline
-          // as load: every file must carry the table's column types)
-          val aligned = prepared.select(existing.schema.fields.toSeq.map { f =>
-            if (prepared.columns.contains(f.name))
-              col(f.name).cast(f.dataType).as(f.name)
-            else lit(null).cast(f.dataType).as(f.name)
-          }: _*)
+          val aligned = alignToTable(prepared, existing.schema) match {
+            case Left(e) => return Left(e)
+            case Right(df) => df
+          }
           // partition-pruned MERGE: when the table is partitioned and
           // every partition column is part of the upsert key, a key can
           // only ever live in the partition its key values name — so
@@ -811,243 +839,184 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
   private def statsPath(name: String) = new Path(tablePath(name), "_graft_stats")
   private def bloomPath(name: String) = new Path(tablePath(name), "_graft_bloom")
 
-  // parsed stats sidecar, cached per table against the sidecar's file
+  // Decoded sidecars are cached per table against the sidecar's file
   // fingerprint (names+lengths+mtimes): repeated pruned scans skip the
   // re-read/re-parse — the metastore-cache role real engines give file
-  // statistics. Invalidation is the fingerprint itself: analyzeStats
-  // overwrites the sidecar, rewrites drop it with the table dir.
-  // Residency is budget-bounded like the Bloom cache
-  // (`spark.graft.statsCache.maxBytes`, default 1 GiB): a table whose
-  // decoded stats would exceed the budget gets zone-map pruning
-  // DISABLED loudly (reads stay correct — they just stop skipping),
-  // and across tables the least-recently-used entries are evicted.
+  // statistics. Invalidation is the fingerprint itself: analyze
+  // overwrites the sidecar, rewrites drop it with the table dir. All
+  // three sidecar caches load through [[loadSidecar]] under an ENFORCED
+  // driver-memory budget: decoded residency is O(#files × #cols), which
+  // at 800k files cannot fit any driver. A sidecar over its budget is
+  // refused (reads stay correct — they just stop skipping), and across
+  // tables the least-recently-used entries are evicted.
+
+  /** One decoded sidecar generation: the fingerprint it was read at,
+    * its size in its cache's budget units, and the parsed content.
+    */
+  private final case class Sidecar[P](fp: String, size: Long, parsed: P)
+
+  private def sidecarCache[P](budget: () => Long) =
+    new LruFileBudgetCache[String, Sidecar[P]](budget, _.size)
+
+  // zone-map stats (`spark.graft.statsCache.maxBytes`, default 1 GiB)
   private def statsCacheBudgetBytes: Long =
     spark.conf.getOption("spark.graft.statsCache.maxBytes")
       .map(_.toLong).getOrElse(1L << 30)
 
-  private val statsCache = new java.util.LinkedHashMap[String,
-    (String, Long, Map[String, Map[String, Skipping.ColStats]])](
-    16, 0.75f, /* accessOrder = */ true)
-  private var statsCacheBytes = 0L
-  // fingerprints refused for exceeding the budget (one sizing job per
-  // sidecar generation, not a re-read per query)
-  private val statsDisabledFps =
-    scala.collection.mutable.Set.empty[String]
+  private val statsCache =
+    sidecarCache[Map[String, Map[String, Skipping.ColStats]]](
+      () => statsCacheBudgetBytes)
 
   /** (resident tables, resident decoded bytes) for the stats cache. */
-  def statsCacheResident: (Int, Long) = statsCache.synchronized {
-    (statsCache.size, statsCacheBytes)
-  }
+  def statsCacheResident: (Int, Long) = statsCache.resident
+
+  // deserialized Bloom filters (`spark.graft.bloomCache.maxBytes`,
+  // default 1 GiB). Sizes are accounted from the serialized filter bytes
+  // (the decoded bitset is the same bits plus a fixed header, so
+  // serialized length is an accurate proxy).
+  private def bloomCacheBudgetBytes: Long =
+    spark.conf.getOption("spark.graft.bloomCache.maxBytes")
+      .map(_.toLong).getOrElse(1L << 30)
+
+  private val bloomCache = sidecarCache[
+    Map[String, Map[String, org.apache.spark.util.sketch.BloomFilter]]](
+    () => bloomCacheBudgetBytes)
+
+  /** (resident tables, resident decoded bytes) — test/ops observability
+    * for the budget enforcement.
+    */
+  def bloomCacheResident: (Int, Long) = bloomCache.resident
+
+  /** The bloom sidecar's COVERAGE pairs (rel → set of covered column
+    * keys, sentinel-row rels kept with an empty set), budgeted in pairs
+    * (4M ≈ a few hundred MB of strings at the worst): the incremental
+    * analyzeBloom no-op then needs only driver set probes instead of
+    * scheduling its coverage joins every call — the same warm-path
+    * shape analyzeStats gets from the stats cache. Unlike
+    * [[cachedBlooms]] this holds NO filter bytes (null-bloom coverage
+    * rows count — coverage is about what was analyzed, not what holds a
+    * filter), so it stays resident even when the decoded-filter budget
+    * refuses the table.
+    */
+  private val BloomPairsBudget = 4000000L
+  private val bloomPairsCache =
+    sidecarCache[Map[String, Set[String]]](() => BloomPairsBudget)
 
   private def sidecarFingerprint(dir: Path): String =
     fs.listStatus(dir).map(st =>
       s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
       .sorted.mkString(";")
 
-  // deserialized Bloom filters, cached like the stats sidecar (the
-  // fingerprint invalidates on re-analyze; rewrites drop the dir) —
-  // but under an ENFORCED driver-memory budget: decoded residency is
-  // O(#files × #cols × filter bytes), which at 800k files × MBs per
-  // filter cannot fit any driver. The budget
-  // (`spark.graft.bloomCache.maxBytes`, default 1 GiB) is applied two
-  // ways: tables whose whole decoded sidecar exceeds it get bloom
-  // pruning DISABLED (loudly, once per sidecar generation — zone-map
-  // pruning and correctness are unaffected: absent filters just mean
-  // the file is read), and across tables the least-recently-used
-  // entries are evicted until residency fits. Sizes are accounted from
-  // the serialized filter bytes (the decoded bitset is the same bits
-  // plus a fixed header, so serialized length is an accurate proxy).
-  private def bloomCacheBudgetBytes: Long =
-    spark.conf.getOption("spark.graft.bloomCache.maxBytes")
-      .map(_.toLong).getOrElse(1L << 30)
-
-  private val bloomCache = new java.util.LinkedHashMap[String,
-    (String, Long,
-      Map[String, Map[String, org.apache.spark.util.sketch.BloomFilter]])](
-    16, 0.75f, /* accessOrder = */ true)
-
-  private var bloomCacheBytes = 0L
-  // fingerprints whose decode was refused for exceeding the budget:
-  // memoized so an over-budget table costs ONE sizing job per sidecar
-  // generation, not a re-read per query
-  private val bloomDisabledFps =
-    scala.collection.mutable.Set.empty[String]
-
-  // fingerprint+budget → admitted filter KINDS and their decoded bytes:
-  // a partially-over-budget table (e.g. an n-gram family that alone
-  // blows the budget) re-decides admission from this memo on every
-  // cache rebuild — no re-run of the sizing aggregation, no re-printed
-  // multi-line warning — until the sidecar generation or budget changes
-  private val bloomKindMemo =
-    scala.collection.mutable.Map.empty[String, (Seq[Int], Long)]
-
-  /** (resident tables, resident decoded bytes) — test/ops observability
-    * for the budget enforcement.
+  /** The load protocol every budgeted sidecar cache shares: fingerprint
+    * the sidecar; serve a hit of the same generation; otherwise take the
+    * memoized admission for (fingerprint, budget), or size the sidecar's
+    * `parts` with ONE distributed aggregate — BEFORE any driver
+    * materialization (collecting first and checking after would already
+    * have OOM'd the driver on the sidecar the budget exists to refuse).
+    * Parts are admitted in `parts` order, each only if it fits the
+    * remaining budget, and each excluded part is reported through `warn`.
+    * When no part of substance fits the sidecar is refused (`refused` is
+    * returned and any stale entry dropped); otherwise the admitted parts
+    * are collected, parsed, and cached under the budget. The admission
+    * is memoized either way, so a refused or partly admitted sidecar
+    * costs one sizing job per sidecar generation, not one per read.
     */
-  def bloomCacheResident: (Int, Long) = bloomCache.synchronized {
-    (bloomCache.size, bloomCacheBytes)
+  private def loadSidecar[P](name: String, dir: Path,
+                             cache: LruFileBudgetCache[String, Sidecar[P]],
+                             budget: Long, parts: Seq[Int], refused: P)(
+      sizeParts: () => Map[Int, Long],
+      warn: (Seq[Int], Map[Int, Long]) => Unit,
+      parse: Seq[Int] => P): P = {
+    val fp = sidecarFingerprint(dir)
+    val hit = cache.get(name)
+    if (hit != null && hit.fp == fp) return hit.parsed
+    val (admitted, size) = cache.admission(fp, budget).getOrElse {
+      val perPart = sizeParts().withDefaultValue(0L)
+      var remaining = budget
+      val inc = parts.filter { k =>
+        if (perPart(k) <= remaining) { remaining -= perPart(k); true }
+        else false
+      }
+      val excluded = parts.filter(k => perPart(k) > 0L && !inc.contains(k))
+      if (excluded.nonEmpty) warn(excluded, perPart)
+      val decided =
+        if (excluded.nonEmpty && inc.forall(perPart(_) == 0L)) (Nil, 0L)
+        else (inc, inc.map(perPart).sum)
+      cache.admit(fp, budget, decided)
+      decided
+    }
+    if (admitted.isEmpty) { cache.remove(name); refused }
+    else {
+      val parsed = parse(admitted)
+      cache.put(name, Sidecar(fp, size, parsed))
+      parsed
+    }
   }
 
+  /** Bloom filters per rel and column key. Sizing is per FILTER KIND,
+    * admitted in value order — point equality filters first, then
+    * prefix, then n-gram — so an oversized n-gram family degrades ONLY
+    * substring pruning and never silently disables the (small)
+    * point/prefix filters with it.
+    */
   private def cachedBlooms(name: String)
       : Map[String, Map[String, org.apache.spark.util.sketch.BloomFilter]] = {
-    val fp = sidecarFingerprint(bloomPath(name))
-    bloomCache.synchronized {
-      val hit = bloomCache.get(name) // touches LRU order
-      if (hit != null && hit._1 == fp) return hit._3
-      if (bloomDisabledFps.contains(s"$fp@${bloomCacheBudgetBytes}"))
-        return Map.empty // memoized refusal (keyed on budget too)
-    }
-    val budget = bloomCacheBudgetBytes
-    // size check BEFORE any driver materialization (one small
-    // aggregation job): collecting first and checking after would
-    // already have OOM'd the driver on the sidecar the budget exists
-    // to refuse. Sizing is per FILTER KIND, admitted in value order —
-    // point equality filters first, then prefix, then n-gram — each
-    // kind included only if it fits the remaining budget, so an
-    // oversized n-gram family degrades ONLY substring pruning and can
-    // no longer silently disable the (small) point/prefix filters
-    // with it.
     val kindCol =
       when(col("column").contains(lit("\u0000prefix\u0000")), lit(1))
         .when(col("column").contains(lit("\u0000ngram\u0000")), lit(2))
         .otherwise(lit(0))
-    val memoKey = s"$fp@$budget"
-    val memoHit = bloomCache.synchronized { bloomKindMemo.get(memoKey) }
-    val (included, bytes) = memoHit.getOrElse {
-      val perKind = spark.read.schema(bloomSidecarSchema)
-        .parquet(bloomPath(name).toString)
-        .groupBy(kindCol.as("kind"))
+    def sidecar = spark.read.schema(bloomSidecarSchema)
+      .parquet(bloomPath(name).toString)
+    val kindName = Map(0 -> "point", 1 -> "prefix", 2 -> "ngram")
+    loadSidecar(name, bloomPath(name), bloomCache, bloomCacheBudgetBytes,
+      Seq(0, 1, 2),
+      Map.empty[String, Map[String, org.apache.spark.util.sketch.BloomFilter]])(
+      () => sidecar.groupBy(kindCol.as("kind"))
         .agg(sum(length(col("bloom"))).as("b"))
         .collect()
         .map(r => r.getInt(0) -> (if (r.isNullAt(1)) 0L else r.getLong(1)))
-        .toMap
-      var remaining = budget
-      val inc = Seq(0, 1, 2).filter { k =>
-        val b = perKind.getOrElse(k, 0L)
-        if (b <= remaining) { remaining -= b; true } else false
-      }
-      val excluded = Seq(0, 1, 2).filter(k =>
-        perKind.getOrElse(k, 0L) > 0L && !inc.contains(k))
-      val incBytes = inc.map(perKind.getOrElse(_, 0L)).sum
-      if (excluded.nonEmpty) {
-        val kindName = Map(0 -> "point", 1 -> "prefix", 2 -> "ngram")
-        System.err.println(s"[graft] bloom sidecar for '$name': kinds " +
-          s"${excluded.map(kindName)} (${excluded.map(perKind(_)).sum} " +
+        .toMap,
+      (excluded, perKind) => System.err.println(
+        s"[graft] bloom sidecar for '$name': kinds " +
+          s"${excluded.map(kindName)} (${excluded.map(perKind).sum} " +
           s"bytes) exceed the remaining cache budget " +
           "(spark.graft.bloomCache.maxBytes) and are NOT loaded — their " +
           "pruning is disabled for this table; included kinds " +
-          s"(${inc.map(kindName)}) still prune. Raise the budget or " +
-          "re-analyze with fewer/smaller filters")
-        if (inc.forall(k => perKind.getOrElse(k, 0L) == 0L)) {
-          // nothing with substance fits: full refusal, memoized so the
-          // sizing job runs once per sidecar generation
-          bloomCache.synchronized {
-            val prior = bloomCache.remove(name)
-            if (prior != null) bloomCacheBytes -= prior._2
-            bloomDisabledFps.add(memoKey)
-          }
-          return Map.empty
-        }
-      }
-      // memoize the ADMISSION DECISION, not just the full refusal: a
-      // later cache rebuild — eviction, restart probe — re-admits the
-      // same kinds without re-running the sizing aggregation or
-      // re-printing the warning (the fingerprint pins the sidecar
-      // generation; a new analyze or budget change invalidates the key)
-      bloomCache.synchronized {
-        if (bloomKindMemo.size > 1024) bloomKindMemo.clear()
-        bloomKindMemo.put(memoKey, (inc, incBytes))
-      }
-      (inc, incBytes)
-    }
-    val rows = spark.read.schema(bloomSidecarSchema)
-      .parquet(bloomPath(name).toString)
-      .select("rel", "column", "bloom")
-      .filter(kindCol.isin(included: _*))
-      .collect()
-      .filter(r => r.getString(1).nonEmpty && r.get(2) != null) // sentinels
-    val parsed = rows
-      .groupBy(_.getString(0))
-      .map { case (rel, rs) => rel -> rs.map { r =>
-        r.getString(1) -> org.apache.spark.util.sketch.BloomFilter.readFrom(
-          new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](2)))
-      }.toMap }
-    bloomCache.synchronized {
-      val prior = bloomCache.put(name, (fp, bytes, parsed))
-      bloomCacheBytes += bytes - (if (prior == null) 0L else prior._2)
-      val it = bloomCache.entrySet().iterator()
-      while (bloomCacheBytes > budget && it.hasNext) {
-        val eldest = it.next()
-        if (eldest.getKey != name) { // never evict the entry just added
-          bloomCacheBytes -= eldest.getValue._2
-          it.remove()
-        }
-      }
-    }
-    parsed
+          s"(${Seq(0, 1, 2).filterNot(excluded.contains).map(kindName)}) " +
+          "still prune. Raise the budget or re-analyze with fewer/smaller " +
+          "filters"),
+      included => sidecar
+        .select("rel", "column", "bloom")
+        .filter(kindCol.isin(included: _*))
+        .collect()
+        .filter(r => r.getString(1).nonEmpty && r.get(2) != null) // sentinels
+        .groupBy(_.getString(0))
+        .map { case (rel, rs) => rel -> rs.map { r =>
+          r.getString(1) -> org.apache.spark.util.sketch.BloomFilter.readFrom(
+            new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](2)))
+        }.toMap })
   }
 
-  /** Per-generation cache of the bloom sidecar's COVERAGE pairs
-    * (rel → set of covered column keys, sentinel-row rels kept with an
-    * empty set): the incremental analyzeBloom no-op then needs only
-    * driver set probes instead of scheduling its coverage joins every
-    * call — the same warm-path shape analyzeStats gets from the stats
-    * cache. Unlike [[cachedBlooms]] this holds NO filter bytes (null-
-    * bloom coverage rows count — coverage is about what was analyzed,
-    * not what holds a filter), so it stays resident even when the
-    * decoded-filter budget refuses the table. Budgeted in pairs via
-    * the shared LRU (spark.graft.bloomPairs.cacheMaxPairs, default 4M
-    * ≈ a few hundred MB of strings at the worst).
-    */
-  private val bloomPairsCache = new LruFileBudgetCache[
-    (String, Map[String, Set[String]])](
-    () => spark.conf.getOption("spark.graft.bloomPairs.cacheMaxPairs")
-      .map(_.toLong).getOrElse(4000000L),
-    _._2.valuesIterator.map(_.size.toLong.max(1L)).sum)
-
-  // fingerprints whose pair set exceeded the pairs budget: memoized so
-  // an over-budget table costs ONE sizing count per sidecar generation
-  // (cleared on growth — generations rotate, the set cannot leak
-  // unboundedly within a bounded cap)
-  private val bloomPairsRefusedFps =
-    scala.collection.mutable.Set.empty[String]
-
-  /** Empty result = UNKNOWN (unreadable sidecar, or genuinely no rows)
-    * — the caller must fall back to the distributed joins, never treat
-    * it as "nothing covered" (that would rebuild every filter). The
-    * collect is PRE-GATED by a distributed row count against the pairs
-    * budget (same discipline as [[cachedStats]]/[[cachedBlooms]]): a
-    * ~10⁶-file × N-col sidecar is refused BEFORE the O(files×cols)
-    * string set ever reaches the driver, not collected and then held
-    * over budget.
+  /** Empty result = UNKNOWN (unreadable sidecar, over-budget, or
+    * genuinely no rows) — the caller must fall back to the distributed
+    * joins, never treat it as "nothing covered" (that would rebuild
+    * every filter). Sized by a distributed row count against the pairs
+    * budget, so a ~10⁶-file × N-col sidecar is refused BEFORE the
+    * O(files×cols) string set ever reaches the driver.
     */
   private def cachedBloomPairs(name: String): Map[String, Set[String]] =
     try {
-      val fp = sidecarFingerprint(bloomPath(name))
-      val hit = bloomPairsCache.get(name)
-      if (hit != null && hit._1 == fp) return hit._2
-      val budget = spark.conf.getOption("spark.graft.bloomPairs.cacheMaxPairs")
-        .map(_.toLong).getOrElse(4000000L)
-      bloomPairsRefusedFps.synchronized {
-        if (bloomPairsRefusedFps.contains(s"$fp@$budget")) return Map.empty
-      }
-      val rows = spark.read.schema(bloomSidecarSchema)
+      def rows = spark.read.schema(bloomSidecarSchema)
         .parquet(bloomPath(name).toString)
         .select("rel", "column")
-      val est = rows.count()
-      if (est > budget) {
-        bloomPairsRefusedFps.synchronized {
-          if (bloomPairsRefusedFps.size > 1024) bloomPairsRefusedFps.clear()
-          bloomPairsRefusedFps.add(s"$fp@$budget")
-        }
-        return Map.empty // unknown → distributed-join coverage fallback
-      }
-      val pairs = rows.collect()
-        .groupBy(_.getString(0))
-        .map { case (rel, rs) =>
-          rel -> rs.iterator.map(_.getString(1)).filter(_.nonEmpty).toSet }
-      bloomPairsCache.put(name, (fp, pairs))
-      pairs
+      loadSidecar(name, bloomPath(name), bloomPairsCache, BloomPairsBudget,
+        Seq(0), Map.empty[String, Set[String]])(
+        () => Map(0 -> rows.count()),
+        (_, _) => (), // silent: coverage falls back to the distributed joins
+        _ => rows.collect()
+          .groupBy(_.getString(0))
+          .map { case (rel, rs) =>
+            rel -> rs.iterator.map(_.getString(1)).filter(_.nonEmpty).toSet })
     } catch { case _: Exception => Map.empty }
 
   /** Lazy skipping-metadata supplier for the pruning FileIndex:
@@ -1082,60 +1051,34 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
       .select("rel", "rows", "column", "dtype", "nulls",
         "vmin", "vmax", "vsum")
 
+  /** Zone-map stats per rel and column. Decoded size is estimated
+    * distributed: strings dominate (2 bytes/char on heap) plus ~8
+    * numeric bytes and ~64 of object/entry overhead per row.
+    */
   private def cachedStats(name: String)
       : Map[String, Map[String, Skipping.ColStats]] = {
-    val fp = sidecarFingerprint(statsPath(name))
-    statsCache.synchronized {
-      val hit = statsCache.get(name) // touches LRU order
-      if (hit != null && hit._1 == fp) return hit._3
-      if (statsDisabledFps.contains(s"$fp@${statsCacheBudgetBytes}"))
-        return Map.empty // memoized refusal (keyed on budget too)
-    }
-    val budget = statsCacheBudgetBytes
-    // decoded-size estimate computed DISTRIBUTED before any driver
-    // materialization: strings dominate (2 bytes/char on heap) plus
-    // ~8 numeric bytes and ~64 of object/entry overhead per row
     def sl(c: String): Column =
       coalesce(length(col(c)).cast("long"), lit(0L))
-    val bytes = Option(readStatsSidecar(name)
-        .agg(sum(lit(2L) * (sl("rel") + sl("column") + sl("dtype") +
-          sl("vmin") + sl("vmax") + sl("vsum") + lit(8L)) + lit(64L)))
-        .head.get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
-    if (bytes > budget) {
-      statsCache.synchronized {
-        val prior = statsCache.remove(name) // stale generation: drop
-        if (prior != null) statsCacheBytes -= prior._2
-        if (statsDisabledFps.add(s"$fp@$budget"))
-          System.err.println(s"[graft] stats sidecar for '$name' decodes " +
-            s"to ~$bytes bytes > budget $budget " +
-            "(spark.graft.statsCache.maxBytes): zone-map pruning DISABLED " +
-            "for this table — raise the budget or drop stats for " +
-            "low-value columns")
-      }
-      return Map.empty
-    }
-    val rows = readStatsSidecar(name).collect()
-    val parsed = rows
-      .groupBy(_.getString(0))
-      .map { case (rel, rs) => rel -> rs.map { r =>
-        r.getString(2) -> Skipping.ColStats(r.getString(3),
-          r.getLong(1), r.getLong(4), Option(r.getString(5)),
-          Option(r.getString(6)), Option(r.getString(7)))
-      }.toMap }
-    statsCache.synchronized {
-      val prior = statsCache.put(name, (fp, bytes, parsed))
-      statsCacheBytes += bytes - (if (prior == null) 0L else prior._2)
-      val it = statsCache.entrySet().iterator()
-      while (statsCacheBytes > budget && it.hasNext) {
-        val eldest = it.next()
-        if (eldest.getKey != name) {
-          statsCacheBytes -= eldest.getValue._2
-          it.remove()
-        }
-      }
-    }
-    parsed
+    val budget = statsCacheBudgetBytes
+    loadSidecar(name, statsPath(name), statsCache, budget, Seq(0),
+      Map.empty[String, Map[String, Skipping.ColStats]])(
+      () => Map(0 -> Option(readStatsSidecar(name)
+          .agg(sum(lit(2L) * (sl("rel") + sl("column") + sl("dtype") +
+            sl("vmin") + sl("vmax") + sl("vsum") + lit(8L)) + lit(64L)))
+          .head.get(0))
+        .map(_.asInstanceOf[Long]).getOrElse(0L)),
+      (_, perPart) => System.err.println(
+        s"[graft] stats sidecar for '$name' decodes to ~${perPart(0)} " +
+          s"bytes > budget $budget (spark.graft.statsCache.maxBytes): " +
+          "zone-map pruning DISABLED for this table — raise the budget or " +
+          "drop stats for low-value columns"),
+      _ => readStatsSidecar(name).collect()
+        .groupBy(_.getString(0))
+        .map { case (rel, rs) => rel -> rs.map { r =>
+          r.getString(2) -> Skipping.ColStats(r.getString(3),
+            r.getLong(1), r.getLong(4), Option(r.getString(5)),
+            Option(r.getString(6)), Option(r.getString(7)))
+        }.toMap })
   }
 
   /** Live data files under the table root — (root-relative path in the
@@ -1289,52 +1232,6 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
     spark.conf.getOption("spark.graft.manifest.enabled")
       .forall(_.toBoolean)
 
-  /** LRU cache whose residency is budgeted in FILES (the unit both
-    * manifest entries and scan-index statuses scale in): eviction
-    * drops least-recently-used TABLES until under budget, mirroring
-    * the bloom cache's byte budget. The most recent entry is always
-    * kept even if alone over budget — a single huge table re-parsing
-    * its manifest on every call would be strictly worse than holding
-    * it (the cache is an accelerator; eviction only costs a re-read).
-    */
-  private final class LruFileBudgetCache[V](budget: () => Long,
-                                            sizeOf: V => Long) {
-    // size is computed ONCE at put and stored beside the value: the
-    // eviction scan runs on every insert, and a sizeOf that walks the
-    // entry (e.g. a FileIndex materializing its path array) would turn
-    // each insert into O(resident tables × files) of allocation
-    private val map =
-      new java.util.LinkedHashMap[String, (V, Long)](16, 0.75f, true)
-    private var total = 0L
-    def get(name: String): V = map.synchronized {
-      val e = map.get(name)
-      if (e == null) null.asInstanceOf[V] else e._1
-    }
-    def put(name: String, v: V): Unit = map.synchronized {
-      val size = sizeOf(v)
-      val old = map.put(name, (v, size))
-      if (old != null) total -= old._2
-      total += size
-      val it = map.entrySet().iterator()
-      while (total > budget() && it.hasNext) {
-        val e = it.next()
-        if (e.getKey != name) { total -= e.getValue._2; it.remove() }
-      }
-    }
-    def remove(name: String): Unit = map.synchronized {
-      val old = map.remove(name)
-      if (old != null) total -= old._2
-    }
-    def removeIf(pred: String => Boolean): Unit = map.synchronized {
-      val it = map.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (pred(e.getKey)) { total -= e.getValue._2; it.remove() }
-      }
-    }
-    def resident: (Int, Long) = map.synchronized { (map.size(), total) }
-  }
-
   /** One cached manifest generation: parsed entries plus LAZY derived
     * views (rel vector, rel set) so the warm coverage math costs set
     * probes — not a fresh O(files) Path/URI materialization per call
@@ -1349,9 +1246,9 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
 
   // name -> generation; the header's nonce+count identify the
   // generation, so a cache probe costs one 1-line read, not a re-parse
-  // of 100k entries. Budgeted: ~100 B/entry means the default 2M-file
-  // budget bounds residency at ~200 MB across ALL tables.
-  private val manifestCache = new LruFileBudgetCache[ManifestGen](
+  // of 100k entries. Budgeted in files: ~100 B/entry means the default
+  // 2M-file budget bounds residency at ~200 MB across ALL tables.
+  private val manifestCache = new LruFileBudgetCache[String, ManifestGen](
     () => spark.conf.getOption("spark.graft.manifest.cacheMaxFiles")
       .map(_.toLong).getOrElse(2000000L),
     _.entries.size.toLong)
@@ -1384,25 +1281,17 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
   // The default keeps the r18 zero-fs-op warm path — correct whenever
   // history reads and drop/recreate flow through the same instance
   // (the single-warehouse-object pattern every verb here assumes).
-  // Values carry the slot's (length, mtime) captured at fill time.
-  private val histManifestCache = new LruFileBudgetCache[
+  // Values carry the slot's (length, mtime) captured at fill time; the
+  // entries cache is budgeted at 1M retained manifest entries.
+  private val histManifestCache = new LruFileBudgetCache[(String, Long),
     ((String, IndexedSeq[ManifestEntry]), Long, Long)](
-    () => spark.conf.getOption("spark.graft.manifest.histCacheMaxFiles")
-      .map(_.toLong).getOrElse(1000000L),
-    _._1._2.size.toLong.max(1L))
+    () => 1000000L, _._1._2.size.toLong.max(1L))
 
   // (rowPreserving, commit epoch) per retained generation — a few
   // dozen bytes per entry, bounded by count; values carry the slot's
   // (length, mtime) for the opt-in revalidation
-  private val histMetaCache =
-    new java.util.LinkedHashMap[(String, Long),
-        ((Boolean, Option[Long]), Long, Long)](
-      16, 0.75f, /* accessOrder = */ true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long),
-            ((Boolean, Option[Long]), Long, Long)])
-          : Boolean = size() > 16384
-    }
+  private val histMetaCache = new LruFileBudgetCache[(String, Long),
+    ((Boolean, Option[Long]), Long, Long)](() => 16384L, _ => 1L)
 
   private def histRevalidate: Boolean =
     spark.conf.getOption("spark.graft.manifest.histCacheRevalidate")
@@ -1420,25 +1309,19 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
       } catch { case _: Exception => false }
     }
 
-  private def histKey(name: String, gen: Long): String = name + "\u0000" + gen
-
   /** Count of PHYSICAL history-slot opens (test hook: the r18 spec pins
     * that a repeated CDC span walk opens zero slot files).
     */
   private[graft] val histSlotReads = new java.util.concurrent.atomic.AtomicLong
 
   private def invalidateHistCaches(name: String, gen: Long): Unit = {
-    histManifestCache.remove(histKey(name, gen))
-    histMetaCache.synchronized { histMetaCache.remove((name, gen)); () }
+    histManifestCache.remove((name, gen))
+    histMetaCache.remove((name, gen))
   }
 
   private def invalidateHistCaches(name: String): Unit = {
-    val prefix = name + "\u0000"
-    histManifestCache.removeIf(_.startsWith(prefix))
-    histMetaCache.synchronized {
-      val it = histMetaCache.keySet().iterator()
-      while (it.hasNext) { if (it.next()._1 == name) it.remove() }
-    }
+    histManifestCache.removeIf(_._1 == name)
+    histMetaCache.removeIf(_._1 == name)
   }
 
   // v3 header: "graft-manifest v3 <gen> <nonce> <n> <flags> <epochMs>".
@@ -1803,11 +1686,9 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
 
   // name -> (dir fingerprint, retired rel set, pending staged→final
   // pairs); rel-count budgeted like the other driver caches
-  private val tombstoneCache = new LruFileBudgetCache[
+  private val tombstoneCache = new LruFileBudgetCache[String,
     (String, Set[String], Vector[(String, String)])](
-    () => spark.conf.getOption("spark.graft.tombstones.cacheMaxRels")
-      .map(_.toLong).getOrElse(4000000L),
-    s => (s._2.size.toLong + s._3.size.toLong).max(1L))
+    () => 4000000L, s => (s._2.size.toLong + s._3.size.toLong).max(1L))
 
   /** One parsed event: (source generation, retired rels, pending
     * staged→final pairs). v1 events (r15) carry no pending section;
@@ -2372,7 +2253,7 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
   // manifest cache (FileStatus + path objects are heavier per entry,
   // so the default budget is lower); a cold rebuild costs one
   // driver-memory index build + footer-schema job, never a listing.
-  private val scanIndexCache = new LruFileBudgetCache[
+  private val scanIndexCache = new LruFileBudgetCache[String,
     (String, org.apache.spark.sql.execution.datasources.FileIndex,
       StructType)](
     () => spark.conf.getOption("spark.graft.manifest.scanCacheMaxFiles")
@@ -2439,7 +2320,7 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
       : Option[(String, IndexedSeq[ManifestEntry])] =
     try {
       val p = new Path(manifestHistDir(name), histFileName(gen))
-      val hit = histManifestCache.get(histKey(name, gen))
+      val hit = histManifestCache.get((name, gen))
       if (hit != null) {
         if (histHitFresh(p, hit._2, hit._3)) return Some(hit._1)
         invalidateHistCaches(name, gen) // out-of-band drift: re-read
@@ -2475,14 +2356,11 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
           // a retained slot that parsed as its generation's manifest is
           // immutable (the slot putIfAbsent is its only writer) — cache
           // both the entries and the header meta for the span walks
-          histManifestCache.put(histKey(name, gen),
+          histManifestCache.put((name, gen),
             (v, slotSt.getLen, slotSt.getModificationTime))
           parseManifestHeaderMeta(header).foreach { m =>
-            histMetaCache.synchronized {
-              histMetaCache.put((name, gen),
-                ((m._3, m._4), slotSt.getLen, slotSt.getModificationTime))
-              ()
-            }
+            histMetaCache.put((name, gen),
+              ((m._3, m._4), slotSt.getLen, slotSt.getModificationTime))
           }
           Some(v)
         }
@@ -2678,9 +2556,7 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
   private def histMeta(name: String, g: Long)
       : Option[(Boolean, Option[Long])] = {
     val p = new Path(manifestHistDir(name), histFileName(g))
-    val hit = histMetaCache.synchronized {
-      histMetaCache.get((name, g))
-    }
+    val hit = histMetaCache.get((name, g))
     if (hit != null) {
       if (histHitFresh(p, hit._2, hit._3)) return Some(hit._1)
       invalidateHistCaches(name, g) // out-of-band drift: re-read
@@ -2695,11 +2571,8 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
       finally in.close()
     meta0.map { m =>
       val v = (m._3, m._4)
-      histMetaCache.synchronized {
-        histMetaCache.put((name, g),
-          (v, slotSt.getLen, slotSt.getModificationTime))
-        ()
-      }
+      histMetaCache.put((name, g),
+        (v, slotSt.getLen, slotSt.getModificationTime))
       v
     }
   }

@@ -177,14 +177,8 @@ object GraftFileIndexBridge {
                     dataSchema: StructType,
                     wrap: FileIndex => FileIndex): DataFrame = {
     val session = spark.asInstanceOf[classic.SparkSession]
-    val verify = session.conf
-      .getOption("spark.graft.manifest.verifyLength")
-      .forall(_.toBoolean)
-    val format =
-      if (verify) new GraftVerifyingParquetFileFormat
-      else new ParquetFileFormat
     val rel = HadoopFsRelation(wrap(index), index.partitionSchema,
-      dataSchema.asNullable, None, format,
+      dataSchema.asNullable, None, new GraftVerifyingParquetFileFormat,
       Map("mergeSchema" -> "true"))(session)
     classic.Dataset.ofRows(session, LogicalRelation(rel))
   }
@@ -203,8 +197,7 @@ object GraftFileIndexBridge {
   * replacement: length drift throws with a heal hint instead of
   * serving an empty result. Cost: one executor-side `getFileStatus`
   * per split, next to the footer read the task pays anyway —
-  * distributed, never a driver wall. Disable (for measurement only)
-  * with `spark.graft.manifest.verifyLength=false`.
+  * distributed, never a driver wall.
   */
 final class GraftVerifyingParquetFileFormat extends ParquetFileFormat {
   override def buildReaderWithPartitionValues(
@@ -222,28 +215,19 @@ final class GraftVerifyingParquetFileFormat extends ParquetFileFormat {
       hadoopConf)
     val confBc = GraftVerifyingParquetFileFormat.cachedConf(sparkSession,
       hadoopConf)
-    val cacheMs = sparkSession.conf
-      .getOption("spark.graft.manifest.verifyCacheMs")
-      .map(_.toLong).getOrElse(0L)
     file => {
+      // a missing file already fails loudly inside the reader; only the
+      // same-name replacement (stat succeeds, length drifted) needs us
       val p = file.toPath
-      if (!GraftVerifyingParquetFileFormat
-        .recentlyVerified(p, file.fileSize, cacheMs)) {
-        // a missing file already fails loudly inside the reader; only
-        // the same-name replacement (stat succeeds, length drifted)
-        // needs us
-        val live = p.getFileSystem(confBc.value.value).getFileStatus(p)
-        if (live.getLen != file.fileSize)
-          throw new java.io.IOException(
-            s"graft manifest length drift on $p: planned from " +
-              s"${file.fileSize} bytes but the live file has " +
-              s"${live.getLen} — the file was replaced out-of-band after " +
-              "the manifest was written. Run refreshManifest(table) to " +
-              "re-derive the inventory (reads never silently serve a " +
-              "stale-length file)")
-        GraftVerifyingParquetFileFormat.markVerified(p, file.fileSize,
-          cacheMs)
-      }
+      val live = p.getFileSystem(confBc.value.value).getFileStatus(p)
+      if (live.getLen != file.fileSize)
+        throw new java.io.IOException(
+          s"graft manifest length drift on $p: planned from " +
+            s"${file.fileSize} bytes but the live file has " +
+            s"${live.getLen} — the file was replaced out-of-band after " +
+            "the manifest was written. Run refreshManifest(table) to " +
+            "re-derive the inventory (reads never silently serve a " +
+            "stale-length file)")
       base(file)
     }
   }
@@ -271,22 +255,12 @@ object GraftVerifyingParquetFileFormat {
   // the executor copies (tasks re-fetch from the driver on next use)
   // and drops the strong reference; ContextCleaner destroys the
   // broadcast for good once no scan references it.
-  private val confCacheMaxEntries = 64
-  private val confCache = new java.util.LinkedHashMap[
+  private val confCache = new graft.warehouse.LruFileBudgetCache[
     (org.apache.spark.SparkContext, Long),
     org.apache.spark.broadcast.Broadcast[
       org.apache.spark.util.SerializableConfiguration]](
-    16, 0.75f, /* accessOrder = */ true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[(org.apache.spark.SparkContext, Long),
-          org.apache.spark.broadcast.Broadcast[
-            org.apache.spark.util.SerializableConfiguration]]): Boolean =
-      if (size() > confCacheMaxEntries) {
-        try e.getValue.unpersist(blocking = false)
-        catch { case _: Exception => () }
-        true
-      } else false
-  }
+    () => 64L, _ => 1L,
+    b => try b.unpersist(blocking = false) catch { case _: Exception => () })
 
   private def confFingerprint(
       conf: org.apache.hadoop.conf.Configuration): Long = {
@@ -302,19 +276,18 @@ object GraftVerifyingParquetFileFormat {
   }
 
   /** Test/ops hook: broadcasts resident in the conf cache. */
-  def confCacheResident: Int = confCache.synchronized { confCache.size() }
+  def confCacheResident: Int = confCache.resident._1
 
   /** Public for the r18 LRU-bound spec (the broadcast cache is
     * otherwise reached only through scan construction).
     */
   def cachedConf(spark: SparkSession,
-                              hadoopConf: org.apache.hadoop.conf.Configuration)
+                 hadoopConf: org.apache.hadoop.conf.Configuration)
       : org.apache.spark.broadcast.Broadcast[
         org.apache.spark.util.SerializableConfiguration] = {
     val sc = spark.sparkContext
     confCache.synchronized {
-      val it = confCache.keySet().iterator()
-      while (it.hasNext) { if (it.next()._1.isStopped) it.remove() }
+      confCache.removeIf(_._1.isStopped)
       val key = (sc, confFingerprint(hadoopConf))
       val hit = confCache.get(key) // touches LRU order
       if (hit != null) hit
@@ -326,61 +299,6 @@ object GraftVerifyingParquetFileFormat {
       }
     }
   }
-
-  // OPT-IN executor-side verification amortization
-  // (`spark.graft.manifest.verifyCacheMs`, default 0 = verify every
-  // split): on object stores at 10⁶ small files the unconditional
-  // per-split getFileStatus doubles metadata ops per scan; a TTL'd
-  // (path, planned length) cache verifies each file once per executor
-  // per window instead. Deliberately OFF by default — within the TTL
-  // a re-read of a file replaced out-of-band would trust the cached
-  // verdict, so the default keeps the strict per-scan loud-drift
-  // guarantee and deployments opt in where the stat cost dominates.
-  // Size-bounded LRU (r17, judge finding): the previous full-wipe
-  // bound (`clear()` past 262k entries) self-destructed mid-scan on
-  // executors reading >262k distinct files — a re-stat storm exactly
-  // at the scale the cache exists for; LRU eviction keeps the hot
-  // working set instead.
-  val verifyCacheMaxEntries = 262144
-  private val verifiedAt =
-    new java.util.LinkedHashMap[String, java.lang.Long](
-      16, 0.75f, /* accessOrder = */ true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, java.lang.Long]): Boolean =
-        size() > verifyCacheMaxEntries
-    }
-
-  private def key(p: org.apache.hadoop.fs.Path, len: Long): String =
-    s"$p@$len"
-
-  private[sql] def recentlyVerified(p: org.apache.hadoop.fs.Path,
-                                    len: Long, cacheMs: Long): Boolean = {
-    if (cacheMs <= 0L) return false
-    val t = verifiedAt.synchronized { verifiedAt.get(key(p, len)) }
-    t != null && System.currentTimeMillis() - t < cacheMs
-  }
-
-  private[sql] def markVerified(p: org.apache.hadoop.fs.Path, len: Long,
-                                cacheMs: Long): Unit =
-    if (cacheMs > 0L) {
-      val k = key(p, len)
-      val now = java.lang.Long.valueOf(System.currentTimeMillis())
-      verifiedAt.synchronized { verifiedAt.put(k, now); () }
-    }
-
-  /** Test hook: (resident entries, true iff `probe` is resident). */
-  def verifyCacheProbe(probe: String): (Int, Boolean) =
-    verifiedAt.synchronized { (verifiedAt.size(), verifiedAt.containsKey(probe)) }
-
-  /** Test hook: mark a synthetic key (exercises eviction order). */
-  def verifyCacheMark(k: String): Unit =
-    verifiedAt.synchronized {
-      verifiedAt.put(k, java.lang.Long.valueOf(System.currentTimeMillis())); ()
-    }
-
-  /** Test hook: touch a key (refreshes LRU recency); true if present. */
-  def verifyCacheTouch(k: String): Boolean =
-    verifiedAt.synchronized { verifiedAt.get(k) != null }
 }
 
 /** Data-skipping `FileIndex`: delegates to `base` and drops, from

@@ -217,6 +217,24 @@ class DedupSpec extends SparkSpec {
     assert(sims((1L, 3L)) < 0.3)
   }
 
+  test("minhash: unrelated documents neither agree nor cluster") {
+    // the modulus must reduce a·x + b: a family that never reduces is
+    // increasing in x, so every minimum comes from one shingle and two
+    // documents agree on all hashes whenever that shingle coincides
+    val rnd = new scala.util.Random(7L)
+    def word() = (1 to 4 + rnd.nextInt(6)).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString
+    val d = docs((1L to 300L).map(i => i -> Seq.fill(60)(word()).mkString(" ")): _*)
+    val sigs = d.select(col("doc_id"),
+      Dedup.minhashSignature(col("text")).as("sig"))
+    val maxSim = sigs.as("a").join(sigs.as("b"), col("a.doc_id") < col("b.doc_id"))
+      .agg(max(Dedup.signatureSimilarity(col("a.sig"), col("b.sig"))))
+      .head.getDouble(0)
+    assert(maxSim < 0.5, s"unrelated documents agree on $maxSim of their hashes")
+    val comps = Dedup.nearDupComponents(d, col("doc_id"), col("text"))
+    try assert(comps.count() == 0L, "unrelated documents clustered")
+    finally Dedup.releaseComponents(comps)
+  }
+
   test("simhash: identical text -> same signature; near-dup within small hamming") {
     val d = docs(1L -> base, 2L -> base, 3L -> base.replace("lazy", "sleepy"),
       4L -> "entirely different words everywhere in this one about many other topics")

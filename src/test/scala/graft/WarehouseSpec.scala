@@ -34,6 +34,38 @@ class WarehouseSpec extends SparkSpec {
     assert(wh.drop("t1").isRight)
   }
 
+  test("a fractional batch into an INTEGER column is refused by name, " +
+    "not truncated; an integer batch into a FLOAT column still loads") {
+    val wh = freshWh()
+    assert(wh.loadJson("w", Seq("""{"x":1}""")) == Right(1L))
+    wh.loadJson("w", Seq("""{"x":1.5}""")) match {
+      case Left(RowsInvalid(msg)) =>
+        assert(msg.contains("'x'") && msg.contains("DOUBLE") &&
+          msg.contains("BIGINT"), msg)
+      case other => fail(s"narrowing load was not refused: $other")
+    }
+    val rows = wh.get("w").map(_.collect().toSeq).getOrElse(Nil)
+    assert(rows.map(_.getLong(0)) == Seq(1L))
+    assert(wh.loadJson("f", Seq("""{"y":1.5}""")) == Right(1L))
+    assert(wh.loadJson("f", Seq("""{"y":2}""")) == Right(1L))
+    assert(wh.get("f").map(_.collect().map(_.getDouble(0)).toSet) ==
+      Right(Set(1.5, 2.0)))
+  }
+
+  test("keys that sanitise to one name keep the last value at the first " +
+    "key's position") {
+    val wh = freshWh()
+    assert(wh.loadJson("k", Seq("""{"a-b":1,"a_b":2}""")).isRight)
+    val df = wh.get("k").fold(e => fail(e.toString), identity)
+    assert(df.columns.toSeq == Seq("a_b"))
+    assert(df.collect().map(_.getLong(0)).toSeq == Seq(2L))
+    assert(wh.loadJson("p", Seq("""{"a-b":1,"z":0,"a_b":2}""")).isRight)
+    val p = wh.get("p").fold(e => fail(e.toString), identity)
+    assert(p.columns.toSeq == Seq("a_b", "z"))
+    assert(p.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+      Seq((2L, 0L)))
+  }
+
   test("rebuild reuses the pre-drop schema (bigquery/__init__.py:183-188)") {
     val wh = freshWh()
     val schema = Seq(FieldRepr("x", "FLOAT", "NULLABLE"))
