@@ -50,11 +50,9 @@ object Dedup {
 
   // ---------- MinHash + LSH ----------
 
-  // 2^31 - 1 (Mersenne prime), the portable family's modulus: with
-  // a < 2^20 and x < 2^31 the product a·x + b stays below 2^52, so a
-  // larger modulus would never reduce and every hash would be increasing
-  // in x — all minima would come from one shingle
-  private val P = 2147483647L
+  // The family's modulus lives in one place, `MinHashFromHashes.P`
+  // (graft/functions/SketchExpressions.scala): 2^31 - 1, small enough
+  // that (a·x + b) with a < 2^20 and x < 2^31 always reduces.
 
   /** Deterministic hash-family parameters (aᵢ odd, < 2^20 so aᵢ·x never
     * overflows a Long for x < 2^31).

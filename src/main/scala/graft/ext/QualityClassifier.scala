@@ -99,8 +99,14 @@ object QualityClassifier {
             buckets: Int = 4096): Model = {
     require(steps >= 1, s"steps ($steps) must be >= 1")
     val spark = docs.sparkSession
-    val n = labels.agg(count(lit(1))).head().getLong(0)
+    val counts = labels.agg(count(lit(1)), countDistinct(col("doc_id")))
+      .head()
+    val n = counts.getLong(0)
     require(n > 0L, "train: empty label set")
+    // a duplicated doc_id would join twice below and silently double
+    // that document's margin
+    require(counts.getLong(1) == n, s"train: labels must hold one row " +
+      s"per doc_id — ${n - counts.getLong(1)} duplicate label row(s)")
     val scale = lr / n.toDouble
     // tokenization + hashing is the expensive scan: cache the compact
     // (doc_id, feat, tf) table, then the training base derived from it

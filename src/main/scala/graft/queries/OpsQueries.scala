@@ -645,11 +645,12 @@ object OpsQueries {
     }),
 
     // ---- live-file manifest (r14): every scan below is SERVED from the
-    // `_graft_manifest` sidecar (zero directory listing on the warm
-    // path); DML verbs rewrite it write-through. The gate asserts
-    // manifest-served ≡ listing-walk row counts at every step, then
-    // hash-compares the final DML result against DuckDB computing the
-    // same mutations declaratively.
+    // committed `_graft_manifest` generation (zero directory listing on
+    // the warm path); DML verbs commit a new one write-through. The gate
+    // checks the served row count at every step against a second
+    // derivation — the same mutations applied directly to the source
+    // `orders` frame — then hash-compares the final DML result against
+    // DuckDB computing the same mutations declaratively.
     "op_manifest_dml" -> ((s: SparkSession, dir: String) => {
       val wh = tmpWarehouse(s)
       val t = "op_manifest_t"
@@ -657,31 +658,32 @@ object OpsQueries {
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_orderpriority"))
       def ok[A](e: Either[graft.warehouse.WarehouseError, A]): A =
         e.fold(err => throw new RuntimeException(err.message), identity)
-      def countBoth(step: String): Long = {
+      def countBoth(step: String, expected: DataFrame): Long = {
         val served = ok(wh.get(t)).count()
-        s.conf.set("spark.graft.manifest.enabled", "false")
-        val listed = try ok(wh.get(t)).count()
-          finally s.conf.unset("spark.graft.manifest.enabled")
-        require(served == listed,
-          s"manifest-served scan drifts from listing after $step: " +
-            s"$served vs $listed")
+        val derived = expected.count()
+        require(served == derived,
+          s"manifest-served scan drifts from the source-side derivation " +
+            s"after $step: $served vs $derived")
         served
       }
+      val deleted = col("o_orderkey") % 5 === 0
+      val appended = orders.filter(deleted &&
+        col("o_orderpriority") === "1-URGENT")
       ok(wh.load(t, orders.repartition(6)))
-      countBoth("load")
-      ok(wh.deleteWhere(t, col("o_orderkey") % 5 === 0))
-      countBoth("deleteWhere")
-      ok(wh.load(t, orders.filter(col("o_orderkey") % 5 === 0 &&
-        col("o_orderpriority") === "1-URGENT")))
-      countBoth("append")
+      countBoth("load", orders)
+      ok(wh.deleteWhere(t, deleted))
+      val survivors = orders.filter(deleted.isNull || !deleted)
+      countBoth("deleteWhere", survivors)
+      ok(wh.load(t, appended))
+      countBoth("append", survivors.unionByName(appended))
       ok(wh.compact(t, 4, Seq("o_orderkey")))
-      countBoth("compact")
+      countBoth("compact", survivors.unionByName(appended))
       ok(wh.get(t)).orderBy("o_orderkey", "o_orderstatus", "o_orderpriority")
     }),
 
     // ---- generation snapshots (r15): removal verbs retire files IN
-    // PLACE behind tombstone events; getAsOf rebuilds any retained
-    // generation's scan from its manifest-history copy — a
+    // PLACE (the new generation stops naming them); getAsOf rebuilds
+    // any retained generation's scan from its manifest-history copy — a
     // metadata-only plan with zero directory listing. The gate
     // snapshots, mutates twice (CoW DELETE + UPDATE), asserts the
     // current state drifted, then outputs the AS-OF read — which must

@@ -77,8 +77,11 @@ object StreamQueries {
     scratch.foreach { p =>
       try {
         import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
+        // the walk holds an open directory stream until closed
+        val walk = java.nio.file.Files.walk(p)
+        try walk.iterator().asScala.toSeq.reverse
           .foreach(f => { java.nio.file.Files.deleteIfExists(f); () })
+        finally walk.close()
       } catch { case _: Exception => () }
     }
   }

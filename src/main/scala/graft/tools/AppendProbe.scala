@@ -4,10 +4,10 @@ import graft.Tables
 import graft.warehouse.SparkWarehouse
 import org.apache.spark.sql.functions._
 
-/** Micro-probe for the r15 staged-append cost at GATE scale: times the
-  * pieces of one small `load` (the write job, the stage+move, the
-  * manifest publish) so a fixed per-verb regression is attributable to
-  * a specific step instead of argued from whole-gate medians.
+/** Micro-probe for the append cost at GATE scale: times the pieces of
+  * one small `load` (the write job, the move, the manifest commit) so a
+  * fixed per-verb regression is attributable to a specific step instead
+  * of argued from whole-gate medians.
   */
 object AppendProbe {
   private def timed[A](thunk: () => A): Double = {
@@ -24,7 +24,7 @@ object AppendProbe {
     val data = spark.range(0, 50000)
       .select(col("id"), concat(lit("n"), col("id")).as("name"))
 
-    // A: full load verb (staged append, r15 path)
+    // A: full load verb
     val whA = new SparkWarehouse(spark,
       java.nio.file.Files.createTempDirectory("probe-a").toString)
     unwrap(whA.load("t", data)) // warm: create + schema + JIT
@@ -46,17 +46,6 @@ object AppendProbe {
       java.nio.file.Files.createTempDirectory("probe-d").toString)
     unwrap(whD.update("t", data))
     val updTimes = (1 to 8).map(_ => timed(() => unwrap(whD.update("t", data))))
-
-    // E: raw append + refreshManifest (the r14-shaped bookkeeping)
-    val whE = new SparkWarehouse(spark,
-      java.nio.file.Files.createTempDirectory("probe-e").toString)
-    unwrap(whE.update("t", data))
-    val prepared = graft.ingest.Ingest.prepare(data)
-    val rawPlusRefresh = (1 to 8).map(_ => timed { () =>
-      prepared.write.mode("append").parquet(s"${whE.warehouseDir}/t")
-      unwrap(whE.refreshManifest("t"))
-      whE.registerView("t")
-    })
 
     // F: deleteWhere at gate scale, with a Spark-job counter — if the
     // r15 swap path schedules an extra job vs r14, this names it
@@ -85,8 +74,7 @@ object AppendProbe {
 
     def fmt(xs: Seq[Double]) = xs.sorted.apply(xs.size / 2)
     println(f"[probe] delete_where_median=${fmt(delTimes)}%.3f")
-    println(f"[probe] update_append_median=${fmt(updTimes)}%.3f " +
-      f"raw_plus_refresh_median=${fmt(rawPlusRefresh)}%.3f")
+    println(f"[probe] update_append_median=${fmt(updTimes)}%.3f")
     println(f"[probe] load_verb_median=${fmt(loadTimes)}%.3f " +
       f"raw_append_median=${fmt(rawTimes)}%.3f " +
       f"staged_write_median=${fmt(stagedTimes)}%.3f")

@@ -100,9 +100,13 @@ object CoverageSweep {
           lit(null).cast("binary").as("bloom"))
         .repartition(8)
         .write.mode("overwrite").parquet(s"$dir/t/_graft_bloom")
-      // the counterfeit copies were written OUT-OF-BAND: heal the
-      // live-file manifest once (not measured) so the measured no-op
-      // exercises the r14 manifest-served path over all N files
+      // the counterfeit copies were written OUT-OF-BAND: drop the
+      // table's commit history so the one-shot import takes every file
+      // in (not measured) and the measured no-op exercises the
+      // manifest-served path over all N files
+      org.apache.commons.io.FileUtils.deleteDirectory(
+        tdir.resolve("_graft_manifest_hist").toFile)
+      java.nio.file.Files.delete(tdir.resolve("_graft_manifest"))
       unwrap(wh.refreshManifest("t"))
 
       for (analyzer <- Seq("stats", "bloom")) {
@@ -129,19 +133,8 @@ object CoverageSweep {
         val times = measured.map(_._1).sorted
         val allocs = measured.map(_._2).sorted
         val h1 = usedHeap()
-        // listing baseline: same call with the manifest read-disabled
-        // (writes stay on, so re-enabling can never trust a stale
-        // manifest) — the r13 recursive-walk cost the manifest removes
-        val listingTimes =
-          try {
-            spark.conf.set("spark.graft.manifest.enabled", "false")
-            call() // warm the listing path's FS caches
-            (1 to 3).map(_ => timed(() => call())._1).sorted
-          } finally spark.conf.unset("spark.graft.manifest.enabled")
         record(s"""{"analyzer":"$analyzer","n_files":$nFiles,""" +
           s""""noop_sec":${times(1)},"raw_sec":[${times.mkString(",")}],""" +
-          s""""listing_noop_sec":${listingTimes(1)},""" +
-          s""""raw_listing_sec":[${listingTimes.mkString(",")}],""" +
           s""""driver_thread_alloc_mb":${allocs(1)},""" +
           s""""raw_alloc_mb":[${allocs.mkString(",")}],""" +
           s""""retained_heap_delta_mb":${(h1 - h0) / 1048576.0}}""")
@@ -185,22 +178,13 @@ object CoverageSweep {
 
       // ---- get() plan-construction leg (r14): the manifest also
       // serves the SCAN PLAN — warm frame construction is pure driver
-      // memory (cached generation + cached scan index), vs the listing
-      // path's recursive walk + per-call merged-footer inference.
+      // memory (cached generation + cached scan index).
       def planBuild(): Double = timed(() => unwrap(wh.get("t")))._1
       planBuild() // warm manifest generation + scan index + schema
       val mfPlan = (1 to 3).map(_ => planBuild()).sorted
-      val listPlan =
-        try {
-          spark.conf.set("spark.graft.manifest.enabled", "false")
-          planBuild() // warm Spark's shared FileStatusCache
-          (1 to 3).map(_ => planBuild()).sorted
-        } finally spark.conf.unset("spark.graft.manifest.enabled")
       record(s"""{"analyzer":"get_plan","n_files":$nFiles,""" +
         s""""manifest_sec":${mfPlan(1)},""" +
-        s""""raw_manifest_sec":[${mfPlan.mkString(",")}],""" +
-        s""""listing_sec":${listPlan(1)},""" +
-        s""""raw_listing_sec":[${listPlan.mkString(",")}]}""")
+        s""""raw_manifest_sec":[${mfPlan.mkString(",")}]}""")
 
       // ---- dynamic-file-pruning plan leg (r15, judge #6): joinPruned's
       // driver cost — the BETWEEN hull + IN-list may-match evaluation

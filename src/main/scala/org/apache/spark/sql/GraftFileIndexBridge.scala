@@ -225,9 +225,10 @@ final class GraftVerifyingParquetFileFormat extends ParquetFileFormat {
           s"graft manifest length drift on $p: planned from " +
             s"${file.fileSize} bytes but the live file has " +
             s"${live.getLen} — the file was replaced out-of-band after " +
-            "the manifest was written. Run refreshManifest(table) to " +
-            "re-derive the inventory (reads never silently serve a " +
-            "stale-length file)")
+            "its generation was committed. Restore the original file: " +
+            "the committed generation, not the directory, defines the " +
+            "table, so a replaced file is never adopted in place (reads " +
+            "never silently serve a stale-length file)")
       base(file)
     }
   }

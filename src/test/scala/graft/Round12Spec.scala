@@ -403,10 +403,11 @@ class Round12Spec extends SparkSpec {
       .toDF("id", "v").repartition(4)))
     unwrap(wh.analyzeStats("t"))
     unwrap(wh.analyzeBloom("t", Seq("id")))
-    // drop one NON-EMPTY data file out from under the table (simulates
-    // a partition-pruned delete's dead rel); the stats sidecar tells us
-    // which files actually hold rows — part-file row distribution is
-    // not guaranteed uniform
+    // commit a generation without one NON-EMPTY data file (the shape a
+    // partition-pruned delete commits: the rel leaves the generation,
+    // its file stays until vacuum); the stats sidecar tells us which
+    // files actually hold rows — part-file row distribution is not
+    // guaranteed uniform
     val root = new org.apache.hadoop.fs.Path(s"$dir/t")
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val statsRows = spark.read.parquet(s"$root/_graft_stats")
@@ -415,12 +416,17 @@ class Round12Spec extends SparkSpec {
     val victimRel = statsRows.collectFirst {
       case (rel, n) if n > 0 => rel }.get
     val victimRows = statsRows(victimRel)
-    fs.delete(new org.apache.hadoop.fs.Path(root, victimRel), false)
-    // the delete above is OUT-OF-BAND (no warehouse verb ran): under
-    // the r14 live-file manifest contract the manifest must be healed
-    // before the table is touched again — a REAL pruned delete patches
-    // it write-through (pinned in Round14Spec)
-    unwrap(wh.refreshManifest("t"))
+    val manifest = {
+      val in = fs.open(new org.apache.hadoop.fs.Path(root, "_graft_manifest"))
+      try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
+        .split("\n").toSeq.filter(_.nonEmpty)
+      finally in.close()
+    }
+    val kept = manifest.tail.map { l =>
+      val p = l.split(" ", 3)
+      graft.warehouse.ManifestEntry(p(2), p(0).toLong, p(1).toLong)
+    }.filterNot(_.rel == victimRel)
+    assert(wh.writeManifestCas("t", kept, Some(manifest.head)))
     def relsOf(sub: String): Set[String] =
       spark.read.parquet(s"$root/$sub").select("rel").distinct()
         .collect().map(_.getString(0)).toSet

@@ -3,13 +3,14 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Round-14 pins, following the r13 judge's list — the live-file
-  * manifest: every mutation verb keeps `_graft_manifest` ≡ an
-  * authoritative directory walk (rel set AND exact byte lengths), the
-  * scan plan is genuinely SERVED from it (out-of-band files are
-  * invisible until refreshManifest — the same commit semantics every
+  * manifest: after every mutation verb (and a vacuum of the files it
+  * retired) `_graft_manifest` ≡ an authoritative directory walk (rel set
+  * AND exact byte lengths), the scan plan is genuinely SERVED from it
+  * (out-of-band files are invisible — the same commit semantics every
   * manifest-backed table format has), pruning/MoR/evolution behave
-  * identically to the listing path, and the steady-state no-op
-  * incremental analyze schedules ZERO Spark jobs with warm caches.
+  * identically to a plain Spark read of the directory, and the
+  * steady-state no-op incremental analyze schedules ZERO Spark jobs
+  * with warm caches.
   */
 class Round14Spec extends SparkSpec {
 
@@ -65,39 +66,20 @@ class Round14Spec extends SparkSpec {
         else if (st.isDirectory) walk(st.getPath)
         else if (n.endsWith(".parquet")) Seq(st) else Nil
       }
-    // retire-in-place (r15): replaced files stay on disk behind
-    // `_graft_tombstones` events until vacuumRetired — the
-    // authoritative LIVE inventory is the walk MINUS the retired rels
-    val tombDir = new org.apache.hadoop.fs.Path(root, "_graft_tombstones")
-    val retired: Set[String] =
-      if (!fs.exists(tombDir)) Set.empty
-      else fs.listStatus(tombDir).toSeq
-        .filter(st => !st.isDirectory && !st.getPath.getName.startsWith("."))
-        .flatMap { st =>
-          val in = fs.open(st.getPath)
-          val text = try new String(
-            org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-          finally in.close()
-          val lines = text.split("\n").toSeq.filter(_.nonEmpty)
-          // v1: every tail line is a retired rel. v2 (r16 redo
-          // records): the first nRetire tail lines are retired rels,
-          // the rest are staged→final pending pairs (not retirements)
-          if (lines.head.startsWith("graft-tombstones v2 ")) {
-            val nRetire = lines.head.split(" ")(3).toInt
-            lines.tail.take(nRetire)
-          } else {
-            assert(lines.head.startsWith("graft-tombstones v1 "), lines.head)
-            lines.tail
-          }
-        }.toSet
     walk(root).map { st =>
       val uri = fs.makeQualified(st.getPath).toUri.toString
       (uri.substring(prefix.length + 1), st.getLen)
-    }.filterNot(e => retired.contains(e._1)).toSet
+    }.toSet
   }
 
+  /** Removal verbs leave the files they replace on disk for snapshot
+    * readers; once vacuumRetired has reclaimed them, the directory
+    * holds exactly the committed generation.
+    */
   private def assertManifestEqListing(wh: graft.warehouse.SparkWarehouse,
                                       t: String, where: String): Unit = {
+    unwrap(wh.vacuumRetired(t, java.time.Duration.ZERO,
+      java.time.Instant.now().plusSeconds(5)))
     val m = manifestOf(wh, t)
     val w = walkOf(wh, t)
     assert(m == w, s"manifest ≠ listing after $where: " +
@@ -154,6 +136,9 @@ class Round14Spec extends SparkSpec {
 
   test("the scan is genuinely manifest-SERVED: out-of-band files are " +
     "invisible until refreshManifest heals (listing path sees them)") {
+    // refreshManifest is the one-shot IMPORT of a directory without a
+    // commit: while the table has one it refuses, and a table whose
+    // commit is gone fails loudly until the import
     val sps = spark; import sps.implicits._
     val wh = tmpWh("graft-r14-served")
     unwrap(wh.load("t", (0L until 100L).map(i => (i, i * 2))
@@ -171,12 +156,21 @@ class Round14Spec extends SparkSpec {
     // manifest-served: the foreign file is NOT visible (uncommitted)
     assert(unwrap(wh.get("t")).count() == 100L,
       "manifest-served scan read a file outside the manifest")
-    // the listing fallback DOES see it — proves the difference is the
-    // manifest, not the data
-    spark.conf.set("spark.graft.manifest.enabled", "false")
-    try assert(unwrap(wh.get("t")).count() == 150L)
-    finally spark.conf.unset("spark.graft.manifest.enabled")
-    // heal → visible everywhere
+    // a plain Spark read of the directory DOES see it — proves the
+    // difference is the manifest, not the data
+    assert(spark.read.parquet(root).count() == 150L)
+    // the committed generation is the only truth: no re-derivation
+    val refused = wh.refreshManifest("t")
+    assert(refused.isLeft && refused.left.exists(
+      _.message.contains("already has a committed")), s"$refused")
+    assert(unwrap(wh.get("t")).count() == 100L)
+    // without its commit the table fails LOUDLY, naming itself...
+    fs.delete(new org.apache.hadoop.fs.Path(s"$root/_graft_manifest"), false)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$root/_graft_manifest_hist"), true)
+    val lost = wh.get("t")
+    assert(lost.isLeft && lost.left.exists(e => e.message.contains("'t'") &&
+      e.message.contains("no readable")), s"$lost")
+    // ...until the import commits the directory → visible everywhere
     assert(unwrap(wh.refreshManifest("t")) >= 2L)
     assert(unwrap(wh.get("t")).count() == 150L)
     assertManifestEqListing(wh, "t", "refreshManifest")
@@ -185,6 +179,8 @@ class Round14Spec extends SparkSpec {
   test("manifest-served scans keep schema evolution, file pruning, " +
     "MoR tombstones, and partition-type inference identical to the " +
     "listing path") {
+    // the listing path here is a plain Spark read of the directory,
+    // which holds exactly the live files before any rewrite
     val sps = spark; import sps.implicits._
     val wh = tmpWh("graft-r14-parity")
     unwrap(wh.load("t", (0L until 1000L).map(i => (i, s"u$i"))
@@ -192,15 +188,14 @@ class Round14Spec extends SparkSpec {
     // additive evolution: a second file generation carries an extra col
     unwrap(wh.load("t", (1000L until 1100L).map(i => (i, s"u$i", i % 5))
       .toDF("id", "name", "grp").coalesce(1)))
-    def snapshot(): (Seq[(String, String)], Long, Long) = {
-      val df = unwrap(wh.get("t"))
+    def snapshot(df: org.apache.spark.sql.DataFrame)
+        : (Seq[(String, String)], Long, Long) =
       (df.schema.map(f => (f.name, f.dataType.simpleString)),
         df.count(), df.where(col("grp").isNotNull).count())
-    }
-    val servedT = snapshot()
-    spark.conf.set("spark.graft.manifest.enabled", "false")
-    val listedT = try snapshot()
-      finally spark.conf.unset("spark.graft.manifest.enabled")
+    def listed(t: String) = graft.sources.Sources.parquetMerged(spark,
+      s"${wh.warehouseDir}/$t")
+    val servedT = snapshot(unwrap(wh.get("t")))
+    val listedT = snapshot(listed("t"))
     assert(servedT == listedT,
       s"evolution parity broke: $servedT vs $listedT")
 
@@ -218,13 +213,12 @@ class Round14Spec extends SparkSpec {
     // partition-type inference parity (int-like directory names)
     val pd = Seq((1L, 7), (2L, 8), (3L, 7)).toDF("id", "k")
     unwrap(wh.createPartitioned("pt", pd, Seq("k")))
-    def ptSchema(): Seq[(String, String)] =
-      unwrap(wh.get("pt")).schema.map(f => (f.name, f.dataType.simpleString))
-    val served = ptSchema()
-    spark.conf.set("spark.graft.manifest.enabled", "false")
-    val listed = try ptSchema()
-      finally spark.conf.unset("spark.graft.manifest.enabled")
-    assert(served == listed, s"partition schema parity: $served vs $listed")
+    def ptSchema(df: org.apache.spark.sql.DataFrame): Seq[(String, String)] =
+      df.schema.map(f => (f.name, f.dataType.simpleString))
+    val served = ptSchema(unwrap(wh.get("pt")))
+    val listedPt = ptSchema(listed("pt"))
+    assert(served == listedPt,
+      s"partition schema parity: $served vs $listedPt")
     assert(unwrap(wh.get("pt")).where(col("k") === 7).count() == 2L)
   }
 
@@ -617,8 +611,9 @@ class Round14Spec extends SparkSpec {
     assert(unwrap(wh.statsAggFast("sink", Seq("id"))).head.getLong(0) == 100L)
   }
 
-  test("a corrupt or truncated manifest falls back to the listing " +
-    "walk, never fails or misreads") {
+  test("a corrupt or truncated manifest is rebuilt from the newest " +
+    "committed slot, never misreads; with no readable slot the read " +
+    "fails loudly until the import") {
     val sps = spark; import sps.implicits._
     val wh = tmpWh("graft-r14-corrupt")
     unwrap(wh.load("t", (0L until 200L).map(i => (i, i + 1))
@@ -639,10 +634,26 @@ class Round14Spec extends SparkSpec {
     out2.close()
     assert(unwrap(wh.get("t")).count() == 200L, "foreign file was trusted")
     assert(unwrap(wh.analyzeStats("t")) == 2L + 1L,
-      "listing fallback missed files (2 data + 1 empty create-file)")
-    // any mutation heals the manifest
+      "slot rebuild missed files (2 data + 1 empty create-file)")
+    // the rebuilt snapshot is the slot's bytes again
+    assert(manifestOf(wh, "t").size == 3)
+    // any mutation builds on the rebuilt generation
     unwrap(wh.compact("t", 1))
     assertManifestEqListing(wh, "t", "compact after corruption")
     assert(unwrap(wh.get("t")).count() == 200L)
+    // no readable slot AND a torn snapshot: a loud failure naming the
+    // table, never a listing-derived guess
+    val wh2 = new graft.warehouse.SparkWarehouse(spark, wh.warehouseDir)
+    fs.delete(new org.apache.hadoop.fs.Path(
+      s"${wh.warehouseDir}/t/_graft_manifest_hist"), true)
+    val out3 = fs.create(mp, true)
+    out3.write("something else entirely".getBytes("UTF-8"))
+    out3.close()
+    val lost = wh2.get("t")
+    assert(lost.isLeft && lost.left.exists(e => e.message.contains("'t'") &&
+      e.message.contains("last readable slot")), s"$lost")
+    // the one-shot import commits the directory as it stands
+    assert(unwrap(wh2.refreshManifest("t")) >= 1L)
+    assert(unwrap(wh2.get("t")).count() == 200L)
   }
 }

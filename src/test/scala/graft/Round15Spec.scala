@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   * (2) concurrent manifest rebuilds are CAS-guarded on the header
   * nonce, so an interleaved list-then-swap can never publish a
   * manifest missing another writer's committed files; (3) removal
-  * verbs RETIRE files in place (tombstones) instead of deleting them,
-  * which dissolves the loud-removal crash window, keeps a reader
+  * verbs RETIRE files in place (the new generation stops naming them)
+  * instead of deleting them, which dissolves the loud-removal crash
+  * window, keeps a reader
   * holding an old plan alive across a concurrent compact, and gives
   * [[graft.warehouse.SparkWarehouse.getAsOf]] generation snapshots
   * until [[graft.warehouse.SparkWarehouse.vacuumRetired]] reclaims
@@ -73,7 +74,11 @@ class Round15Spec extends SparkSpec {
     assert(allMessages(ex).contains("length drift"),
       s"expected a loud length-drift error, got: ${allMessages(ex)}")
 
-    // the documented heal re-derives truth from the directory
+    // the committed generation is never re-derived in place...
+    assert(wh.refreshManifest("t").isLeft)
+    // ...but a directory without a commit is imported as it stands
+    fs.delete(new org.apache.hadoop.fs.Path(dir, "_graft_manifest"), false)
+    fs.delete(new org.apache.hadoop.fs.Path(dir, "_graft_manifest_hist"), true)
     unwrap(wh.refreshManifest("t"))
     assert(unwrap(wh.get("t")).count() == 2000L - victimRows + 3L)
   }
@@ -162,15 +167,9 @@ class Round15Spec extends SparkSpec {
     assert(unwrap(wh.generations(t)).containsSlice(
       Seq(gLoad, gAppend, gDelete)))
 
-    // the listing fallback is tombstone-aware: manifest disabled reads
-    // the same live rows, not the retired files
-    spark.conf.set("spark.graft.manifest.enabled", "false")
-    try assert(unwrap(wh.get(t)).count() == afterDelete,
-      "listing fallback resurrected retired rows")
-    finally spark.conf.unset("spark.graft.manifest.enabled")
-
-    // a heal from the directory never resurrects retired rows
-    unwrap(wh.refreshManifest(t))
+    // the retired files are still on disk, yet nothing re-derives the
+    // table from the directory: the import is refused, rows unchanged
+    assert(wh.refreshManifest(t).isLeft)
     assert(unwrap(wh.get(t)).count() == afterDelete)
 
     // generation diff is metadata-only and names the rewrite
@@ -190,9 +189,8 @@ class Round15Spec extends SparkSpec {
     assert(countParquet(wh, t) == live)
     assert(unwrap(wh.get(t)).count() == afterDelete)
     assert(wh.getAsOf(t, gLoad).isLeft, "vacuumed generation still served")
-    spark.conf.set("spark.graft.manifest.enabled", "false")
-    try assert(unwrap(wh.get(t)).count() == afterDelete)
-    finally spark.conf.unset("spark.graft.manifest.enabled")
+    // the directory now holds exactly the live rows
+    assert(spark.read.parquet(s"${wh.warehouseDir}/$t").count() == afterDelete)
   }
 
   test("auto-compact bounds a stream-fed table's live file count " +
@@ -243,28 +241,33 @@ class Round15Spec extends SparkSpec {
       .toDF("id", "seg", "v")
     unwrap(wh.createPartitioned(t, data, Seq("seg")))
     assert(unwrap(wh.get(t)).count() == 500L)
-    // pruned DELETE of the trailing-% partition: tombstones must carry
-    // the same URI rendering the listing walk produces, or the heal
-    // below resurrects the deleted rows
+    val g0 = wh.currentGeneration(t).get
+    // pruned DELETE of the trailing-% partition: the committed
+    // generation must drop exactly that directory's files in the same
+    // URI rendering the scan produces, or the deleted rows resurrect
     unwrap(wh.deleteWhere(t, col("seg") === "100%"))
     assert(unwrap(wh.get(t)).count() == 400L)
     assert(unwrap(wh.get(t)).filter(col("seg") === "100%").count() == 0L)
-    // the listing fallback agrees (tombstone-aware)
-    spark.conf.set("spark.graft.manifest.enabled", "false")
-    try assert(unwrap(wh.get(t)).count() == 400L)
-    finally spark.conf.unset("spark.graft.manifest.enabled")
-    // heal never resurrects
-    unwrap(wh.refreshManifest(t))
+    // history and CDC agree: the old generation still has the rows,
+    // and the change feed is exactly the dropped partition's deletes
+    val g1 = wh.currentGeneration(t).get
+    assert(unwrap(wh.getAsOf(t, g0)).count() == 500L)
+    val feed = unwrap(wh.changesBetween(t, g0, g1))
+    assert(feed.count() == 100L)
+    assert(feed.filter(col("change_type") === "delete" &&
+      col("seg") === "100%").count() == 100L)
+    // the directory is never re-derived (nothing resurrects)
+    assert(wh.refreshManifest(t).isLeft)
     assert(unwrap(wh.get(t)).count() == 400L)
     // a second pruned DELETE on the slash-escaped partition
     unwrap(wh.deleteWhere(t, col("seg") === "x/y"))
     assert(unwrap(wh.get(t)).count() == 300L)
     // vacuum reclaims both partitions' files and directories; the
-    // remaining table is intact, heal still agrees
+    // remaining table is intact, and the directory holds exactly it
     unwrap(wh.vacuumRetired(t, java.time.Duration.ZERO,
       java.time.Instant.now().plusSeconds(5)))
-    unwrap(wh.refreshManifest(t))
     assert(unwrap(wh.get(t)).count() == 300L)
+    assert(spark.read.parquet(s"${wh.warehouseDir}/$t").count() == 300L)
     assert(unwrap(wh.get(t)).select("seg").distinct().collect()
       .map(_.getString(0)).toSet == Set("a b", "k=v", "plain"))
   }
@@ -287,11 +290,10 @@ class Round15Spec extends SparkSpec {
     }
     threads.foreach(_.start()); threads.foreach(_.join(120000))
     assert(errs.isEmpty, s"concurrent loads failed: ${errs.peek()}")
-    // every committed file is on disk; after one heal the manifest
-    // reflects all of them (the CAS turns interleavings into retries —
-    // the residual check-to-rename window is why single-writer remains
-    // the formal contract, and why the DETERMINISTIC pin is post-heal)
-    unwrap(wh.refreshManifest(t))
+    // the committed generation already names every writer's files (the
+    // CAS turns interleavings into retries); the heal has nothing to do
+    // and is refused
+    assert(wh.refreshManifest(t).isLeft)
     assert(unwrap(wh.get(t)).count() == 10L + 8L * 100L)
     assert(unwrap(wh.get(t)).agg(countDistinct(col("id"))).head.getLong(0)
       == 10L + 8L * 100L)
@@ -300,34 +302,31 @@ class Round15Spec extends SparkSpec {
   test("tombstone events fold past the threshold: event-file count " +
     "stays bounded across 100 mutations, deletions never resurrect, " +
     "vacuum still reclaims everything") {
+    // (no event files exist since the committed generation became the
+    // only record of what is live; the 100 mutations now pin that
+    // retirement needs no side record to stay correct and reclaimable)
     val wh = tmpWh("r15-fold")
     val t = "t"
-    spark.conf.set("spark.graft.tombstones.foldThreshold", "8")
-    try {
-      unwrap(wh.load(t, spark.range(0, 2000).toDF("id")))
-      // 100 alternating CoW mutations, each retiring the previous
-      // generation's files into a fresh tombstone event
-      (0 until 100).foreach { i =>
-        if (i % 2 == 0) unwrap(wh.deleteWhere(t, col("id") === (i * 7L)))
-        else unwrap(wh.compact(t, 2))
-      }
-      val events = new java.io.File(s"${wh.warehouseDir}/$t/_graft_tombstones")
-        .listFiles().count(f => !f.getName.startsWith("."))
-      assert(events <= 9, s"tombstone events unbounded: $events")
-      val expected = 2000L - (0 until 100 by 2).count(_ * 7 < 2000)
-      assert(unwrap(wh.get(t)).count() == expected)
-      // the folded set still subtracts on heals and listing fallbacks
-      unwrap(wh.refreshManifest(t))
-      assert(unwrap(wh.get(t)).count() == expected)
-      spark.conf.set("spark.graft.manifest.enabled", "false")
-      try assert(unwrap(wh.get(t)).count() == expected)
-      finally spark.conf.unset("spark.graft.manifest.enabled")
-      // vacuum reclaims every retired file; the live table is intact
-      unwrap(wh.vacuumRetired(t, java.time.Duration.ZERO,
-        java.time.Instant.now().plusSeconds(5)))
-      assert(countParquet(wh, t) == unwrap(wh.get(t)).inputFiles.length)
-      assert(unwrap(wh.get(t)).count() == expected)
-    } finally spark.conf.unset("spark.graft.tombstones.foldThreshold")
+    unwrap(wh.load(t, spark.range(0, 2000).toDF("id")))
+    // 100 alternating CoW mutations, each retiring the previous
+    // generation's files
+    (0 until 100).foreach { i =>
+      if (i % 2 == 0) unwrap(wh.deleteWhere(t, col("id") === (i * 7L)))
+      else unwrap(wh.compact(t, 2))
+    }
+    val expected = 2000L - (0 until 100 by 2).count(_ * 7 < 2000)
+    assert(unwrap(wh.get(t)).count() == expected)
+    // nothing re-derives the table from the directory of retired files
+    assert(wh.refreshManifest(t).isLeft)
+    assert(unwrap(wh.get(t)).count() == expected)
+    // vacuum reclaims every retired file — also those whose retiring
+    // generation history retention already pruned; the live table is
+    // intact and the directory holds exactly its rows
+    unwrap(wh.vacuumRetired(t, java.time.Duration.ZERO,
+      java.time.Instant.now().plusSeconds(5)))
+    assert(countParquet(wh, t) == unwrap(wh.get(t)).inputFiles.length)
+    assert(unwrap(wh.get(t)).count() == expected)
+    assert(spark.read.parquet(s"${wh.warehouseDir}/$t").count() == expected)
   }
 
   test("getAsOf serves each generation's OWN schema through additive " +

@@ -9,17 +9,15 @@ import org.apache.spark.sql.functions._
   *      claimed by a create-exclusive file before the snapshot rename,
   *      so concurrent appends rebase-and-retry and every committed row
   *      is visible immediately — NO heal (the r15 pin was post-heal);
-  *  (2) rewrites stage their replacement files DOT-PREFIXED and commit
-  *      the whole file-set transition with ONE atomic redo record
-  *      (retired rels + staged→final renames), dissolving the
-  *      advisor's crash window in which a listing heal published BOTH
-  *      generations (duplicated rows) — pinned here by injecting a
-  *      simulated crash at each protocol point and asserting every
-  *      view stays consistent;
-  *  (3) vacuumRetired never deletes a tombstone event while any of its
-  *      rels survives (advisor: a failed delete must not let the next
-  *      heal resurrect committed deletes), and never reclaims a rel
-  *      the live manifest still references;
+  *  (2) a rewrite's replacement files become visible only through the
+  *      one generation commit, so no crash window can serve BOTH
+  *      generations (the advisor's duplicated-row window) — pinned
+  *      here by injecting a simulated crash with the files at their
+  *      final names and no commit, and asserting every view stays
+  *      consistent;
+  *  (3) vacuumRetired never reclaims a rel the live manifest or a
+  *      retained generation still references, nor an orphan inside the
+  *      rewrite-lock TTL;
   *  (4) time-based generation retention
   *      (`spark.graft.manifest.retainAge`) keeps streaming time travel
   *      alive where the count-based default burns through history in
@@ -38,23 +36,35 @@ class Round16Spec extends SparkSpec {
   private def hfs(p: String) = new org.apache.hadoop.fs.Path(p)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def listingCount(wh: graft.warehouse.SparkWarehouse,
-                           t: String): Long = {
-    spark.conf.set("spark.graft.manifest.enabled", "false")
-    try unwrap(wh.get(t)).count()
-    finally spark.conf.unset("spark.graft.manifest.enabled")
+  private def parquetOnDisk(wh: graft.warehouse.SparkWarehouse,
+                            t: String): Int =
+    new java.io.File(s"${wh.warehouseDir}/$t").listFiles()
+      .count(_.getName.endsWith(".parquet"))
+
+  /** Rows a plain Spark read of the directory sees once vacuumRetired
+    * has reclaimed every retired file: the committed generation alone.
+    */
+  private def vacuumedDirRows(wh: graft.warehouse.SparkWarehouse,
+                              t: String): Long = {
+    unwrap(wh.vacuumRetired(t, java.time.Duration.ZERO,
+      java.time.Instant.now().plusSeconds(5)))
+    spark.read.parquet(s"${wh.warehouseDir}/$t").count()
   }
 
-  test("crash between staging and the redo record: no view ever " +
-    "serves both generations (the advisor-r15 duplicate-row window), " +
-    "vacuum sweeps the orphaned staged files, the verb then succeeds") {
-    val wh = tmpWh("r16-crash-staged")
-    val fs = hfs(wh.warehouseDir)
+  test("crash at rewrite:files-final (files at their final names, no " +
+    "slot committed): get and every retained getAsOf serve the old " +
+    "generation, vacuum keeps the orphans inside the rewrite-lock TTL " +
+    "and deletes them past it, the retried verb then succeeds") {
+    val wh = tmpWh("r16-crash-files-final")
     val t = "t"
     unwrap(wh.load(t, spark.range(0, 2000).toDF("id").repartition(4)))
     assert(unwrap(wh.get(t)).count() == 2000L)
+    val before = unwrap(wh.generations(t))
+      .map(g => g -> unwrap(wh.getAsOf(t, g)).count()).toMap
+    val gBefore = wh.currentGeneration(t).get
+    val filesBefore = parquetOnDisk(wh, t)
 
-    wh.testFaultPoint = "rewrite:staged"
+    wh.testFaultPoint = "rewrite:files-final"
     val crashed = intercept[Throwable] {
       wh.deleteWhere(t, col("id") < 500)
     }
@@ -62,72 +72,42 @@ class Round16Spec extends SparkSpec {
     assert(crashed.isInstanceOf[
       graft.warehouse.SparkWarehouse.SimulatedCrash])
 
-    // staged replacement files ARE on disk, dot-prefixed
-    val dir = new org.apache.hadoop.fs.Path(s"${wh.warehouseDir}/$t")
-    val stagedCount = fs.listStatus(dir)
-      .count(_.getPath.getName.startsWith(".graftstage-"))
-    assert(stagedCount > 0, "expected staged files from the crashed rewrite")
-    // every view serves the OLD generation — r15's ordering served
-    // 2000 via the manifest but 2000 + survivors via a listing heal
-    assert(unwrap(wh.get(t)).count() == 2000L)
-    assert(listingCount(wh, t) == 2000L)
-    unwrap(wh.refreshManifest(t))
-    assert(unwrap(wh.get(t)).count() == 2000L)
+    // the rewrite's files ARE in the table directory, at final names
+    val orphans = parquetOnDisk(wh, t) - filesBefore
+    assert(orphans > 0, "expected the crashed rewrite's moved files")
+    // ...but no generation names them: every view serves the OLD one
+    def oldEverywhere(where: String): Unit = {
+      assert(wh.currentGeneration(t).contains(gBefore), where)
+      assert(unwrap(wh.get(t)).count() == 2000L, where)
+      before.foreach { case (g, n) =>
+        assert(unwrap(wh.getAsOf(t, g)).count() == n, s"$where: gen $g")
+      }
+      assert(unwrap(wh.changesBetween(t, before.keys.min, gBefore))
+        .filter(col("change_type") === "delete").count() == 0L, where)
+    }
+    oldEverywhere("after the crash")
+    // a fresh instance (process restart) sees the same
+    val wh2 = new graft.warehouse.SparkWarehouse(spark, wh.warehouseDir)
+    assert(unwrap(wh2.get(t)).count() == 2000L)
 
-    // r17 (advisor): a vacuum inside the rewrite-lock TTL must NOT
-    // reclaim the staged files — they could belong to an in-flight
-    // rewrite whose redo record is not yet durable
+    // a vacuum inside the rewrite-lock TTL must NOT reclaim them — they
+    // could belong to an in-flight rewrite that has not committed yet
     unwrap(wh.vacuumRetired(t, java.time.Duration.ZERO,
       java.time.Instant.now().plusSeconds(5)))
-    assert(fs.listStatus(dir)
-      .count(_.getPath.getName.startsWith(".graftstage-")) == stagedCount,
-      "staged files younger than the rewrite-lock TTL were reclaimed")
-    // past the TTL, vacuum reclaims the orphans (referenced by nothing)
-    spark.conf.set("spark.graft.rewriteLock.ttlMs", "0")
-    try unwrap(wh.vacuumRetired(t, java.time.Duration.ZERO,
-      java.time.Instant.now().plusSeconds(5)))
-    finally spark.conf.unset("spark.graft.rewriteLock.ttlMs")
-    assert(fs.listStatus(dir)
-      .count(_.getPath.getName.startsWith(".graftstage-")) == 0)
+    assert(parquetOnDisk(wh, t) == filesBefore + orphans,
+      "orphans younger than the rewrite-lock TTL were reclaimed")
+    oldEverywhere("after an in-TTL vacuum")
+    // past the TTL (default 30 min), vacuum reclaims the orphans
+    unwrap(wh.vacuumRetired(t, java.time.Duration.ZERO,
+      java.time.Instant.now().plus(java.time.Duration.ofMinutes(31))))
+    assert(parquetOnDisk(wh, t) == filesBefore)
     assert(unwrap(wh.get(t)).count() == 2000L)
 
     // the retried verb completes normally
     unwrap(wh.deleteWhere(t, col("id") < 500))
     assert(unwrap(wh.get(t)).count() == 1500L)
-    assert(listingCount(wh, t) == 1500L)
-  }
-
-  test("crash after the redo record (before and after the renames): " +
-    "manifest readers keep the old snapshot, listing heals roll the " +
-    "renames forward to the new generation — never duplicates, never " +
-    "empty") {
-    for ((point, label) <- Seq("rewrite:event" -> "no renames",
-      "rewrite:renamed" -> "renamed, manifest old")) {
-      val wh = tmpWh("r16-crash-event")
-      val t = "t"
-      unwrap(wh.load(t, spark.range(0, 2000).toDF("id").repartition(4)))
-
-      wh.testFaultPoint = point
-      val crashed = intercept[Throwable] {
-        wh.deleteWhere(t, col("id") < 500)
-      }
-      wh.testFaultPoint = null
-      assert(crashed.isInstanceOf[
-        graft.warehouse.SparkWarehouse.SimulatedCrash], s"at $label")
-
-      // the manifest still names the old generation; its files were
-      // never moved (retire-in-place) — a consistent old snapshot
-      assert(unwrap(wh.get(t)).count() == 2000L, s"manifest view at $label")
-      // the listing path consults the redo record: retired rels
-      // subtracted, staged files rolled forward — a consistent NEW
-      // generation (in r15 the no-renames state would have read as
-      // old-minus-nothing = duplicates, or new-files-invisible = loss)
-      assert(listingCount(wh, t) == 1500L, s"listing view at $label")
-      // heal publishes the rolled-forward truth
-      unwrap(wh.refreshManifest(t))
-      assert(unwrap(wh.get(t)).count() == 1500L, s"healed view at $label")
-      assert(unwrap(wh.get(t)).agg(min(col("id"))).head.getLong(0) == 500L)
-    }
+    assert(unwrap(wh.get(t)).agg(min(col("id"))).head.getLong(0) == 500L)
+    assert(vacuumedDirRows(wh, t) == 1500L)
   }
 
   test("two concurrent loaders: every committed row visible " +
@@ -186,7 +166,8 @@ class Round16Spec extends SparkSpec {
         s"round $round: appended rows lost")
       assert(unwrap(wh.get(t)).filter(col("id") < 1000).count() == 0L,
         s"round $round: deleted rows survived")
-      assert(listingCount(wh, t) == 1100L, s"round $round: listing drifts")
+      assert(vacuumedDirRows(wh, t) == 1100L,
+        s"round $round: the directory drifts from the manifest")
     }
   }
 
@@ -220,41 +201,96 @@ class Round16Spec extends SparkSpec {
     }
     assert(survivors.agg(countDistinct(col("id"))).head.getLong(0) == n,
       "duplicated rows")
-    assert(listingCount(wh, t) == n, "listing drifts from manifest")
+    assert(vacuumedDirRows(wh, t) == n, "the directory drifts from the manifest")
   }
 
-  test("vacuumRetired preserves a tombstone event while any rel " +
-    "survives, and never reclaims a rel the live manifest still " +
-    "references") {
+  test("vacuumRetired never reclaims a rel the live manifest or a " +
+    "retained generation still references, nor an orphan inside the " +
+    "rewrite-lock TTL") {
     val wh = tmpWh("r16-vacuum-keep")
     val fs = hfs(wh.warehouseDir)
     val t = "t"
     unwrap(wh.load(t, spark.range(0, 1000).toDF("id").repartition(2)))
+    val gLoad = wh.currentGeneration(t).get
     val dir = new org.apache.hadoop.fs.Path(s"${wh.warehouseDir}/$t")
-    val live = fs.listStatus(dir)
+    val loaded = fs.listStatus(dir)
       .filter(_.getPath.getName.endsWith(".parquet")).map(_.getPath)
-    assert(live.length >= 2)
-    // an out-of-band actor tombstones a LIVE rel (still referenced by
-    // the current manifest) plus a rel that never existed
-    val tombDir = new org.apache.hadoop.fs.Path(dir, "_graft_tombstones")
-    fs.mkdirs(tombDir)
-    val victimRel = live.head.getName
-    val content = s"graft-tombstones v1 0 2\n$victimRel\nghost-file.parquet\n"
-    val evt = new org.apache.hadoop.fs.Path(tombDir, "1000-evilevent")
-    val out = fs.create(evt, true)
-    out.write(content.getBytes("UTF-8")); out.close()
+    assert(loaded.length >= 2)
+    unwrap(wh.compact(t, 1))
+    // an orphan no generation names, written just now
+    val orphan = new org.apache.hadoop.fs.Path(dir, "part-orphan.parquet")
+    org.apache.hadoop.fs.FileUtil.copy(fs, loaded.head, fs, orphan, false,
+      spark.sparkContext.hadoopConfiguration)
 
-    unwrap(wh.vacuumRetired(t, java.time.Duration.ZERO,
-      java.time.Instant.now().plusSeconds(5)))
-    // the live-referenced file was NOT reclaimed...
-    assert(fs.exists(live.head), "vacuum reclaimed a manifest-live file")
-    // ...so the event survives (rewritten to the remaining rel) —
-    // deleting it would lose the tombstone (advisor r15)
-    val events = fs.listStatus(tombDir)
-      .filter(st => !st.getPath.getName.startsWith("."))
-    assert(events.nonEmpty, "event deleted while its rel survived")
-    // manifest-served reads are intact
+    // a cutoff an hour back: the load generation was superseded after
+    // it, so its (retired) files stay readable through getAsOf
+    assert(unwrap(wh.vacuumRetired(t, java.time.Duration.ofHours(1),
+      java.time.Instant.now())) == 0L)
+    assert(loaded.forall(fs.exists), "vacuum reclaimed a retained rel")
+    assert(unwrap(wh.getAsOf(t, gLoad)).count() == 1000L)
+    assert(fs.exists(orphan), "vacuum reclaimed an orphan before its cutoff")
+
+    // a cutoff past the compact: the load generation's files are retired
+    // and reclaimed, the live file stays, the fresh orphan stays
+    val live = unwrap(wh.get(t)).inputFiles
+    assert(unwrap(wh.vacuumRetired(t, java.time.Duration.ZERO,
+      java.time.Instant.now().plusSeconds(5))) == loaded.length.toLong)
+    assert(!loaded.exists(fs.exists))
+    assert(live.forall(f => fs.exists(new org.apache.hadoop.fs.Path(f))),
+      "vacuum reclaimed a manifest-live file")
+    assert(fs.exists(orphan), "vacuum reclaimed an orphan inside the TTL")
+    assert(wh.getAsOf(t, gLoad).isLeft, "vacuumed generation still served")
     assert(unwrap(wh.get(t)).count() == 1000L)
+  }
+
+  test("a commit that lands while vacuumRetired runs keeps its files: " +
+    "an append and a rewrite whose files were final before the vacuum " +
+    "started and which commit after it read the generations") {
+    // one retained generation: the oldest retained commit is then the
+    // newest, so a file written before it passes the age test
+    spark.conf.set("spark.graft.manifest.retainGenerations", "1")
+    try {
+      Seq("append", "rewrite").foreach { kind =>
+        val wh = tmpWh(s"r16-vacuum-race-$kind")
+        val t = "t"
+        unwrap(wh.load(t, spark.range(0, 1000).toDF("id").repartition(2)))
+        val filesFinal = new java.util.concurrent.CountDownLatch(1)
+        val release = new java.util.concurrent.CountDownLatch(1)
+        val writerThread = Thread.currentThread
+        // the in-flight writer parks with its files at their final
+        // names and nothing committed
+        wh.testHook = point =>
+          if (point == s"$kind:files-final" &&
+            Thread.currentThread != writerThread) {
+            filesFinal.countDown()
+            release.await()
+          }
+        val verb = new java.util.concurrent.FutureTask[Any](() =>
+          if (kind == "append") wh.load(t, spark.range(1000, 1100).toDF("id"))
+          else wh.deleteWhere(t, col("id") < 100))
+        val inFlight = new Thread(verb)
+        inFlight.start()
+        assert(filesFinal.await(120, java.util.concurrent.TimeUnit.SECONDS))
+        // another append commits after the in-flight writer's files
+        unwrap(wh.load(t, spark.range(5000, 5010).toDF("id")))
+        // the in-flight writer commits (and drops its lock or staging
+        // dir) after vacuum read the generations
+        wh.testHook = point =>
+          if (point == "vacuum:generations-read") {
+            release.countDown()
+            inFlight.join()
+          }
+        unwrap(wh.vacuumRetired(t, java.time.Duration.ZERO,
+          java.time.Instant.now()))
+        wh.testHook = null
+        unwrap(verb.get().asInstanceOf[Either[
+          graft.warehouse.WarehouseError, Any]])
+        val expected = if (kind == "append") 1110L else 910L
+        assert(unwrap(wh.get(t)).count() == expected,
+          s"$kind: vacuum deleted a file of a generation committed while it ran")
+        assert(vacuumedDirRows(wh, t) == expected, kind)
+      }
+    } finally spark.conf.unset("spark.graft.manifest.retainGenerations")
   }
 
   test("time-based retention: retainAge keeps every one of 50 " +
@@ -437,6 +473,9 @@ class Round16Spec extends SparkSpec {
     "CoW update, compact, compactSmall, heal, vacuum) keep the table " +
     "equal to a driver-side model, with manifest and listing views " +
     "agreeing throughout") {
+    // "heal" is the refused re-derivation; the listing view is a plain
+    // Spark read of the directory after vacuumRetired reclaimed the
+    // retired files
     val sps = spark; import sps.implicits._
     val wh = tmpWh("r16-torture")
     val t = "t"
@@ -460,10 +499,8 @@ class Round16Spec extends SparkSpec {
         s"$step: table drifted from model (got ${got.size} rows, " +
           s"want ${want.size}; first diff: " +
           s"${got.diff(want).take(3)} vs ${want.diff(got).take(3)})")
-      spark.conf.set("spark.graft.manifest.enabled", "false")
-      val listed = try unwrap(wh.get(t)).count()
-        finally spark.conf.unset("spark.graft.manifest.enabled")
-      assert(listed == want.size.toLong, s"$step: listing drifts")
+      assert(vacuumedDirRows(wh, t) == want.size.toLong,
+        s"$step: listing drifts")
     }
     (1 to 40).foreach { step =>
       rnd.nextInt(7) match {
@@ -483,7 +520,7 @@ class Round16Spec extends SparkSpec {
         case 5 =>
           unwrap(wh.compactSmall(t, 64L << 20, 64L << 20)); ()
         case 6 =>
-          unwrap(wh.refreshManifest(t))
+          assert(wh.refreshManifest(t).isLeft)
           unwrap(wh.vacuumRetired(t, java.time.Duration.ZERO,
             java.time.Instant.now().plusSeconds(5)))
       }

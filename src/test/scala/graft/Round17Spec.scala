@@ -49,16 +49,17 @@ class DelegatingCommitProvider17 extends graft.warehouse.CommitPrimitive {
   *  (3) changesBetweenKeyed is fully lazy and single-pass: one action
   *      runs one job with ONE pair of bag-difference aggregates, and
   *      the duplicate-key guard raises from INSIDE the plan;
-  *  (4) redo-record heals are generation-aware: a superseded record
-  *      (another rewrite of the same base committed) is rolled BACK —
-  *      its staged files can never go live next to their replacement's
-  *      (advisor #1) — while a committed-but-unpublished rewrite is
-  *      rolled FORWARD and republished before any append can rebase
-  *      onto the stale manifest and resurrect deleted rows (advisor #3);
+  *  (4) crash recovery is generation-aware: a crashed rewrite that
+  *      never committed leaves orphans that can never go live next to
+  *      a later rewrite of the same base (advisor #1), while a
+  *      committed-but-unpublished rewrite is healed FORWARD before any
+  *      append can rebase onto the stale snapshot and resurrect deleted
+  *      rows (advisor #3), and a missing snapshot is rebuilt from the
+  *      committed slot;
   *  (5) commit wall-time lives INSIDE the manifest header, so
   *      timestamp time travel survives mtime-rewriting copies;
-  *  (6) vacuum never reclaims staged files younger than the rewrite-
-  *      lock TTL (an in-flight rewrite's staging, advisor #5).
+  *  (6) vacuum never reclaims uncommitted files younger than the
+  *      rewrite-lock TTL (an in-flight rewrite's output, advisor #5).
   */
 class Round17Spec extends SparkSpec {
 
@@ -71,11 +72,22 @@ class Round17Spec extends SparkSpec {
   private def hfs(p: String) = new org.apache.hadoop.fs.Path(p)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def listingCount(wh: graft.warehouse.SparkWarehouse,
-                           t: String): Long = {
-    spark.conf.set("spark.graft.manifest.enabled", "false")
-    try unwrap(wh.get(t)).count()
-    finally spark.conf.unset("spark.graft.manifest.enabled")
+  /** Rows a plain Spark read of the directory sees once vacuumRetired
+    * (past the rewrite-lock TTL) has reclaimed every retired file and
+    * orphan: the committed generation alone.
+    */
+  private def vacuumedDirRows(wh: graft.warehouse.SparkWarehouse,
+                              t: String): Long = {
+    unwrap(wh.vacuumRetired(t, java.time.Duration.ZERO,
+      java.time.Instant.now().plus(java.time.Duration.ofMinutes(31))))
+    spark.read.parquet(s"${wh.warehouseDir}/$t").count()
+  }
+
+  private def crashed(point: String)(verb: => Any): Unit = {
+    val e = intercept[Throwable] { verb }
+    assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(10)
+      .exists(_.isInstanceOf[graft.warehouse.SparkWarehouse.SimulatedCrash]),
+      s"expected a simulated crash at $point, got $e")
   }
 
   private def msgChain(e: Throwable): String =
@@ -120,7 +132,6 @@ class Round17Spec extends SparkSpec {
     val df = (0L until 2000L).map(i => (i, i % 4)).toDF("id", "p")
       .repartition(4, col("p"))
     unwrap(wh.createPartitioned(t, df, Seq("p")))
-    unwrap(wh.refreshManifest(t))
     val g1 = wh.currentGeneration(t).get
     val fs = hfs(wh.warehouseDir)
     val p0Files = {
@@ -252,47 +263,34 @@ class Round17Spec extends SparkSpec {
   test("advisor #1: a SUPERSEDED redo record (a second rewrite of the " +
     "same base committed) is rolled BACK — no view ever serves both " +
     "rewrites' outputs") {
+    // the superseded rewrite is one that crashed with its files at
+    // their final names and no slot committed; the roll-back is the
+    // vacuum of its orphans
     val wh = tmpWh("r17-superseded")
-    val fs = hfs(wh.warehouseDir)
     val t = "t"
     unwrap(wh.load(t, spark.range(0, 2000).toDF("id").repartition(4)))
-    // rewrite R1 crashes AFTER its redo record is durable
-    wh.testFaultPoint = "rewrite:event"
-    intercept[Throwable] { wh.deleteWhere(t, col("id") < 500) }
+    val gBase = wh.currentGeneration(t).get
+    // rewrite R1 crashes before its commit
+    wh.testFaultPoint = "rewrite:files-final"
+    crashed("rewrite:files-final")(wh.deleteWhere(t, col("id") < 500))
     wh.testFaultPoint = null
-    val tombDir = new org.apache.hadoop.fs.Path(
-      s"${wh.warehouseDir}/$t/_graft_tombstones")
-    val events = fs.listStatus(tombDir).filter(st =>
-      !st.getPath.getName.startsWith("."))
-    assert(events.nonEmpty)
-    // hide R1's record, commit rewrite R2 from the SAME base (this is
-    // what an r16-era writer, or one behind a broken lock, would do),
-    // then restore the record — the advisor's exact hazard state
-    val hidden = new org.apache.hadoop.fs.Path(tombDir.getParent,
-      "_r1_events_aside")
-    fs.mkdirs(hidden)
-    events.foreach(st => fs.rename(st.getPath,
-      new org.apache.hadoop.fs.Path(hidden, st.getPath.getName)))
+    // rewrite R2 of the SAME base commits (another process)
     val wh2 = new graft.warehouse.SparkWarehouse(spark, wh.warehouseDir)
     unwrap(wh2.deleteWhere(t, col("id") < 1000))
-    assert(unwrap(wh2.get(t)).count() == 1000L)
-    fs.listStatus(hidden).foreach(st => fs.rename(st.getPath,
-      new org.apache.hadoop.fs.Path(tombDir, st.getPath.getName)))
-    fs.delete(hidden, true)
-    // R1's staged files are still on disk, named by a pending pair
-    // whose base generation R2 superseded: every view must serve R2's
-    // result alone — the r16 heal rolled R1 forward here (duplicates)
+    val gR2 = wh2.currentGeneration(t).get
+    // every view serves R2's result alone — R1's files stay orphans
     val wh3 = new graft.warehouse.SparkWarehouse(spark, wh.warehouseDir)
-    assert(listingCount(wh3, t) == 1000L,
-      "listing view served a superseded rewrite's outputs")
-    unwrap(wh3.refreshManifest(t))
-    assert(unwrap(wh3.get(t)).count() == 1000L,
-      "rebuilt manifest served a superseded rewrite's outputs")
-    // the rollback physically removed the staged files
-    val staged = fs.listStatus(new org.apache.hadoop.fs.Path(
-      s"${wh.warehouseDir}/$t"))
-      .count(_.getPath.getName.startsWith(".graftstage-"))
-    assert(staged == 0, "superseded staged files were not rolled back")
+    assert(unwrap(wh3.get(t)).count() == 1000L)
+    assert(unwrap(wh3.getAsOf(t, gR2)).count() == 1000L)
+    assert(unwrap(wh3.getAsOf(t, gBase)).count() == 2000L)
+    val feed = unwrap(wh3.changesBetween(t, gBase, gR2))
+    assert(feed.filter(col("change_type") === "delete").count() == 1000L &&
+      feed.filter(col("change_type") === "insert").count() == 0L,
+      "the change feed saw the superseded rewrite's outputs")
+    // the roll-back: past the rewrite-lock TTL vacuum deletes R1's
+    // orphans, and the directory holds exactly R2's result
+    assert(vacuumedDirRows(wh3, t) == 1000L,
+      "superseded outputs were not rolled back")
   }
 
   test("advisor #3: an append after a crashed-but-committed rewrite " +
@@ -301,18 +299,24 @@ class Round17Spec extends SparkSpec {
     val wh = tmpWh("r17-resurrect")
     val t = "t"
     unwrap(wh.load(t, spark.range(0, 2000).toDF("id").repartition(4)))
-    wh.testFaultPoint = "rewrite:event"
-    intercept[Throwable] { wh.deleteWhere(t, col("id") < 500) }
+    val gBase = wh.currentGeneration(t).get
+    // the rewrite's slot commits, then it crashes before publishing
+    // the derived snapshot
+    wh.testFaultPoint = "manifest:slot-committed"
+    crashed("manifest:slot-committed")(wh.deleteWhere(t, col("id") < 500))
     wh.testFaultPoint = null
-    // manifest still serves the pre-rewrite generation
+    // the snapshot still serves the pre-rewrite generation
     assert(unwrap(wh.get(t)).count() == 2000L)
-    // the append reconciles first: manifest flips to the committed
-    // rewrite (1500) plus the appended rows — nothing resurrects
+    // the append's lost claim heals the snapshot forward first: it
+    // rebases onto the committed rewrite (1500) plus the appended rows
+    // — nothing resurrects
     unwrap(wh.load(t, spark.range(10000, 10100).toDF("id")))
     assert(unwrap(wh.get(t)).count() == 1600L,
       "append rebased onto the stale manifest (deleted rows resurrected)")
     assert(unwrap(wh.get(t)).filter(col("id") < 500).count() == 0L)
-    assert(listingCount(wh, t) == 1600L)
+    val feed = unwrap(wh.changesBetween(t, gBase, wh.currentGeneration(t).get))
+    assert(feed.filter(col("change_type") === "delete").count() == 500L)
+    assert(feed.filter(col("change_type") === "insert").count() == 100L)
   }
 
   test("advisor #1 main path: a rewrite entering after a crashed-but-" +
@@ -320,16 +324,16 @@ class Round17Spec extends SparkSpec {
     val wh = tmpWh("r17-stale-plan")
     val t = "t"
     unwrap(wh.load(t, spark.range(0, 2000).toDF("id").repartition(4)))
-    wh.testFaultPoint = "rewrite:event"
-    intercept[Throwable] { wh.deleteWhere(t, col("id") < 500) }
+    wh.testFaultPoint = "manifest:slot-committed"
+    crashed("manifest:slot-committed")(wh.deleteWhere(t, col("id") < 500))
     wh.testFaultPoint = null
     // this rewrite's plan pins the PRE-crash generation's files; the
-    // in-lock reconcile publishes the crashed rewrite first, so the
-    // plan is stale and must be refused (not silently double-applied)
+    // in-lock heal publishes the committed rewrite first, so the plan
+    // is stale and must be refused (not silently double-applied)
     val res = wh.deleteWhere(t, col("id") >= 1500)
     assert(res.isLeft && res.left.exists(_.message.contains("no longer " +
       "current")), s"expected a stale-plan refusal, got $res")
-    // the retry (fresh plan) sees the reconciled 1500-row table
+    // the retry (fresh plan) sees the healed 1500-row table
     unwrap(wh.deleteWhere(t, col("id") >= 1500))
     assert(unwrap(wh.get(t)).count() == 1000L)
     assert(unwrap(wh.get(t)).agg(min(col("id"))).head.getLong(0) == 500L)
@@ -362,6 +366,60 @@ class Round17Spec extends SparkSpec {
     assert(unwrap(wh2.get(t)).count() == 250L,
       "the crashed writer's committed slot was lost or double-applied")
     assert(wh2.currentGeneration(t).exists(_ >= g1 + 2))
+  }
+
+  test("slot-only recovery: after a crash between the slot commit and " +
+    "the snapshot publish, a missing _graft_manifest is rebuilt from the " +
+    "slot and get serves the NEW generation") {
+    val wh = tmpWh("r17-slot-only")
+    val t = "t"
+    unwrap(wh.load(t, spark.range(0, 100).toDF("id")))
+    val g1 = wh.currentGeneration(t).get
+    wh.testFaultPoint = "manifest:slot-committed"
+    crashed("manifest:slot-committed")(
+      wh.load(t, spark.range(100, 200).toDF("id")))
+    wh.testFaultPoint = null
+    val mp = new org.apache.hadoop.fs.Path(s"${wh.warehouseDir}/$t/_graft_manifest")
+    val fs = hfs(wh.warehouseDir)
+    assert(fs.delete(mp, false))
+    // a fresh instance (no cached generation): the slot is the commit
+    val wh2 = new graft.warehouse.SparkWarehouse(spark, wh.warehouseDir)
+    assert(unwrap(wh2.get(t)).count() == 200L,
+      "the committed slot was not served")
+    assert(wh2.currentGeneration(t).contains(g1 + 1))
+    assert(fs.exists(mp), "the derived snapshot was not rebuilt")
+    // and writers build on it
+    unwrap(wh2.load(t, spark.range(200, 250).toDF("id")))
+    assert(unwrap(wh2.get(t)).count() == 250L)
+    assert(unwrap(wh2.getAsOf(t, g1)).count() == 100L)
+  }
+
+  test("a reader rebuilding a missing snapshot while a writer publishes " +
+    "the next generation leaves the snapshot at the writer's generation") {
+    val wh = tmpWh("r17-repair-race")
+    val t = "t"
+    unwrap(wh.load(t, spark.range(0, 100).toDF("id")))
+    val g1 = wh.currentGeneration(t).get
+    val fs = hfs(wh.warehouseDir)
+    assert(fs.delete(new org.apache.hadoop.fs.Path(
+      s"${wh.warehouseDir}/$t/_graft_manifest"), false))
+    val reader = new graft.warehouse.SparkWarehouse(spark, wh.warehouseDir)
+    val writer = new graft.warehouse.SparkWarehouse(spark, wh.warehouseDir)
+    // the writer commits g1+1 and publishes its snapshot after the
+    // reader checked the (absent) snapshot and before it replaces it
+    reader.testHook = {
+      case "manifest:repair-checked" =>
+        reader.testHook = null
+        unwrap(writer.load(t, spark.range(100, 200).toDF("id")))
+      case _ => ()
+    }
+    assert(unwrap(reader.get(t)).count() == 200L,
+      "the reader served the generation it rebuilt over the writer's")
+    assert(reader.testHook == null, "the race window was never reached")
+    val fresh = new graft.warehouse.SparkWarehouse(spark, wh.warehouseDir)
+    assert(fresh.currentGeneration(t).contains(g1 + 1),
+      "the snapshot was left at the superseded generation")
+    assert(unwrap(fresh.get(t)).count() == 200L)
   }
 
   // ---------------------------------------------------------------

@@ -104,6 +104,40 @@ class Round19Spec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.manifest.histCacheRevalidate")
   }
 
+  test("hist caches: with histCacheRevalidate=true a slot recreated out " +
+    "of band with the same length and its mtime set back is re-read " +
+    "(the header nonce is compared)") {
+    val sps = spark; import sps.implicits._
+    val wh = tmpWh("r19-histnonce")
+    val t = "t"
+    spark.conf.set("spark.graft.manifest.histCacheRevalidate", "true")
+    try {
+      unwrap(wh.load(t, (0L until 50L).map(i => (i, "v")).toDF("id", "v")))
+      val g = wh.currentGeneration(t).get
+      unwrap(wh.deleteWhere(t, col("id") < 10)) // g is now history
+      assert(unwrap(wh.getAsOf(t, g)).count() == 50L) // warms the caches
+      // recreate slot g out of band within mtime granularity: same
+      // bytes but a new header nonce (same length), old mtime restored
+      val slot = java.nio.file.Paths.get(wh.warehouseDir, t,
+        "_graft_manifest_hist", f"$g%012d")
+      val mtime = java.nio.file.Files.getLastModifiedTime(slot)
+      val text = new String(java.nio.file.Files.readAllBytes(slot), "UTF-8")
+      val header = text.takeWhile(_ != '\n')
+      val toks = header.split(" ")
+      assert(toks(1) == "v3", header)
+      val nonce = if (toks(3) == "ffffffff") "eeeeeeee" else "ffffffff"
+      val recreated = (toks.updated(3, nonce).mkString(" ") +
+        text.drop(header.length)).getBytes("UTF-8")
+      assert(recreated.length == text.getBytes("UTF-8").length)
+      java.nio.file.Files.write(slot, recreated)
+      java.nio.file.Files.setLastModifiedTime(slot, mtime)
+      val reads0 = wh.histSlotReads.get()
+      assert(unwrap(wh.getAsOf(t, g)).count() == 50L)
+      assert(wh.histSlotReads.get() > reads0,
+        "a recreated slot passed revalidation on (length, mtime) alone")
+    } finally spark.conf.unset("spark.graft.manifest.histCacheRevalidate")
+  }
+
   test("analyzeBloom missing-pair sentinels: past the collect cap the " +
     "append takes the distributed path and coverage still completes") {
     val sps = spark; import sps.implicits._

@@ -491,6 +491,20 @@ class Round6bSpec extends SparkSpec {
     }
   }
 
+  test("classifier training refuses duplicated label rows instead of " +
+    "doubling a document's margin") {
+    val d = spark.read.parquet(s"$sf0001/documents.parquet")
+      .select(col("doc_id"), col("text"), col("lang"))
+    val labels = d.select(col("doc_id"),
+      when(col("lang") === "en", 1).otherwise(0).as("y"))
+    val dup = labels.unionByName(labels.limit(3))
+    val e = intercept[IllegalArgumentException] {
+      ext.QualityClassifier.train(d, col("doc_id"), col("text"),
+        dup, steps = 1, lr = 0.05)
+    }
+    assert(e.getMessage.contains("3 duplicate"), e.getMessage)
+  }
+
   // ---------- GopherRules ----------
 
   test("gopher rules judge each boundary the way the paper states it") {

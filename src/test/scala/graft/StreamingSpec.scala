@@ -32,6 +32,27 @@ class StreamingSpec extends SparkSpec {
     assert(!q.isActive) // awaitOrFail stopped it before throwing
   }
 
+  test("awaitOrFail closes its scratch walks: 50 calls leak no file " +
+    "descriptors") {
+    val spark0 = spark
+    import spark0.implicits._
+    implicit val sc = spark0.sqlContext
+    val input = MemoryStream[Int]
+    val q = input.toDF().writeStream.format("noop").start()
+    q.stop()
+    def openFds(): Int = new java.io.File("/proc/self/fd").list().length
+    val fds0 = openFds()
+    (0 until 50).foreach { i =>
+      val scratch = java.nio.file.Files.createTempDirectory(s"graft-walk-$i")
+      val sub = java.nio.file.Files.createDirectories(scratch.resolve("a/b"))
+      java.nio.file.Files.write(sub.resolve("f.json"), "{}".getBytes("UTF-8"))
+      graft.queries.StreamQueries.awaitOrFail(q, 1000, scratch)
+      assert(!java.nio.file.Files.exists(scratch), "scratch not deleted")
+    }
+    val grown = openFds() - fds0
+    assert(grown < 50, s"$grown file descriptors leaked by 50 scratch walks")
+  }
+
   test("sessionize: gap closes a session, totals are exact") {
     val spark0 = spark
     import spark0.implicits._
