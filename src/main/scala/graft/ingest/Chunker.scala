@@ -17,13 +17,19 @@ import org.apache.spark.sql.functions._
   *
   * The reference minimizes Python JSON serializations with sampling +
   * bisection (≤6 iterations). On Spark the exact per-row size is one
-  * codegen'd column, so we skip estimation entirely and assign chunk ids
-  * in a single pass:
+  * codegen'd column, so there is no estimation: one [[GreedyCut]] per
+  * ordered partition packs rows greedily, and chunks never span
+  * partitions. Three entry points share that rule:
   *
-  *  - `greedyChunkIds` — exact greedy packing *within each ordered
-  *    partition* (sequential scan in `mapPartitions`), chunks never span
-  *    partitions. Scales linearly: no global sequential state, no driver
-  *    collect of data (only per-partition chunk counts).
+  *  - `partitionChunkOrdinals` — each row's chunk ordinal within its
+  *    partition, computed inside whatever job consumes the frame. The
+  *    warehouse load cuts with it inside its write job (one file per
+  *    (partition, ordinal)): no statistics pass, no cached input, no
+  *    shuffle; row count and largest row come from the same job.
+  *  - `greedyChunkIds` — globally numbered chunk ids plus (rows, chunks)
+  *    up front: one statistics pass over a cached input, then the
+  *    assignment, for callers that need the ids or the counts before
+  *    they consume the rows (the JDBC load, the packing gates).
   *  - `bandedChunkIds` — banded variant: fixed byte boundaries at
   *    multiples of `sizeLimit` over the global running sum (computed by
   *    the same partition-offset composition — never a single-partition
@@ -31,13 +37,31 @@ import org.apache.spark.sql.functions._
   *    limit-sized band" (file-split semantics, like
   *    `spark.sql.files.maxPartitionBytes`); a row straddling a boundary
   *    belongs to the band its start falls in, so bands can overshoot by
-  *    at most one row — callers that need the hard cap use the greedy
+  *    at most one row — callers that need the hard cap use a greedy
   *    variant.
   */
 object Chunker {
 
   /** 20 MiB — BIGQUERY_JSON_BYTES_LIMIT (bigquery/config.py:2). */
   val DefaultSizeLimit: Long = 20L * (1L << 20)
+
+  /** The greedy rule, one instance per ordered partition: a row opens a
+    * new chunk when it is the partition's first or when adding it would
+    * take the open chunk past `limit`. `next` returns the row's chunk
+    * ordinal within the partition (0-based); a row larger than the limit
+    * gets a chunk of its own (callers refuse it by the row's size).
+    */
+  final class GreedyCut(limit: Long) {
+    private var chunk = -1L
+    private var acc = 0L
+    def next(size: Long): Long = {
+      if (chunk < 0L || acc + size > limit) { chunk += 1L; acc = size }
+      else acc += size
+      chunk
+    }
+    /** Chunks opened so far. */
+    def chunks: Long = chunk + 1L
+  }
 
   /** Chunk assignment result: the chunked frame plus the statistics the
     * scan already produced (so callers never re-scan to count), and the
@@ -117,19 +141,16 @@ object Chunker {
     val stats: Seq[(Int, (Long, Long, Long))] =
       ordered.select(col(sizeCol)).queryExecution.toRdd
         .mapPartitionsWithIndex { (pid, it) =>
-          var chunks = 0L
+          val cut = new GreedyCut(sizeLimit)
           var rows = 0L
           var maxSz = 0L
-          var acc = 0L
           it.foreach { row =>
             val s = getSize(row, 0)
             rows += 1L
             if (s > maxSz) maxSz = s
-            if (chunks == 0L) { chunks = 1L; acc = s }
-            else if (acc + s > sizeLimit) { chunks += 1L; acc = s }
-            else acc += s
+            cut.next(s)
           }
-          Iterator.single(pid -> ((chunks, rows, maxSz)))
+          Iterator.single(pid -> ((cut.chunks, rows, maxSz)))
         }.collect().toSeq
 
     val maxRow = stats.map(_._2._3).maxOption.getOrElse(0L)
@@ -146,18 +167,41 @@ object Chunker {
       }.toMap
     }
 
-    // assignment pass over the cached input, appending `_chunk` with an
-    // unsafe projection (the projection's reused output buffer is the
-    // standard iterator contract — downstream operators copy when they
-    // buffer)
-    val schema = ordered.schema.add("_chunk", "long", nullable = false)
-    val limit = sizeLimit
-    val sIdx = sizeIdx
-    val assigned = org.apache.spark.sql.GraftColumnBridge
-      .mapPartitionsInternal(ordered, schema) { (pid, it) =>
-        var chunk = offsets.getOrElse(pid, 0L) - 1L
-        var acc = 0L
-        var started = false
+    // assignment pass over the cached input: each partition's chunks
+    // are numbered from its offset
+    val assigned = withChunkColumn(ordered, sizeIdx, sizeLimit, "_chunk",
+      pid => offsets.getOrElse(pid, 0L))
+    val out = Chunked(assigned, totalRows, totalChunks)
+    out.cached = Some(ordered)
+    Right(out)
+  }
+
+  /** `df` plus `outCol` (Long): each row's [[GreedyCut]] ordinal within
+    * its partition, in the partition's current row order. No job runs
+    * here; the cut happens inside whatever job consumes the frame, so a
+    * writer that partitions its output by `outCol` gets one file per
+    * (input partition, chunk) in the same pass that reads the input.
+    * Oversize rows are not refused here: a row larger than the limit
+    * gets an ordinal of its own, and the caller compares the largest
+    * `sizeCol` it observed against the limit.
+    */
+  def partitionChunkOrdinals(df: DataFrame, sizeCol: String, sizeLimit: Long,
+                             outCol: String): DataFrame =
+    withChunkColumn(df, df.schema.fieldIndex(sizeCol), sizeLimit, outCol,
+      _ => 0L)
+
+  // appends the greedy chunk number (partition base + ordinal) with an
+  // unsafe projection over the input rows, never external rows (the
+  // projection's reused output buffer is the standard iterator contract
+  // — downstream operators copy when they buffer)
+  private def withChunkColumn(df: DataFrame, sizeIdx: Int, sizeLimit: Long,
+                              outCol: String, base: Int => Long): DataFrame = {
+    val getSize = sizeGetter(df.schema(sizeIdx).dataType)
+    val schema = df.schema.add(outCol, "long", nullable = false)
+    org.apache.spark.sql.GraftColumnBridge
+      .mapPartitionsInternal(df, schema) { (pid, it) =>
+        val cut = new GreedyCut(sizeLimit)
+        val first = base(pid)
         val chunkVals = new Array[Any](1)
         val chunkRow = new org.apache.spark.sql.catalyst.expressions
           .GenericInternalRow(chunkVals)
@@ -165,16 +209,10 @@ object Chunker {
         val proj = org.apache.spark.sql.catalyst.expressions
           .UnsafeProjection.create(schema)
         it.map { row =>
-          val s = getSize(row, sIdx)
-          if (!started || acc + s > limit) { chunk += 1L; acc = s; started = true }
-          else acc += s
-          chunkVals(0) = chunk
+          chunkVals(0) = first + cut.next(getSize(row, sizeIdx))
           proj(joined(row, chunkRow))
         }
       }
-    val out = Chunked(assigned, totalRows, totalChunks)
-    out.cached = Some(ordered)
-    Right(out)
   }
 
   /** Banded chunk ids over an explicit total order:

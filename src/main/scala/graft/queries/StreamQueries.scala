@@ -173,11 +173,29 @@ object StreamQueries {
     * fixed overhead, so the streaming gates plan with a small count. Batch
     * queries in the same session are unaffected — the conf is restored.
     */
-  private def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
+  private def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T =
+    withConf(s, "spark.sql.shuffle.partitions", n.toString)(body)
+
+  /** Run `body` with one session conf set, restoring (or unsetting) it
+    * afterwards. A streaming query snapshots the session conf when it
+    * starts, so the value holds for every micro-batch of a query started
+    * and awaited inside `body`.
+    */
+  private def withConf[T](s: SparkSession, key: String, value: String)(
+      body: => T): T = {
+    val prior = s.conf.getOption(key)
+    s.conf.set(key, value)
+    try body finally prior match {
+      case Some(p) => s.conf.set(key, p)
+      case None    => s.conf.unset(key)
+    }
   }
+
+  /** The single-sentinel protocol's timeouts fire in the engine's
+    * automatic no-data micro-batch, so its gates pin it on whatever
+    * the session says.
+    */
+  private val NoDataBatches = "spark.sql.streaming.noDataMicroBatches.enabled"
 
   /** Shared body of s02 / s16: a REAL run of the stateful sessionizer
     * (flatMapGroupsWithState + event-time timeout), staged as three
@@ -199,16 +217,16 @@ object StreamQueries {
     // bounded to 2024), so no max(ts) pre-pass either. ONE sentinel
     // tick (r19): it advances the watermark past every real event, and
     // the engine's automatic no-data micro-batch (noDataMicroBatches,
-    // on by default — observed as the trailing rows=0 batch in the r19
-    // floor trace) then fires the event-time timeouts; the second tick
-    // batch the gate used to stage did the same work twice.
+    // pinned on below — observed as the trailing rows=0 batch in the
+    // r19 floor trace) then fires the event-time timeouts; the second
+    // tick batch the gate used to stage did the same work twice.
     val dest0 = staged.resolve("0.parquet")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"), dest0)
     dest0.toFile.setLastModified(1000000000L)
     stageSentinels(s, schema("ts").dataType, staged, Seq(
       1 -> Seq((-1L, 2051222400L * 1000000000L, -1L, "tick", 0.0, "{}")))) // 2035-01-01
-    withShufflePartitions(s, 4) {
+    withShufflePartitions(s, 4) { withConf(s, NoDataBatches, "true") {
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(staged.toString)
@@ -224,7 +242,7 @@ object StreamQueries {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       awaitOrFail(q, 180000, ckpt, staged)
-    }
+    } }
     s.table(sinkName)
       .filter(col("user_id") >= 0)
       .select(col("user_id"), col("session_start"), col("session_end"),
@@ -253,7 +271,7 @@ object StreamQueries {
     dest0.toFile.setLastModified(1000000000L)
     stageSentinels(s, schema("ts").dataType, staged, Seq(
       1 -> Seq((-1L, 2051222400L * 1000000000L, -1L, "tick", 0.0, "{}"))))
-    withShufflePartitions(s, 4) {
+    withShufflePartitions(s, 4) { withConf(s, NoDataBatches, "true") {
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(staged.toString)
@@ -270,7 +288,7 @@ object StreamQueries {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       awaitOrFail(q, 120000, ckpt, staged)
-    }
+    } }
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -327,17 +345,12 @@ object StreamQueries {
     // (StreamSweep measured it; this gate keeps it from rotting).
     // Result must be hash-identical to s02: the state BACKEND must
     // never change the answer.
-    "s16_stream_sessions_rocksdb" -> ((s: SparkSession, dir: String) => {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prior = s.conf.getOption(key)
-      s.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
-      try sessionsGateBody(s, dir, "s16_stream_sessions_rocksdb_sink")
-      finally prior match {
-        case Some(p) => s.conf.set(key, p)
-        case None    => s.conf.unset(key)
-      }
-    }),
+    "s16_stream_sessions_rocksdb" -> ((s: SparkSession, dir: String) =>
+      withConf(s, "spark.sql.streaming.stateStore.providerClass",
+          "org.apache.spark.sql.execution.streaming." +
+            "state.RocksDBStateStoreProvider") {
+        sessionsGateBody(s, dir, "s16_stream_sessions_rocksdb_sink")
+      }),
 
     // ---- sliding (hopping) windows: every event lands in FOUR
     // overlapping 2-hour windows on a 30-minute hop — the overlapping-

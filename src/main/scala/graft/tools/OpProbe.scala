@@ -4,10 +4,10 @@ import graft.Tables
 import graft.warehouse.SparkWarehouse
 import org.apache.spark.sql.functions._
 
-/** r18 optimization probe: per-stage wall time of the op-gate fixture
-  * pipeline (load → analyzeStats → analyzeBloom → scanPruned) and of
-  * the load path's internals (prepare/size/chunk/write), at bench scale
-  * (sf0.1, local[32]) — stage attribution for OPTIMIZATION_r18.md.
+/** r18 optimization probe: per-stage wall time and Spark job count of
+  * the op-gate fixture pipeline (load → analyzeStats → analyzeBloom →
+  * scanPruned → append load), at bench scale (sf0.1, local[32]) — stage
+  * attribution for OPTIMIZATION_r18.md.
   * `runMain graft.tools.OpProbe`
   */
 object OpProbe {
@@ -59,17 +59,8 @@ object OpProbe {
       val li = Tables(spark, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
 
-      // --- load internals, replicated stage by stage
-      val prepared = t("prepare(plan-only)")(graft.ingest.Ingest.prepare(li.repartition(8)))
-      val sized = prepared.withColumn("_graft_size",
-        graft.ingest.Ingest.rowJsonSize(prepared))
-      t("size+stats+assign (greedyChunkIds)") {
-        val chunked = ok(graft.ingest.Chunker.greedyChunkIds(sized, "_graft_size"))
-        println(s"[opprobe]   chunks=${chunked.chunks} rows=${chunked.rows}")
-        chunked.unpersist()
-      }
-
-      // --- the verbs end to end
+      // --- the verbs end to end (load sizes, cuts and writes its chunks
+      // in one job, so it has no internal stage to time separately)
       t("wh.load")(ok(wh.load("probe_t", li.repartition(8))))
       t("analyzeStats")(ok(wh.analyzeStats("probe_t")))
       t("analyzeBloom")(ok(wh.analyzeBloom("probe_t", Seq("l_orderkey"))))

@@ -277,7 +277,10 @@ final class JdbcWarehouse(val spark: SparkSession, val url: String)
           val parts = math.min(math.max(1L, chunked.chunks), 16384L).toInt
           try {
             // closed-form chunk placement instead of a sampling range
-            // shuffle — same device as SparkWarehouse.load (r18)
+            // shuffle (r18). SparkWarehouse.load cuts inside its write
+            // job instead; a JDBC append has no per-chunk file to cut,
+            // so this path keeps the statistics pass and the shuffle
+            // that gives each chunk its own write partition.
             val chunksTotal = math.max(1L, chunked.chunks)
             graft.sources.Sources.writeJdbc(
               org.apache.spark.sql.GraftColumnBridge.repartitionByLongKey(

@@ -282,11 +282,17 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
     * schema, else infer and merge unless fullSchema) → create if missing
     * → size-bounded chunked append.
     *
-    * Chunking at scale: rather than bisecting serializations, the exact
-    * per-row JSON size is computed as a column and greedy chunk ids are
-    * assigned per partition (Chunker.greedyChunkIds); each chunk becomes
-    * one output file via a chunk-id repartition, mirroring "one API call
-    * per ≤20 MiB chunk" as "one parquet file per ≤20 MiB of JSON".
+    * One write job does the chunking: the exact per-row JSON size is a
+    * column, a greedy cut per input partition
+    * ([[Chunker.partitionChunkOrdinals]], the rule of
+    * `Chunker.greedyChunkIds`) gives each row its chunk ordinal, and the
+    * write partitions its output by that ordinal, so every chunk becomes
+    * one parquet file ("one API call per ≤20 MiB chunk" as "one file per
+    * ≤20 MiB of JSON"). Chunks never span input partitions, so each task
+    * cuts its own files: no statistics pass, no cached input, no shuffle.
+    * The row count and the largest row size are observed by the same
+    * job; a row over the limit is refused with [[RowOversize]] before
+    * the commit, and the staged files are deleted.
     */
   def load(name: String, data: DataFrame, schema: Seq[FieldRepr] = Nil,
            fullSchema: Boolean = false,
@@ -316,55 +322,49 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
         case Right(df) => df
       }
 
-      if (!fs.exists(tablePath(name))) {
+      val evolved = if (!fs.exists(tablePath(name))) {
         create(name, resolved) match {
           case Left(e) => return Left(e)
-          case Right(_) => ()
+          case Right(_) => false
         }
       } else {
         // persist the merged (evolved) schema so later reads/fetches see
         // newly-appended fields
         meta(name) match {
           case Right(m) if m.schema != resolved =>
-            writeMeta(name, m.copy(schema = resolved))
-          case Left(_) => writeMeta(name, TableMeta(resolved, None))
-          case _ => ()
+            writeMeta(name, m.copy(schema = resolved)); true
+          case Left(_) => writeMeta(name, TableMeta(resolved, None)); true
+          case _ => false
         }
       }
 
       val sized = aligned.withColumn("_graft_size", Ingest.rowJsonSize(aligned))
-      Chunker.greedyChunkIds(sized, "_graft_size", sizeLimit) match {
-        case Left(e) => Left(e)
-        case Right(chunked) =>
-          // one shuffle partition per chunk so each chunk lands in its own
-          // file — capped: a petabyte load would otherwise ask for millions
-          // of range partitions. Past the cap a partition carries several
-          // consecutive chunks (each still ≤ limit in JSON terms); bulk
-          // loads at that scale should use Sources.writeParquetSized.
-          val parts = math.min(math.max(1L, chunked.chunks), 16384L).toInt
-          try {
-            appendDataFiles(name) { tmp =>
-              // chunk → partition placement is known in CLOSED FORM
-              // (ids are dense 0..chunks-1; the order-preserving
-              // ⌊chunk·parts/chunks⌋ assigns each partition a
-              // contiguous chunk range), so the r18 bridge shuffle
-              // replaces repartitionByRange's whole SAMPLING pass of
-              // the chunked frame with a direct exchange — one fewer
-              // job per load, O(loaded bytes) less sampling I/O at
-              // scale. Within-file row order stays arbitrary, exactly
-              // as the range shuffle left it (ties under the _chunk
-              // sort kept nondeterministic fetch order).
-              val chunksTotal = math.max(1L, chunked.chunks)
-              org.apache.spark.sql.GraftColumnBridge.repartitionByLongKey(
-                  chunked.df.drop("_graft_size"), "_chunk", parts,
-                  c => ((c * parts) / chunksTotal).toInt)
-                .drop("_chunk")
-                .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-            }
-          } finally chunked.unpersist()
-          registerView(name)
-          Right(chunked.rows)
+      val stats = new org.apache.spark.sql.Observation()
+      val cut = Chunker.partitionChunkOrdinals(sized, "_graft_size",
+          sizeLimit, ChunkCol)
+        .observe(stats, count(lit(1)).as("rows"),
+          max(col("_graft_size")).as("max_row"))
+        .drop("_graft_size")
+      val loaded = appendDataFiles(name) { tmp =>
+        // the writer sorts each task's rows by ordinal (already in order)
+        // and opens one file per ordinal; maxRecordsPerFile is pinned so
+        // a session conf can never split a chunk across files
+        cut.write.partitionBy(ChunkCol).option("maxRecordsPerFile", "0")
+          .mode(SaveMode.Overwrite).parquet(tmp.toString)
+        val m = stats.get
+        val rows = m("rows").asInstanceOf[Number].longValue
+        val maxRow = Option(m("max_row"))
+          .fold(0L)(_.asInstanceOf[Number].longValue)
+        // an empty batch writes no chunk file; when it evolved the
+        // schema, one empty file carries the new columns to the scans,
+        // which take their schema from the data files' footers
+        if (rows == 0 && evolved)
+          aligned.limit(0).write.mode(SaveMode.Append).parquet(tmp.toString)
+        if (maxRow > sizeLimit) Left(RowOversize(maxRow, sizeLimit))
+        else Right(rows)
       }
+      if (loaded.isRight) registerView(name)
+      loaded
     } catch {
       case e: IllegalArgumentException => Left(RowsInvalid(e.getMessage))
       case e: Exception => Left(TableGenericError(e.getMessage, Some(e)))
@@ -420,7 +420,7 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
         invalidateHistCaches(name)
       }
       else appendDataFiles(name) { tmp =>
-        prepared.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+        Right(prepared.write.mode(SaveMode.Overwrite).parquet(tmp.toString))
       }
       // SaveMode.Overwrite deletes the whole directory including the
       // sidecar: rewrite it (schema from the new data, expiry preserved)
@@ -1131,6 +1131,14 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
   private def manifestPath(name: String) =
     new Path(tablePath(name), "_graft_manifest")
 
+  /** One generation's cached scan: its header and entries, the seeded
+    * file index and the merged footer schema ([[scanFrameFor]]).
+    */
+  private final case class ScanIndex(header: String,
+      entries: IndexedSeq[ManifestEntry],
+      index: org.apache.spark.sql.execution.datasources.FileIndex,
+      dataSchema: StructType)
+
   /** One cached manifest generation: parsed entries plus LAZY derived
     * views (rel vector, rel set) so the warm coverage math costs set
     * probes — not a fresh O(files) Path/URI materialization per call
@@ -1822,17 +1830,18 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
   // per-generation cache of the manifest-built scan index + merged
   // data schema: warm get() is then a pure driver-memory plan build —
   // no listing, no footer job. Keyed by the manifest header
-  // (nonce+count), which every mutation verb rotates, so evolution/
-  // rewrites re-infer exactly once. Budgeted in files like the
-  // manifest cache (FileStatus + path objects are heavier per entry,
-  // so the default budget is lower); a cold rebuild costs one
-  // driver-memory index build + footer-schema job, never a listing.
-  private val scanIndexCache = new LruFileBudgetCache[String,
-    (String, org.apache.spark.sql.execution.datasources.FileIndex,
-      StructType)](
+  // (nonce+count), which every mutation verb rotates. A generation that
+  // only ADDS files to the cached one (every append: load, update,
+  // updateWhereMor, concurrent loaders) inherits the cached schema
+  // merged with the added files' footers; rewrites re-infer from every
+  // footer exactly once. Budgeted in files like the manifest cache
+  // (FileStatus + path objects are heavier per entry, so the default
+  // budget is lower); a cold rebuild costs one driver-memory index
+  // build + footer-schema job, never a listing.
+  private val scanIndexCache = new LruFileBudgetCache[String, ScanIndex](
     () => spark.conf.getOption("spark.graft.manifest.scanCacheMaxFiles")
       .map(_.toLong).getOrElse(1000000L),
-    _._2.inputFiles.length.toLong)
+    _.index.inputFiles.length.toLong)
 
   /** Test/ops hook: (tables resident, total file statuses held) in the
     * manifest-built scan-index cache.
@@ -1851,22 +1860,34 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
     if (entries.isEmpty) return None
     val rootQ = fs.makeQualified(tablePath(name))
     val prefix = rootQ.toUri.toString
+    def status(e: ManifestEntry) =
+      new org.apache.hadoop.fs.FileStatus(e.bytes, false, 1,
+        134217728L, e.mtime,
+        new Path(new java.net.URI(prefix + "/" + e.rel)))
     val cached = scanIndexCache.get(cacheKey)
-    val (index, dataSchema) =
-      if (cached != null && cached._1 == header) (cached._2, cached._3)
+    val scan =
+      if (cached != null && cached.header == header) cached
       else {
-        val statuses = entries.map { e =>
-          new org.apache.hadoop.fs.FileStatus(e.bytes, false, 1,
-            134217728L, e.mtime,
-            new Path(new java.net.URI(prefix + "/" + e.rel)))
-        }
+        // appends keep the older entries as an exact prefix (same rel,
+        // length and mtime, same order), so the footer merge over the
+        // whole generation equals the cached merge folded with the added
+        // files' merge — read only the added footers
+        val inherited = Option(cached)
+          .filter(c => c.entries.length <= entries.length &&
+            entries.startsWith(c.entries))
+          .map { c =>
+            val added = entries.drop(c.entries.length)
+            org.apache.spark.sql.GraftFileIndexBridge.mergeFooterSchemas(
+              spark, c.dataSchema, added.map(status))
+          }
         val (idx, ds) = org.apache.spark.sql.GraftFileIndexBridge
-          .manifestIndex(spark, rootQ, statuses, None)
-        scanIndexCache.put(cacheKey, (header, idx, ds))
-        (idx, ds)
+          .manifestIndex(spark, rootQ, entries.map(status), inherited)
+        val fresh = ScanIndex(header, entries, idx, ds)
+        scanIndexCache.put(cacheKey, fresh)
+        fresh
       }
     Some(org.apache.spark.sql.GraftFileIndexBridge.manifestFrame(
-      spark, index, dataSchema,
+      spark, scan.index, scan.dataSchema,
       base =>
         if (!skippingEnabled) base
         else new org.apache.spark.sql.GraftPruningFileIndex(base,
@@ -3979,11 +4000,14 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
 
   /** Append a write's output files with an O(new files) manifest
     * patch: write to a sibling temp dir, move the files in under their
-    * final names, commit current ∪ added. A failure or crash before
-    * the commit leaves the moved files as orphans no generation names
-    * (invisible; reclaimed by [[vacuumRetired]]) and the verb fails.
+    * final names, commit current ∪ added. A `write` that returns Left
+    * refuses its own output: nothing is moved or committed and the temp
+    * dir is deleted. A failure or crash before the commit leaves the
+    * moved files as orphans no generation names (invisible; reclaimed
+    * by [[vacuumRetired]]) and the verb fails.
     */
-  private def appendDataFiles(name: String)(write: Path => Unit): Unit = {
+  private def appendDataFiles[T](name: String)(
+      write: Path => Either[WarehouseError, T]): Either[WarehouseError, T] = {
     // staging dir is UNIQUE PER CALL: appends are the one verb two
     // writers legitimately race on (concurrent loaders, streaming
     // sinks), and a shared fixed path + delete-on-entry let one
@@ -3999,8 +4023,7 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
     // with no atomic provider this throws here, so the verb fails
     // LOUDLY before writing anything (r17, judge #2)
     val _ = commitPrimitive
-    try {
-      write(tmp)
+    try write(tmp).map { result =>
       val added = moveDataFilesIn(name, tmp)
       fault("append:files-final") // files final, no commit yet
       // O(batch) manifest patch with REBASE-on-lost-claim (r16):
@@ -4024,6 +4047,7 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
         throw new java.io.IOException(s"append to '$name' lost the " +
           s"generation commit $attempts times to concurrent writers — retry")
       }
+      result
     } finally checkedDelete(tmp)
   }
 
@@ -4060,16 +4084,22 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
   /** Move every data file under `tmp` into the live table root,
     * preserving its tmp-relative (partition) path; returns the moved
     * files' manifest entries. Fresh UUID part names never collide with
-    * live files. On any failure the already-moved files are removed —
+    * live files. The `ChunkCol=k/` directories of a chunked load write
+    * are flattened instead: each file lands at the table root with `k`
+    * in its name (one task writes the same part name into every chunk
+    * directory). On any failure the already-moved files are removed —
     * at that point they are UNREFERENCED (the manifest still names the
     * old generation), so removal restores the exact pre-call state.
     */
   private def moveDataFilesIn(name: String, tmp: Path): Seq[ManifestEntry] = {
     val tmpQ = fs.makeQualified(tmp).toUri.toString
+    val chunkDir = ChunkCol + "="
     def walk(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
       fs.listStatus(p).toSeq.flatMap { st =>
         val n = st.getPath.getName
-        if (n.startsWith("_") || n.startsWith(".")) Nil
+        if (st.isDirectory && n.startsWith(chunkDir))
+          walk(st.getPath)
+        else if (n.startsWith("_") || n.startsWith(".")) Nil
         else if (st.isDirectory) walk(st.getPath)
         else if (n.endsWith(".parquet")) Seq(st)
         else Nil
@@ -4080,7 +4110,12 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
         val uri = fs.makeQualified(st.getPath).toUri.toString
         require(uri.startsWith(tmpQ + "/"),
           s"moveDataFilesIn: $uri outside $tmpQ")
-        val rel = uri.substring(tmpQ.length + 1)
+        val rel = uri.substring(tmpQ.length + 1) match {
+          case r if r.startsWith(chunkDir) =>
+            val Array(dir, file) = r.split("/", 2)
+            s"part-k${dir.stripPrefix(chunkDir)}-" + file.stripPrefix("part-")
+          case r => r
+        }
         val dest = relToPath(name, rel)
         fs.mkdirs(dest.getParent)
         checkedRename(st.getPath, dest)
@@ -4459,6 +4494,8 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
 
   private val RelCol = "__graft_rel"
   private val RidxCol = "__graft_ridx"
+  // the chunk-ordinal partition column of a chunked load's staged write
+  private val ChunkCol = "_graft_chunk"
 
   private def dvPath(name: String) = new Path(tablePath(name), "_graft_dv")
 
@@ -4580,9 +4617,9 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
           .filter(dataCols.contains)
         appendDataFiles(name) { tmp =>
           val writer = newVersions.write.mode(SaveMode.Overwrite)
-          if (pcols.nonEmpty)
+          Right(if (pcols.nonEmpty)
             writer.partitionBy(pcols: _*).parquet(tmp.toString)
-          else writer.parquet(tmp.toString)
+          else writer.parquet(tmp.toString))
         }
         matched.select(col(RelCol).as("rel"), col(RidxCol).as("ridx"))
           .write.mode(SaveMode.Append).parquet(dvPath(name).toString)

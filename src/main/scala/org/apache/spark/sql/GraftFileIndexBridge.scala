@@ -5,7 +5,11 @@ import org.apache.spark.sql.catalyst.expressions.{And, Expression}
 import org.apache.spark.sql.execution.datasources.{FileIndex,
   FileStatusCache, HadoopFsRelation, InMemoryFileIndex, LogicalRelation,
   PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
 /** In-package access for wrapping a scan's `FileIndex` — the standard
@@ -162,6 +166,41 @@ object GraftFileIndexBridge {
           s"unable to infer parquet schema under $root"))
     }
     (index, dataSchema)
+  }
+
+  /** `base` merged with the footers of `files`, in order — what the
+    * `mergeSchema` footer job of [[manifestIndex]] computes over a file
+    * list that starts with the files `base` was merged from and ends
+    * with `files` (the merge folds footers left to right). The added
+    * footers are read on the driver with the same reader and converter
+    * settings that job uses, so an append costs no Spark job, and no
+    * footer behind `base` is read again.
+    */
+  def mergeFooterSchemas(spark: SparkSession, base: StructType,
+                         files: Seq[FileStatus]): StructType = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val conf = session.sessionState.conf
+    val converter = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = conf.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+      nanosAsLong = conf.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation =
+        conf.parquetReaderRespectUnknownTypeAnnotation)
+    val hadoopConf = session.sessionState.newHadoopConf()
+    // the job's reader, corrupt-file skipping included
+    def footer(st: FileStatus): Option[Footer] =
+      try Some(new Footer(st.getPath, ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(st, hadoopConf),
+        ParquetMetadataConverter.NO_FILTER)))
+      catch {
+        case _: java.io.IOException | _: RuntimeException
+            if conf.ignoreCorruptFiles => None
+      }
+    org.apache.spark.util.ThreadUtils
+      .parmap(files, "graft-footer-read", 8)(footer).flatten
+      .map(ParquetFileFormat.readSchemaFromFooter(_, converter))
+      .foldLeft(base)(_.merge(_, conf.caseSensitiveAnalysis))
   }
 
   /** A DataFrame over a [[manifestIndex]] result, with the index

@@ -139,6 +139,21 @@ class StreamingSpec extends SparkSpec {
       batch.sortBy(t => (t._2, t._1.getTime)).toSeq)
   }
 
+  test("the sessions gate fires its timeouts when the session turns " +
+    "no-data micro-batches off") {
+    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val gate = graft.queries.StreamQueries.queries("s02_stream_sessions")
+    val expected = gate(spark, sf0001).collect().toSeq
+    spark.conf.set(key, "false")
+    val got = try gate(spark, sf0001).collect().toSeq
+      finally spark.conf.unset(key)
+    // the last session of the user with the latest event closes only in
+    // the no-data batch that follows the sentinel
+    assert(expected.nonEmpty)
+    assert(got == expected,
+      s"${expected.length - got.length} sessions never timed out")
+  }
+
   test("toParquetSink lands the full stream as parquet with a checkpoint") {
     import org.apache.spark.sql.types._
     val staged = java.nio.file.Files.createTempDirectory("graft-sink-in")

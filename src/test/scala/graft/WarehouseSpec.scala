@@ -222,15 +222,159 @@ class WarehouseSpec extends SparkSpec {
 
   test("chunked load writes multiple files for multi-chunk data") {
     val wh = freshWh()
+    val limit = 2048L
+    // three input partitions and no shuffle, so the load and the
+    // reference cut the same row sequences; row sizes vary so the
+    // greedy packing leaves uneven chunks
+    val df = spark.range(0, 400, 1, 3).select(col("id"),
+      expr("repeat('x', cast(id % 37 as int) + 10)").as("payload"))
+    val sized = graft.ingest.Ingest.prepare(df)
+    val ref = graft.ingest.Chunker.greedyChunkIds(sized
+        .withColumn("_sz", graft.ingest.Ingest.rowJsonSize(sized)), "_sz", limit)
+      .fold(e => fail(e.message), identity)
+    // (rows, JSON bytes) of every reference chunk
+    val refChunks = try ref.df.groupBy("_chunk")
+        .agg(count(lit(1)), sum("_sz")).collect()
+        .map(r => (r.getLong(1), r.getLong(2))).toSeq.sorted
+      finally ref.unpersist()
+    def onDisk() = new java.io.File(s"${wh.warehouseDir}/ch").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.getPath).toSet
+    // an empty batch creates the table (its schema file) and adds nothing
+    assert(wh.load("ch", df.limit(0), sizeLimit = limit) == Right(0L))
+    val created = onDisk()
+    assert(wh.load("ch", df, sizeLimit = limit) == Right(400L))
+    val files = (onDisk() -- created).toSeq
+    assert(files.length == ref.chunks && ref.chunks >= 5,
+      s"${files.length} files for ${ref.chunks} chunks")
+    val fileChunks = files.map { f =>
+      val d = spark.read.parquet(f)
+      val r = d.agg(count(lit(1)), sum(graft.ingest.Ingest.rowJsonSize(d)))
+        .head()
+      (r.getLong(0), r.getLong(1))
+    }.sorted
+    assert(fileChunks.forall(_._2 <= limit), fileChunks)
+    assert(fileChunks == refChunks)
+    val got = wh.get("ch").toOption.get.orderBy("id").collect().toSeq
+    assert(got == df.orderBy("id").collect().toSeq)
+    // an empty batch that adds a column: get sees it, as describe does,
+    // before any row carries it
+    val widened = df.limit(0).withColumn("score", lit(null).cast("double"))
+    assert(wh.load("ch", widened, sizeLimit = limit) == Right(0L))
+    val evolved = wh.get("ch").toOption.get
+    assert(evolved.schema.fieldNames.toSeq == Seq("id", "payload", "score"))
+    assert(wh.describe("ch").exists(_.contains("score")))
+    assert(evolved.filter(col("score").isNull).count() == 400L)
+    assert(spark.table("ch").columns.contains("score"))
+    assert(wh.load("ch_empty", df.limit(0), sizeLimit = limit) == Right(0L))
+    assert(wh.get("ch_empty").map(_.schema.fieldNames.toSeq) ==
+      Right(Seq("id", "payload")))
+    assert(wh.get("ch_empty").toOption.get.count() == 0L)
+    assert(wh.describe("ch_empty").exists(_.contains("payload")))
+  }
+
+  test("a row over the size limit refuses the load before its commit: " +
+    "generation, rows and manifest unchanged, no staging left") {
+    val wh = freshWh()
     val spark0 = spark
     import spark0.implicits._
-    // ~200 rows × ~60 bytes of JSON each with a 2 KiB limit → ≥5 chunks
-    val df = (1L to 200L).map(i => (i, "x" * 40)).toDF("id", "payload")
-    assert(wh.load("ch", df, sizeLimit = 2048L) == Right(200L))
-    val files = new java.io.File(s"${wh.warehouseDir}/ch")
-      .listFiles().count(f => f.getName.endsWith(".parquet"))
-    assert(files >= 5, s"expected >=5 chunk files, got $files")
-    assert(wh.get("ch").toOption.get.count() == 200L)
+    val limit = 4096L
+    assert(wh.load("ov", (1L to 10L).map(i => (i, "a")).toDF("id", "payload"),
+      sizeLimit = limit) == Right(10L))
+    val gen0 = wh.currentGeneration("ov")
+    val live0 = wh.get("ov").toOption.get.inputFiles.toSet
+    def onDisk() = new java.io.File(s"${wh.warehouseDir}/ov").listFiles()
+      .map(_.getName).filter(_.endsWith(".parquet")).toSet
+    val disk0 = onDisk()
+    val batch = Seq((11L, "b"), (12L, "x" * 5000), (13L, "c"))
+      .toDF("id", "payload").repartition(2)
+    val bigRow = batch.filter(col("id") === 12L)
+      .select(graft.ingest.Ingest.rowJsonSize(batch)).as[Int].head().toLong
+    assert(wh.load("ov", batch, sizeLimit = limit) ==
+      Left(RowOversize(bigRow, limit)))
+    assert(wh.currentGeneration("ov") == gen0)
+    assert(wh.get("ov").toOption.get.inputFiles.toSet == live0)
+    assert(wh.get("ov").toOption.get.count() == 10L)
+    assert(onDisk() == disk0, "the refused load left data files behind")
+    assert(!new java.io.File(wh.warehouseDir).list()
+      .exists(_.contains("__append_tmp_")), "staging dir left behind")
+  }
+
+  test("a load into an existing table is one Spark job, loadJson adds " +
+    "only its inference job, and the get after either runs none") {
+    val wh = freshWh()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    def jobsOf[A](body: => A): (A, Int) = {
+      org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark)
+      val j0 = jobs.get()
+      val r = body
+      org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark)
+      (r, jobs.get() - j0)
+    }
+    def lines(from: Int) = (from until from + 150).map(i =>
+      s"""{"id":$i,"name":"n$i","score":${i * 0.25}}""")
+    assert(wh.loadJson("jc", lines(0)) == Right(150L))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (json, jsonJobs) = jobsOf(wh.loadJson("jc", lines(150)))
+      assert(json == Right(150L))
+      assert(jsonJobs == 2, s"loadJson ran $jsonJobs jobs")
+      val (_, getJobs) = jobsOf(wh.get("jc"))
+      assert(getJobs == 0, s"get after loadJson ran $getJobs jobs")
+      val batch = spark.range(300, 450).select(col("id"),
+        concat(lit("n"), col("id").cast("string")).as("name"),
+        (col("id") * 0.25).as("score"))
+      val (df, dfJobs) = jobsOf(wh.load("jc", batch))
+      assert(df == Right(150L))
+      assert(dfJobs == 1, s"load(df) ran $dfJobs jobs")
+      val (all, getJobs2) = jobsOf(wh.get("jc"))
+      assert(getJobs2 == 0, s"get after load ran $getJobs2 jobs")
+      assert(all.toOption.get.count() == 450L)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("after every verb, get's schema equals a full mergeSchema read of " +
+    "the live generation's files") {
+    val wh = freshWh()
+    val spark0 = spark
+    import spark0.implicits._
+    val rnd = new scala.util.Random(7)
+    def reference(): Unit = {
+      val live = wh.get("sd").toOption.get
+      // the served frame also reads the deletion vectors' files
+      val dataFiles = live.inputFiles.toSeq.filterNot(_.contains("/_graft_dv/"))
+      val full = spark.read.option("mergeSchema", "true").parquet(dataFiles: _*)
+      assert(live.schema == full.schema,
+        s"\nserved:    ${live.schema.treeString}\nreference: ${full.schema.treeString}")
+    }
+    def step(label: String)(verb: => Either[WarehouseError, Any]): Unit = {
+      verb.fold(e => fail(s"$label: ${e.message}"), _ => ())
+      withClue(label)(reference())
+    }
+    val ids = rnd.shuffle((1L to 80L).toList)
+    step("load")(wh.load("sd",
+      ids.take(30).map(i => (i, s"n$i")).toDF("id", "name")))
+    // one row per chunk: forty added files, each footer read on the driver
+    step("load adding a column, one file a row")(wh.load("sd",
+      ids.slice(30, 70).map(i => (i, s"n$i", rnd.nextInt(100) * 0.5))
+        .toDF("id", "name", "score"), sizeLimit = 48L))
+    step("loadJson with a nested record")(wh.loadJson("sd",
+      ids.drop(70).map(i => s"""{"id":$i,"name":"j$i",""" +
+        s""""geo":{"lat":${rnd.nextInt(90)}.5,"tag":"t$i"}}""")))
+    step("updateWhereMor")(wh.updateWhereMor("sd",
+      Map("score" -> lit(1.5)), col("id") <= 10L))
+    step("upsert")(wh.upsert("sd",
+      Seq((ids.head, "up", 2.5), (1000L, "fresh", 3.5))
+        .toDF("id", "name", "score"), Seq("id")))
+    step("compactSmall")(wh.compactSmall("sd"))
+    step("deleteWhere")(wh.deleteWhere("sd", col("id") % 3 === 0L))
+    assert(wh.get("sd").toOption.get.count() ==
+      (ids :+ 1000L).count(_ % 3 != 0))
   }
 
   test("upsert replaces matched keys, appends fresh keys, preserves meta") {
