@@ -77,16 +77,24 @@ object Dedup {
                        wordGrams: Int = 0): Column =
     signatureOverHashes(shingleHashes(text, shingleK, wordGrams), numHashes)
 
-  /** Hashed shingles of a text column (one xxhash64 pass per shingle).
-    * Materialize this once (its own projection) before the signature
-    * kernel consumes it.
+  /** Hashed shingles of a text column: xxhash64 (seed 42) per shingle.
+    * Character shingles come from the fused one-pass kernel
+    * (graft.functions.CharShingleHashes), word n-grams from a per-gram
+    * `transform`. Null text yields null (no shingles). Materialize this
+    * once (its own projection) before the signature kernel consumes it.
     */
-  def shingleHashes(text: Column, shingleK: Int = 5, wordGrams: Int = 0): Column = {
-    val shingles =
-      if (wordGrams > 0) TextAnalysis.wordNgrams(text, wordGrams)
-      else TextAnalysis.charShingles(text, shingleK)
-    transform(shingles, s => xxhash64(s))
-  }
+  def shingleHashes(text: Column, shingleK: Int = 5, wordGrams: Int = 0): Column =
+    if (wordGrams > 0)
+      transform(TextAnalysis.wordNgrams(text, wordGrams), s => xxhash64(s))
+    else graft.functions.SketchFunctions.char_shingle_hashes(text, shingleK)
+
+  /** The composed form of the character path of [[shingleHashes]]:
+    * `substr` windows hashed one lambda call each. Kept as the
+    * differential-spec oracle of the kernel (which differs on null text
+    * only: this form hashes one null shingle to the seed, 42).
+    */
+  private[graft] def charShingleHashesComposable(text: Column, shingleK: Int): Column =
+    transform(TextAnalysis.charShingles(text, shingleK), s => xxhash64(s))
 
   /** MinHash signature from a pre-computed shingle-hash array column —
     * the fused codegen kernel (graft.functions.MinHashFromHashes): all
@@ -103,18 +111,21 @@ object Dedup {
     * shingle. Staged projections so each expensive array is computed
     * once per row (an expression subtree referenced inside a
     * higher-order lambda re-evaluates per element, so every stage must
-    * hand the next one a plain attribute).
+    * hand the next one a plain attribute). Null-text rows are dropped
+    * first: they have no shingles, so no signature and no band rows.
     */
   private def xxhashShingleRows(df: DataFrame, idCol: Column, textCol: Column,
-                                shingleK: Int, wordGrams: Int): DataFrame =
+                                shingleK: Int, wordGrams: Int): DataFrame = {
+    val rows = df.filter(textCol.isNotNull)
     if (wordGrams > 0)
-      df.select(idCol.as("id"), TextAnalysis.tokens(textCol).as("_t"))
+      rows.select(idCol.as("id"), TextAnalysis.tokens(textCol).as("_t"))
         .select(col("id"), transform(
           TextAnalysis.wordNgramsOver(col("_t"), wordGrams),
           s => xxhash64(s)).as("_sh"))
     else
-      df.select(idCol.as("id"),
+      rows.select(idCol.as("id"),
         shingleHashes(textCol, shingleK, wordGrams).as("_sh"))
+  }
 
   /** Banded rows `(id, band, band_hash)` from an `(id, sig)` table —
     * xxhash64 over each band's signature slice. The single definition
@@ -342,40 +353,44 @@ object Dedup {
     * candidates into dedup GROUPS (canonical = min id per component =
     * the emitted `component`).
     *
-    * Min-label propagation with self-loops, iterated TO FIXPOINT: each
-    * round every node takes the minimum label over its closed
-    * neighborhood, so a component's minimum id travels one hop per
-    * round; the loop stops when a full `checkpointEvery`-round segment
-    * changes no label (labels only ever decrease, so "unchanged over a
-    * segment" implies the fixpoint was already reached at its start),
-    * and THROWS if no unchanged segment is observed within
-    * `maxIterations` rounds — a component with diameter beyond the
-    * budget must fail loudly, never silently keep two labels. Since
-    * detection needs one trailing unchanged segment, size the budget to
-    * exceed the largest expected diameter by at least `checkpointEvery`
-    * rounds (the defaults leave ~195 effective rounds).
+    * Min-label propagation with self-loops, iterated TO FIXPOINT: every
+    * node's label starts at its own id, and each round every node takes
+    * the minimum label over its closed neighborhood, so a component's
+    * minimum id travels one hop per round. Round 1 therefore needs no
+    * label table: it is the edge list grouped by source, keeping the
+    * minimum destination. Every round is materialized once
+    * (`localCheckpoint`), and the probe that decides whether it changed
+    * anything runs inside that same job: for integral ids (and scale-0
+    * decimals) an `Observation` on the checkpoint reads the exact
+    * DECIMAL label sum, which strictly decreases iff some label did
+    * (labels only ever decrease); round 1 observes the initial sum, the
+    * sum of the node ids, beside its own. For any other id type the
+    * probe is a separate id-keyed join of the two materialized label
+    * tables that early-exits on the first decreased label. The loop
+    * stops at the first round that changes nothing, so a component of
+    * diameter d costs d + 1 rounds, and it THROWS if no such round is
+    * observed within `maxIterations` rounds — a component whose
+    * diameter reaches the budget must fail loudly, never silently keep
+    * two labels.
     *
     * Scale shape: the edge list is `localCheckpoint`ed once up front
     * (the upstream candidate pipeline — LSH banding, bucket joins —
-    * computes exactly once, not once per round), and the label table is
-    * checkpointed every `checkpointEvery` rounds so both the Catalyst
-    * plan depth and the RDD lineage stay bounded no matter how deep a
-    * boilerplate/license chain runs. Each round is one join + one
-    * partial aggregate keyed on node id. The convergence probe per
-    * segment: for integral/decimal ids the exact DECIMAL label sum
-    * strictly decreases iff any node changed (one shuffle-free scalar
-    * aggregate over materialized data); for any other id type the probe
-    * is an id-keyed join of the two materialized label tables that
-    * early-exits on the first decreased label. Superseded checkpoints
-    * are unpersisted as the loop advances; the RETURNED labels stay
-    * checkpointed for reuse — call [[releaseComponents]] once the
-    * result is consumed.
+    * computes exactly once, not once per round), and since every round
+    * is checkpointed, both the Catalyst plan depth and the RDD lineage
+    * stay one round deep no matter how deep a boilerplate/license chain
+    * runs. Each round is one join + one partial aggregate keyed on node
+    * id; a label table under Spark's broadcast threshold (its size is
+    * known from the row count the previous round observed) is
+    * broadcast into the join, so only the aggregate shuffles. Superseded
+    * checkpoints are unpersisted as the loop advances; the RETURNED
+    * labels stay checkpointed for reuse — call [[releaseComponents]]
+    * once the result is consumed.
     *
     * `shortcut = false` (default) runs linear rounds — NOT
     * pointer-jumped: the jump is a self-join of the evolving label
     * table whose unresolved plan doubles per round if left lazy, and
     * near-dup graphs converge in (single-digit) diameter rounds anyway.
-    * `shortcut = true` enables pointer jumping from round one for
+    * `shortcut = true` enables pointer jumping from round two for
     * KNOWN-high-diameter graphs (citation chains, linked boilerplate):
     * each round adds a label-of-label shortcut after the propagation,
     * made safe by materializing every round via `localCheckpoint`
@@ -389,25 +404,23 @@ object Dedup {
     * hops, and the caller never needs to know the diameter up front.
     */
   def connectedComponents(pairs: DataFrame, maxIterations: Int = 200,
-                          checkpointEvery: Int = 5,
                           shortcut: Boolean = false,
                           shortcutAfter: Int = 25): DataFrame = {
     require(maxIterations >= 1, "maxIterations must be >= 1")
-    require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
     require(shortcutAfter >= 1, "shortcutAfter must be >= 1")
-    // materialize the pair list ONCE (r19): edges + nodes + the initial
-    // label table reference `pairs` six times between them, and the
-    // caller's plan is typically an expensive candidate pipeline (LSH
-    // banding, bucket joins, signature verification) — without this
-    // checkpoint every one of those references re-ran the whole
-    // pipeline. Released as soon as the derived tables are materialized.
-    val p = pairs.localCheckpoint()
-    val nodes = p.select(col("id_a").as("id"))
-      .union(p.select(col("id_b").as("id"))).distinct()
-    val edges = p.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(p.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .union(nodes.select(col("id").as("src"), col("id").as("dst")))
-      .repartition(col("dst"))
+    // the edge list with self-loops, from ONE reference to `pairs` (the
+    // caller's plan is typically an expensive candidate pipeline — LSH
+    // banding, bucket joins, signature verification — that must run
+    // once), materialized once. A node's self-loop repeats once per
+    // incident pair; the partial aggregation ahead of every round's
+    // shuffle folds the repeats, so no deduplicating shuffle is paid
+    val edges = pairs
+      .select(explode(array(
+        struct(col("id_a").as("src"), col("id_b").as("dst")),
+        struct(col("id_b").as("src"), col("id_a").as("dst")),
+        struct(col("id_a").as("src"), col("id_a").as("dst")),
+        struct(col("id_b").as("src"), col("id_b").as("dst")))).as("_e"))
+      .select(col("_e.src").as("src"), col("_e.dst").as("dst"))
       .localCheckpoint()
     // the sum probe is only sound where the decimal(38,0) cast is EXACT
     // — integral types and scale-0 decimals; a scaled decimal would
@@ -422,17 +435,58 @@ object Dedup {
         case _ => false
       }
     }
-    def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val r = df.agg(sum(col("component").cast("decimal(38,0)"))).head()
-      if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0)
+    // the planner cannot see a checkpoint's size, so a label table under
+    // Spark's own broadcast threshold is broadcast explicitly (the
+    // checkpoint job observes its row count): the round's join then
+    // shuffles neither side
+    val broadcastBytes =
+      org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
+    final case class Labels(df: DataFrame, rows: Long,
+                            sum: java.math.BigDecimal) {
+      def joinSide: DataFrame =
+        if (broadcastBytes >= 0 &&
+            rows * (8L + df.schema.defaultSize) <= broadcastBytes) broadcast(df)
+        else df
     }
-    var labels = nodes.withColumn("component", col("id")).localCheckpoint()
-    // edges + labels are materialized: the caller's pipeline is not
-    // consulted again
-    org.apache.spark.sql.GraftColumnBridge.unpersistCheckpoint(p)
-    var prevSum = if (sumProbe) labelSum(labels) else null
-    var converged = false
-    var rounds = 0
+    def decimalSum(c: String) = sum(col(c).cast("decimal(38,0)"))
+    def sumOf(v: Any): java.math.BigDecimal =
+      if (v == null) java.math.BigDecimal.ZERO
+      else v.asInstanceOf[java.math.BigDecimal]
+    /** Checkpoint a round's labels. The checkpoint job observes the row
+      * count and, with the sum probe, the label sum — for round 1 also
+      * the id sum, which is the initial labels' sum.
+      */
+    def materialize(df: DataFrame, first: Boolean)
+        : (Labels, java.math.BigDecimal) = {
+      val obs = new org.apache.spark.sql.Observation()
+      val sums =
+        if (!sumProbe) Nil
+        else decimalSum("component").as("labels") +:
+          (if (first) Seq(decimalSum("id").as("ids")) else Nil)
+      val m = df.observe(obs, count(lit(1)).as("rows"), sums: _*)
+        .localCheckpoint()
+      val got = obs.get
+      val rows = got("rows").asInstanceOf[Number].longValue
+      if (!sumProbe) (Labels(m, rows, null), null)
+      else (Labels(m, rows, sumOf(got("labels"))),
+        if (first) sumOf(got("ids")) else null)
+    }
+    // one propagation round over a materialized label table
+    def propagate(labels: Labels): DataFrame =
+      edges.alias("e")
+        .join(labels.joinSide.alias("l"), col("e.dst") === col("l.id"))
+        .groupBy(col("e.src").as("id"))
+        .agg(min(col("l.component")).as("component"))
+    // round 1 from the edge list: every label starts at the node's id,
+    // so the closed neighborhood's minimum label is its minimum id
+    val (first, idSum) = materialize(
+      edges.groupBy(col("src").as("id")).agg(min(col("dst")).as("component")),
+      first = true)
+    var labels = first
+    var converged =
+      if (sumProbe) labels.sum.compareTo(idSum) == 0
+      else labels.df.where(col("component") < col("id")).isEmpty
+    var rounds = 1
     // AUTO-ESCALATION: a caller who doesn't know the graph's diameter
     // shouldn't have to. Linear rounds are cheaper while components are
     // shallow (the near-dup case, single-digit rounds); if the walk is
@@ -443,18 +497,8 @@ object Dedup {
     var jumping = shortcut
     while (!converged && rounds < maxIterations) {
       if (!jumping && rounds >= shortcutAfter) jumping = true
-      val materialized = if (!jumping) {
-        val segment = math.min(checkpointEvery, maxIterations - rounds)
-        var next = labels
-        for (_ <- 1 to segment) {
-          next = edges.alias("e")
-            .join(next.alias("l"), col("e.dst") === col("l.id"))
-            .groupBy(col("e.src").as("id"))
-            .agg(min(col("l.component")).as("component"))
-        }
-        rounds += segment
-        next.localCheckpoint()
-      } else {
+      val (next, _) = if (!jumping) materialize(propagate(labels), first = false)
+      else {
         // POINTER JUMPING round: one neighbor propagation, then one
         // label-of-label shortcut — component chains halve per round, so
         // convergence takes O(log diameter) rounds instead of diameter.
@@ -466,48 +510,37 @@ object Dedup {
         // itself a node id (labels are minima over node ids), so the
         // shortcut lookup is total and the label order stays
         // anti-monotone — the same convergence probes apply.
-        val prop = edges.alias("e")
-          .join(labels.alias("l"), col("e.dst") === col("l.id"))
-          .groupBy(col("e.src").as("id"))
-          .agg(min(col("l.component")).as("component"))
-          .localCheckpoint()
-        val shortcutted = prop.alias("a")
-          .join(prop.alias("b"), col("a.component") === col("b.id"))
-          .select(col("a.id").as("id"), col("b.component").as("component"))
-        rounds += 1
-        val m = shortcutted.localCheckpoint()
-        org.apache.spark.sql.GraftColumnBridge.unpersistCheckpoint(prop)
+        val prop = Labels(propagate(labels).localCheckpoint(), labels.rows, null)
+        val m = materialize(prop.df.alias("a")
+          .join(prop.joinSide.alias("b"), col("a.component") === col("b.id"))
+          .select(col("a.id").as("id"), col("b.component").as("component")),
+          first = false)
+        org.apache.spark.sql.GraftColumnBridge.unpersistCheckpoint(prop.df)
         m
       }
+      rounds += 1
       // anti-monotone labels: either the exact decimal sum strictly
       // decreased, or (fallback) some node's label is strictly smaller
-      if (sumProbe) {
-        val curSum = labelSum(materialized)
-        converged = curSum.compareTo(prevSum) == 0
-        prevSum = curSum
-      } else {
-        converged = materialized.alias("n")
-          .join(labels.alias("p"), col("n.id") === col("p.id"))
+      converged =
+        if (sumProbe) next.sum.compareTo(labels.sum) == 0
+        else next.df.alias("n")
+          .join(labels.df.alias("p"), col("n.id") === col("p.id"))
           .where(col("n.component") < col("p.component"))
           .isEmpty
-      }
       // NB: Dataset.unpersist only clears CacheManager entries; a local
       // checkpoint persists at the RDD level, released via the bridge
-      org.apache.spark.sql.GraftColumnBridge.unpersistCheckpoint(labels)
-      labels = materialized
-    }
-    if (!converged) {
-      org.apache.spark.sql.GraftColumnBridge.unpersistCheckpoint(labels)
-      org.apache.spark.sql.GraftColumnBridge.unpersistCheckpoint(edges)
-      throw new IllegalStateException(
-        s"connectedComponents observed no fixpoint within $maxIterations " +
-          "rounds: the largest component diameter is within one probe " +
-          s"segment of (or exceeds) the budget — raise maxIterations so it " +
-          s"exceeds the expected diameter by at least checkpointEvery " +
-          s"($checkpointEvery) rounds")
+      org.apache.spark.sql.GraftColumnBridge.unpersistCheckpoint(labels.df)
+      labels = next
     }
     org.apache.spark.sql.GraftColumnBridge.unpersistCheckpoint(edges)
-    labels
+    if (!converged) {
+      org.apache.spark.sql.GraftColumnBridge.unpersistCheckpoint(labels.df)
+      throw new IllegalStateException(
+        s"connectedComponents observed no fixpoint within $maxIterations " +
+          "rounds: the largest component diameter reaches the budget — " +
+          "raise maxIterations above the expected diameter")
+    }
+    labels.df
   }
 
   /** Release the checkpointed blocks behind a [[connectedComponents]]
@@ -532,15 +565,28 @@ object Dedup {
                         threshold: Double = 0.5, numHashes: Int = 32,
                         bands: Int = 8, shingleK: Int = 5, wordGrams: Int = 0,
                         maxBucket: Int = 256): DataFrame = {
-    val sigs = xxhashShingleRows(df, idCol, textCol, shingleK, wordGrams)
-      .filter(size(col("_sh")) > 0)
-      .select(col("id"), signatureOverHashes(col("_sh"), numHashes).as("sig"))
-      .localCheckpoint()
+    val sigs = nearDupSignatures(df, idCol, textCol, numHashes, shingleK,
+      wordGrams).localCheckpoint()
     verifyAndCluster(sigs,
-      candidatesFromBuckets(xxhashBandsOverSigs(sigs, numHashes, bands),
+      candidatesFromBuckets(
+        xxhashBandsOverSigs(sigs.filter(col("sig").isNotNull), numHashes, bands),
         Seq("band", "band_hash"), "id", maxBucket),
       threshold)
   }
+
+  /** `(id, sig)` for [[nearDupComponents]]: a document with no shingles
+    * gets a null signature, which the caller filters out after
+    * materializing. Filtering on the shingle array before the signature
+    * projection would be pushed below the shingle projection, and the
+    * shingle kernel would then run twice per document (once in the
+    * filter, once in the projection).
+    */
+  private[graft] def nearDupSignatures(df: DataFrame, idCol: Column,
+                                       textCol: Column, numHashes: Int,
+                                       shingleK: Int, wordGrams: Int): DataFrame =
+    xxhashShingleRows(df, idCol, textCol, shingleK, wordGrams)
+      .select(col("id"), when(size(col("_sh")) > 0,
+        signatureOverHashes(col("_sh"), numHashes)).as("sig"))
 
   /** Estimated Jaccard from signature agreement, for candidate scoring.
     * Runs once PER CANDIDATE PAIR in every near-dup verify, so it is the

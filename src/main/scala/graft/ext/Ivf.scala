@@ -122,12 +122,18 @@ object Ivf {
                      idCol: String, vecCol: String): DataFrame =
     queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
       .withColumn("_scores", centroidScores(col("qvec"), model))
-      .withColumn("centroid", explode(slice(
-        array_sort(zip_with(col("_scores"),
-            sequence(lit(0), lit(model.numCentroids - 1)),
-            (s, i) => struct(s.as("s"), i.as("i")))),
-        1, nProbe)("i")))
+      .withColumn("centroid",
+        explode(slice(probeOrder(col("_scores"), model), 1, nProbe)))
       .drop("_scores")
+
+  /** Every cell id in a query's probe order — ascending (score, cell
+    * id) over a materialized score array; a width-p probe scans the
+    * first p.
+    */
+  private[ext] def probeOrder(scores: Column, model: Model): Column =
+    array_sort(zip_with(scores,
+        sequence(lit(0), lit(model.numCentroids - 1)),
+        (s, i) => struct(s.as("s"), i.as("i"))))("i")
 
   /** Rank candidates within the probed buckets: exact cosine, per-query
     * top-k.

@@ -176,7 +176,46 @@ object IvfPq {
                       kSub: Int = 16, idCol: String = "vec_id",
                       vecCol: String = "embedding", sampleSize: Int = 4096,
                       iterations: Int = 8, seed: Long = 42L,
-                      earlyStop: Boolean = true): CalibratedIndex = {
+                      earlyStop: Boolean = true): CalibratedIndex =
+    calibratedBuild(corpus, nCentroids, m, k, targetRecall, nQueries,
+      maxProbe, candidateGrid, kSub, idCol, vecCol, sampleSize, iterations,
+      seed, earlyStop, onePassCurve)
+
+  /** [[buildCalibrated]] with the per-width grid loop it replaced: one
+    * probe → ADC pool → collect chain per probe width, against a
+    * separately sampled brute-force truth. Kept as the differential
+    * reference for the one-pass curve (the calibrations must be
+    * identical).
+    */
+  private[graft] def buildCalibratedPerWidth(corpus: DataFrame,
+      nCentroids: Int, m: Int, k: Int = 10, targetRecall: Double = 0.9,
+      nQueries: Int = 32, maxProbe: Int = 0,
+      candidateGrid: Seq[Int] = Seq(64, 256, 1024), kSub: Int = 16,
+      idCol: String = "vec_id", vecCol: String = "embedding",
+      sampleSize: Int = 4096, iterations: Int = 8, seed: Long = 42L,
+      earlyStop: Boolean = true): CalibratedIndex =
+    calibratedBuild(corpus, nCentroids, m, k, targetRecall, nQueries,
+      maxProbe, candidateGrid, kSub, idCol, vecCol, sampleSize, iterations,
+      seed, earlyStop, perWidthCurve)
+
+  /** What a recall-curve evaluator needs: the materialized index, its
+    * model, the lazy seeded query sample `(vec_id, embedding)`, and the
+    * grid to walk.
+    */
+  private final case class CurveInput(snap: DataFrame, model: Model,
+                                      queries: DataFrame, k: Int,
+                                      probeCap: Int, grid: Seq[Int],
+                                      targetRecall: Double,
+                                      earlyStop: Boolean)
+
+  private def calibratedBuild(corpus: DataFrame, nCentroids: Int, m: Int,
+                              k: Int, targetRecall: Double, nQueries: Int,
+                              maxProbe: Int, candidateGrid: Seq[Int],
+                              kSub: Int, idCol: String, vecCol: String,
+                              sampleSize: Int, iterations: Int, seed: Long,
+                              earlyStop: Boolean,
+                              curveOf: CurveInput => Seq[(Int, Int, Double)])
+      : CalibratedIndex = {
     require(targetRecall > 0 && targetRecall <= 1, "targetRecall in (0,1]")
     require(candidateGrid.nonEmpty && candidateGrid.forall(_ >= 1),
       "candidateGrid must be non-empty positive budgets")
@@ -193,53 +232,193 @@ object IvfPq {
       if (maxProbe >= 1) math.min(maxProbe, model.ivf.numCentroids)
       else model.ivf.numCentroids
     val snap = index(corpus, model, idCol, vecCol).localCheckpoint()
-    val truth = Similarity.bruteForceTopK(
-      snap.select(col("neighbor_id").as("vec_id"),
-        col("nvec").as("embedding")),
-      corpus.select(col(idCol).as("vec_id"), col(vecCol).as("embedding"))
-        .orderBy(org.apache.spark.sql.functions.rand(seed + 1).asc)
-        .limit(nQueries),
-      k).select("query_id", "neighbor_id").localCheckpoint()
     try {
       val queries = corpus
         .select(col(idCol).as("vec_id"), col(vecCol).as("embedding"))
         .orderBy(org.apache.spark.sql.functions.rand(seed + 1).asc)
         .limit(nQueries)
+      val curve = curveOf(CurveInput(snap, model, queries, k, probeCap,
+        candidateGrid.distinct.sorted, targetRecall, earlyStop))
+      val reached = curve
+        .sortBy { case (p, c, _) => (p, c) }
+        .find(_._3 >= targetRecall)
+      val (rec, recC, est) = reached.getOrElse(curve.maxBy(_._3))
+      if (reached.isEmpty)
+        log.warn(s"IvfPq.buildCalibrated: best recall $est over the " +
+          s"grid never reaches target $targetRecall — widen the " +
+          "candidate grid, raise nCentroids, or dedup before indexing.")
+      val effective = rec * 2 <= model.ivf.numCentroids
+      if (!effective)
+        log.warn(s"IvfPq.buildCalibrated: target recall needs nProbe=" +
+          s"$rec of ${model.ivf.numCentroids} cells — pruning is " +
+          "ineffective on this corpus (cluster-free regime).")
+      // return the MATERIALIZED snapshot — ownership passes to the
+      // caller (release())
+      CalibratedIndex(model, snap,
+        PqCalibration(rec, recC, est, targetRecall, reached.nonEmpty,
+          effective, curve))
+    } catch {
+      case e: Throwable =>
+        org.apache.spark.sql.GraftColumnBridge.unpersistCheckpoint(snap)
+        throw e
+    }
+  }
+
+  /** The grid walk both evaluators share: (p asc, c asc) — the
+    * recommendation's preference order — so with `earlyStop` it halts
+    * inside the first width reaching target and the recommendation is
+    * IDENTICAL to the full sweep's (only the recorded curve is the
+    * evaluated prefix); earlyStop = false studies the whole
+    * (non-monotone) surface. `recallAt(p)` is called once per evaluated
+    * width and returns that width's recall per budget.
+    */
+  private def walkGrid(in: CurveInput)(recallAt: Int => Int => Double)
+      : Seq[(Int, Int, Double)] = {
+    val curveB = Seq.newBuilder[(Int, Int, Double)]
+    var stop = false
+    for (p <- 1 to in.probeCap if !stop) {
+      val recall = recallAt(p)
+      for (c <- in.grid if !stop) {
+        val r = recall(c)
+        curveB += ((p, c, r))
+        if (in.earlyStop && r >= in.targetRecall) stop = true
+      }
+    }
+    curveB.result()
+  }
+
+  /** Whether (x, xId) sorts before (y, yId) under Spark's order on
+    * doubles (-0.0 equals 0.0; NaN equals NaN and is the largest),
+    * ascending or descending, then id ascending: the `row_number`
+    * orders of the probe path, replayed on the driver.
+    */
+  private def sortsBefore(x: Double, xId: Long, y: Double, yId: Long,
+                          descending: Boolean): Boolean = {
+    val c = if (x == y) 0 else java.lang.Double.compare(x, y)
+    if (c != 0) (if (descending) c > 0 else c < 0) else xId < yId
+  }
+
+  /** The one-pass recall surface (the view of *Continuously Adaptive
+    * Similarity Search*, SIGMOD 2020: one pass yields the whole
+    * recall-versus-effort surface, and picking the knobs becomes a
+    * lookup). ONE job scans the index against the broadcast query
+    * sample (drawn once, by the broadcast) and computes, per (query,
+    * row), the exact cosine the truth ranks by and, for rows in the
+    * query's first `probeCap` cells, the cell's probe rank, the ADC
+    * distance and the quantized cosine the probe path rescores with.
+    * Windows per (query, cell) — one shuffle, and no task ranks more
+    * than one cell for one query — keep each cell's top-k by (cosine
+    * desc, id), and its top-maxC by (ADC, id). The rows are collected:
+    * at most nQueries·cells·(k + maxC), never the corpus. The truth is
+    * each query's top-k of its cells' top-k rows, in
+    * [[Similarity.bruteForceTopK]]'s order — exact, since a global
+    * top-k row is within the top-k of its own cell.
+    *
+    * Every grid point is then simulated on the driver, exactly: the
+    * budget-c candidates of a width-p probe are the top-c by (ADC, id)
+    * of the rows in the first p cells, and each of those is within the
+    * top-c of its own cell, hence in the pool (c ≤ maxC). They are
+    * rescored by (quantized cosine desc, id asc) — the probe path's
+    * ranking — and cut to k. Round11Spec pins the surface against
+    * per-point `topKPruned` probes, and the per-width reference
+    * ([[buildCalibratedPerWidth]]) against this one.
+    */
+  private def onePassCurve(in: CurveInput): Seq[(Int, Int, Double)] = {
+    val maxC = in.grid.max
+    // the sample's one reference: the broadcast job draws it once
+    val q = broadcast(in.queries.select(col("vec_id").as("query_id"),
+        col("embedding").as("qvec"))
+      .withColumn("_tables", Pq.queryTables(col("qvec"), in.model.pq))
+      .withColumn("_order", Ivf.probeOrder(
+        Ivf.centroidScores(col("qvec"), in.model.ivf), in.model.ivf)))
+    val scored = in.snap.join(q, col("query_id") =!= col("neighbor_id"))
+      .withColumn("_r",
+        array_position(col("_order"), col("centroid")).cast("int"))
+      .withColumn("_inPool", col("_r") <= in.probeCap)
+      .select(col("query_id"), col("neighbor_id"), col("centroid"),
+        col("_r"), col("_inPool"),
+        Similarity.cosineFloat(col("qvec"), col("nvec")).as("cos"),
+        when(col("_inPool"), Pq.adcDistance(col("_tables"), col("codes")))
+          .as("_adc"),
+        when(col("_inPool"),
+          Similarity.cosineQuantized(col("qvec"), col("nvec"))).as("_cq"),
+        spark_partition_id().as("_p"))
+    val perCell = Window.partitionBy(col("query_id"), col("centroid"))
+    // ids collected as LONG so the driver-side tiebreaks reproduce the
+    // engine's row_number order exactly — integral ids only (widening
+    // Int → Long preserves order)
+    val rows = scored
+      .withColumn("_tr", row_number().over(
+        perCell.orderBy(col("cos").desc, col("neighbor_id"))))
+      .withColumn("_cr", row_number().over(
+        perCell.orderBy(col("_adc").asc, col("neighbor_id"))))
+      .filter(col("_tr") <= in.k || (col("_inPool") && col("_cr") <= maxC))
+      .select(col("query_id").cast("long"), col("neighbor_id").cast("long"),
+        col("cos"), col("_tr") <= in.k, col("_r"), col("_adc"), col("_cq"),
+        col("_inPool") && col("_cr") <= maxC)
+      .collect()
+    // the truth: per query, the top-k by exact cosine of the per-cell
+    // top-k rows
+    val truth = rows.filter(_.getBoolean(3))
+      .groupBy(_.getLong(0)).values
+      .flatMap(_.sortWith((x, y) => sortsBefore(x.getDouble(2), x.getLong(1),
+          y.getDouble(2), y.getLong(1), descending = true))
+        .take(in.k).map(r => (r.getLong(0), r.getLong(1))))
+      .toSet
+    require(truth.nonEmpty,
+      "no ground-truth pairs — check that the corpus is non-empty")
+    // per query: its pool rows in (ADC, id) order
+    // `rank` is the row's cell's position in the query's probe order
+    final case class PoolRow(id: Long, rank: Int, adc: Double, cos: Double,
+                             truth: Boolean)
+    val pools = rows.filter(_.getBoolean(7))
+      .map(r => r.getLong(0) -> PoolRow(r.getLong(1), r.getInt(4),
+        r.getDouble(5), r.getDouble(6), truth((r.getLong(0), r.getLong(1)))))
+      .groupBy(_._1).values.map(_.map(_._2).sortWith((x, y) =>
+        sortsBefore(x.adc, x.id, y.adc, y.id, descending = false)))
+      .toSeq
+    val truthPairs = truth.size
+    walkGrid(in) { p =>
+      val inCells = pools.map(_.filter(_.rank <= p))
+      c => inCells.map { pool =>
+        pool.take(c)
+          .sortWith((x, y) =>
+            sortsBefore(x.cos, x.id, y.cos, y.id, descending = true))
+          .take(in.k).count(_.truth)
+      }.sum.toDouble / truthPairs
+    }
+  }
+
+  /** The r11 per-width grid evaluation, [[buildCalibratedPerWidth]]'s
+    * curve: per width p, ONE action computes the maxC-budget ADC pool
+    * and rescores it (for any c ≤ maxC the budget-c candidate set is
+    * EXACTLY the pool rows with _crank ≤ c — the global top-c of a
+    * superset pool is the global top-c), simulated driver-side on the
+    * collected skinny rows with the probe path's exact quantized-cosine
+    * ranking and tiebreak.
+    */
+  private def perWidthCurve(in: CurveInput): Seq[(Int, Int, Double)] = {
+    val snap = in.snap
+    val truth = Similarity.bruteForceTopK(
+      snap.select(col("neighbor_id").as("vec_id"),
+        col("nvec").as("embedding")),
+      in.queries, in.k).select("query_id", "neighbor_id").localCheckpoint()
+    try {
       val truthPairs = truth.count()
       require(truthPairs > 0,
         "no ground-truth pairs — check that the corpus is non-empty")
-      val grid = candidateGrid.distinct.sorted
-      // Grid evaluation, r11 form: ONE action per probe width scores
-      // EVERY candidate budget (the r10 form ran one topKPruned +
-      // semi-join count per (p, c) point — 32 actions at nCentroids=16
-      // × a 2-budget grid, ~18 s of a gate-scale build). Per width p the
-      // kernel computes the maxC-budget ADC pool once; for any c ≤ maxC
-      // the budget-c candidate set is EXACTLY the pool rows with
-      // _crank ≤ c (global top-c of a superset pool is the global
-      // top-c), and the rescore is simulated driver-side on the
-      // collected skinny rows — bounded by nQueries·max(grid) rows,
-      // never the corpus — with the probe path's exact quantized-cosine
-      // ranking and tiebreak (Round11Spec pins kernel ≡ per-point
-      // probes). The walk stays lexicographic (p asc, c asc) — the
-      // recommendation's preference order — so with `earlyStop` it
-      // halts inside the first width reaching target and the
-      // recommendation is IDENTICAL to the full sweep's (only the
-      // recorded curve is the evaluated prefix); pass earlyStop = false
-      // to study the whole (non-monotone) surface.
-      val maxC = grid.max
+      val maxC = in.grid.max
       val wLocal = Window.partitionBy(col("query_id"), col("_p"))
         .orderBy(col("_adc").asc, col("neighbor_id"))
       val wAdc = Window.partitionBy(col("query_id"))
         .orderBy(col("_adc").asc, col("neighbor_id"))
-      val qSide = queries
+      val qSide = in.queries
         .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-      val curveB = Seq.newBuilder[(Int, Int, Double)]
-      var stop = false
-      for (p <- 1 to probeCap if !stop) {
-        val probed = Ivf.probes(queries, model.ivf, p, idCol = "vec_id",
+      walkGrid(in) { p =>
+        val probed = Ivf.probes(in.queries, in.model.ivf, p, idCol = "vec_id",
           vecCol = "embedding")
         val q = probed.withColumn("_tables",
-          Pq.queryTables(col("qvec"), model.pq))
+          Pq.queryTables(col("qvec"), in.model.pq))
         val pool = broadcast(q.select("query_id", "centroid", "_tables"))
           .join(snap.select("centroid", "neighbor_id", "codes"),
             Seq("centroid"))
@@ -252,9 +431,6 @@ object IvfPq {
           .withColumn("_crank", row_number().over(wAdc))
           .filter(col("_crank") <= maxC)
           .select("query_id", "neighbor_id", "_crank")
-        // ids collected as LONG so the driver-side (cos desc, id asc)
-        // tiebreak reproduces the engine's row_number order exactly —
-        // integral ids only (widening Int → Long preserves order)
         val rows = pool
           .join(snap.select(col("neighbor_id"), col("nvec")),
             Seq("neighbor_id"))
@@ -270,42 +446,17 @@ object IvfPq {
           .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3),
             r.getBoolean(4)))
         val byQuery = rows.groupBy(_._1)
-        for (c <- grid if !stop) {
+        c => {
           // per query: budget-c candidates, rescored by (cos desc, id
           // asc) — the probe path's exact ranking — cut to k
           val hits = byQuery.valuesIterator.map { qr =>
             qr.filter(_._3 <= c)
               .sortBy { case (_, id, _, cos, _) => (-cos, id) }
-              .take(k).count(_._5)
+              .take(in.k).count(_._5)
           }.sum
-          val recall = hits.toDouble / truthPairs
-          curveB += ((p, c, recall))
-          if (earlyStop && recall >= targetRecall) stop = true
+          hits.toDouble / truthPairs
         }
       }
-      val curve = curveB.result()
-      val reached = curve
-        .sortBy { case (p, c, _) => (p, c) }
-        .find(_._3 >= targetRecall)
-      val (rec, recC, est) = reached.getOrElse(curve.maxBy(_._3))
-      if (reached.isEmpty)
-        log.warn(s"IvfPq.buildCalibrated: best recall $est over the " +
-          s"grid never reaches target $targetRecall — widen the " +
-          "candidate grid, raise nCentroids, or dedup before indexing.")
-      val effective = rec * 2 <= model.ivf.numCentroids
-      if (!effective)
-        log.warn(s"IvfPq.buildCalibrated: target recall needs nProbe=" +
-          s"$rec of ${model.ivf.numCentroids} cells — pruning is " +
-          "ineffective on this corpus (cluster-free regime).")
-      // return the MATERIALIZED snapshot — ownership passes to the
-      // caller (release()); only the truth checkpoint dies here
-      CalibratedIndex(model, snap,
-        PqCalibration(rec, recC, est, targetRecall, reached.nonEmpty,
-          effective, curve))
-    } catch {
-      case e: Throwable =>
-        org.apache.spark.sql.GraftColumnBridge.unpersistCheckpoint(snap)
-        throw e
     } finally
       org.apache.spark.sql.GraftColumnBridge.unpersistCheckpoint(truth)
   }

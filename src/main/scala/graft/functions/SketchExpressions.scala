@@ -93,6 +93,95 @@ case class MinHashFromHashes(child: Expression, numHashes: Int,
     copy(child = newChild)
 }
 
+/** xxhash64 (seed 42) of every `k`-character window of a string, in
+  * window order — bit-identical to
+  * `transform(TextAnalysis.charShingles(text, k), s => xxhash64(s))`:
+  * a text of `n ≥ k` characters yields the `n − k + 1` windows, a
+  * shorter one (the empty string included) yields one shingle, the
+  * whole text. Characters are counted the way `length`/`substr` count
+  * them (UTF-8 lead bytes, `UTF8String.numBytesForFirstByte`), and each
+  * window is hashed in place over the string's bytes, the way
+  * `xxhash64` hashes a string. The composed form builds a `substr`
+  * string per window and re-walks the text from its start for each
+  * one through interpreted lambda dispatch; this kernel walks the bytes
+  * once. A null text yields null: no shingles, so no signature.
+  */
+case class CharShingleHashes(child: Expression, k: Int)
+    extends UnaryExpression with Serializable {
+
+  require(k >= 1, s"shingle width must be >= 1, got $k")
+
+  override def prettyName: String = "char_shingle_hashes"
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    child.dataType match {
+      // the default collation only: xxhash64 hashes a collated string's
+      // collation key, not its bytes
+      case org.apache.spark.sql.types.StringType =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case other =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"$prettyName requires string, got ${other.sql}")
+    }
+
+  override def nullSafeEval(v: Any): Any =
+    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(
+      CharShingleHashes.hashes(
+        v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], k))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, input =>
+      s"""${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+         |  .fromPrimitiveArray(graft.functions.CharShingleHashes.hashes($input, $k));
+       """.stripMargin)
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object CharShingleHashes {
+  import org.apache.spark.unsafe.types.UTF8String
+  import org.apache.spark.sql.catalyst.expressions.XXH64
+
+  private val Seed = 42L
+
+  /** The kernel's loop, shared by the interpreted and generated paths.
+    * Two byte cursors bound the current window; each slides one
+    * character per shingle. A lead byte whose sequence runs past the
+    * end (invalid UTF-8) is clamped to the string's end.
+    */
+  def hashes(s: UTF8String, k: Int): Array[Long] = {
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    val nb = s.numBytes()
+    val n = s.numChars()
+    if (n < k) return Array(XXH64.hashUnsafeBytes(base, off, nb, Seed))
+    val out = new Array[Long](n - k + 1)
+    if (n == nb) { // every character is one byte
+      var w = 0
+      while (w < out.length) {
+        out(w) = XXH64.hashUnsafeBytes(base, off + w, k, Seed)
+        w += 1
+      }
+    } else {
+      def next(i: Int) = math.min(nb, i + UTF8String.numBytesForFirstByte(s.getByte(i)))
+      var start = 0
+      var end = 0
+      var c = 0
+      while (c < k) { end = next(end); c += 1 }
+      var w = 0
+      while (w < out.length) {
+        out(w) = XXH64.hashUnsafeBytes(base, off + start, end - start, Seed)
+        start = next(start)
+        if (end < nb) end = next(end)
+        w += 1
+      }
+    }
+    out
+  }
+}
+
 /** 64-bit SimHash from an `array<long>` of token hashes: per bit position
   * count +1/−1 by the token hash's bit, sign → bit of the result.
   */
@@ -472,6 +561,9 @@ object SketchFunctions {
   def sig_agreement(sigA: Column, sigB: Column): Column =
     GraftColumnBridge.column(SigAgreement(
       GraftColumnBridge.expression(sigA), GraftColumnBridge.expression(sigB)))
+
+  def char_shingle_hashes(text: Column, k: Int): Column =
+    GraftColumnBridge.column(CharShingleHashes(GraftColumnBridge.expression(text), k))
 
   def minhash_from_hashes(hashes: Column, numHashes: Int,
                           as: Seq[Long], bs: Seq[Long]): Column =

@@ -118,8 +118,9 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
         // columns. Merging unions the footers (older rows read null in
         // newer columns) at the cost of one parallel footer pass at
         // planning.
-        readManifestGen(name).filter(_.entries.nonEmpty) match {
-          case Some(gen) =>
+        readManifestGen(name).flatMap(gen =>
+            scanFrameFor(name, name, gen.header, gen.entries)) match {
+          case Some(raw) =>
             // zone-map skipping, TRANSPARENT: the scan's FileIndex is
             // wrapped so any predicate later pushed onto this frame —
             // DataFrame filter, SQL over the registered view, a DML
@@ -129,7 +130,6 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
             // list identically to the plain index. The scan PLAN itself
             // is served from the committed generation (zero directory
             // listing; merged schema cached per generation).
-            val raw = liveFrameOf(name, gen)
             // merge-on-read: rows tombstoned by pending deletion vectors
             // are filtered out at read time (anti-join on file+row
             // position). Tables never touched by MoR DML keep the plain
@@ -1852,12 +1852,14 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
     * passes the live generation under the table name; [[getAsOf]]
     * passes a retained one under a gen-suffixed key.
     * Same machinery both ways: seeded statuses, zero listing, pruning
-    * wrap, length-verify format.
+    * wrap, length-verify format. A generation that names no file has no
+    * scan (None), but is cached as an empty scan all the same, so the
+    * first append to a schemaless table inherits from it and reads only
+    * its own footers.
     */
   private def scanFrameFor(name: String, cacheKey: String, header: String,
                            entries: IndexedSeq[ManifestEntry])
       : Option[DataFrame] = {
-    if (entries.isEmpty) return None
     val rootQ = fs.makeQualified(tablePath(name))
     val prefix = rootQ.toUri.toString
     def status(e: ManifestEntry) =
@@ -1872,21 +1874,24 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
         // length and mtime, same order), so the footer merge over the
         // whole generation equals the cached merge folded with the added
         // files' merge — read only the added footers
-        val inherited = Option(cached)
-          .filter(c => c.entries.length <= entries.length &&
-            entries.startsWith(c.entries))
-          .map { c =>
-            val added = entries.drop(c.entries.length)
-            org.apache.spark.sql.GraftFileIndexBridge.mergeFooterSchemas(
-              spark, c.dataSchema, added.map(status))
-          }
+        val inherited =
+          if (entries.isEmpty) Some(new StructType())
+          else Option(cached)
+            .filter(c => c.entries.length <= entries.length &&
+              entries.startsWith(c.entries))
+            .map { c =>
+              val added = entries.drop(c.entries.length)
+              org.apache.spark.sql.GraftFileIndexBridge.mergeFooterSchemas(
+                spark, c.dataSchema, added.map(status))
+            }
         val (idx, ds) = org.apache.spark.sql.GraftFileIndexBridge
           .manifestIndex(spark, rootQ, entries.map(status), inherited)
         val fresh = ScanIndex(header, entries, idx, ds)
         scanIndexCache.put(cacheKey, fresh)
         fresh
       }
-    Some(org.apache.spark.sql.GraftFileIndexBridge.manifestFrame(
+    if (entries.isEmpty) None
+    else Some(org.apache.spark.sql.GraftFileIndexBridge.manifestFrame(
       spark, scan.index, scan.dataSchema,
       base =>
         if (!skippingEnabled) base

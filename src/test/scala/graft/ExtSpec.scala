@@ -128,8 +128,7 @@ class DedupSpec extends SparkSpec {
         // component = MIN member id; union-by-min keeps roots minimal
         find(v.toInt).toLong
       }).toMap
-      val comps = Dedup.connectedComponents(edges.toDF("id_a", "id_b"),
-        checkpointEvery = 4)
+      val comps = Dedup.connectedComponents(edges.toDF("id_a", "id_b"))
       val got = comps.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       Dedup.releaseComponents(comps)
       assert(got == expected, s"case $ci diverged from union-find")
@@ -143,7 +142,7 @@ class DedupSpec extends SparkSpec {
     // must still detect the fixpoint across a multi-segment chain
     val chain = (1 until 12).map(i => (f"doc-$i%03d", f"doc-${i + 1}%03d"))
     val pairs = chain.toDF("id_a", "id_b")
-    val got = Dedup.connectedComponents(pairs, checkpointEvery = 3)
+    val got = Dedup.connectedComponents(pairs)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(got == (1 to 12).map(i => f"doc-$i%03d" -> "doc-001").toMap)
     }
@@ -157,7 +156,7 @@ class DedupSpec extends SparkSpec {
     val chain = (1L until 16L).map(i => (i, i + 1))
     val star = Seq((100L, 101L), (100L, 102L), (100L, 103L))
     val pairs = (chain ++ star).toDF("id_a", "id_b")
-    val got = Dedup.connectedComponents(pairs, checkpointEvery = 4)
+    val got = Dedup.connectedComponents(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val expected = (1L to 16L).map(_ -> 1L).toMap ++
       Seq(100L, 101L, 102L, 103L).map(_ -> 100L).toMap
@@ -199,6 +198,35 @@ class DedupSpec extends SparkSpec {
     val comps = Dedup.nearDupComponents(distinctDocs, col("doc_id"), col("text"),
       wordGrams = 3)
     assert(comps.count() == 0L)
+  }
+
+  test("null-text documents have no shingles, signature, band rows or " +
+    "candidates, and never cluster together") {
+    val d = docs(1L -> base, 2L -> null,
+      3L -> "completely different content about distributed query engines",
+      4L -> null, 5L -> null)
+    for (wordGrams <- Seq(0, 3)) {
+      val sigs = d.select(col("doc_id"), Dedup.minhashSignature(col("text"),
+          wordGrams = wordGrams).as("sig"))
+        .collect().map(r => r.getLong(0) -> r.isNullAt(1)).toMap
+      assert(sigs == Map(1L -> false, 2L -> true, 3L -> false, 4L -> true,
+        5L -> true), s"wordGrams=$wordGrams: null text got a signature")
+      val banded = Dedup.minhashBands(d, col("doc_id"), col("text"),
+          wordGrams = wordGrams)
+        .select("id").distinct().collect().map(_.getLong(0)).toSet
+      assert(banded == Set(1L, 3L), s"wordGrams=$wordGrams: band rows $banded")
+      val cands = Dedup.minhashCandidates(d, col("doc_id"), col("text"),
+        wordGrams = wordGrams).collect()
+      assert(cands.isEmpty, s"wordGrams=$wordGrams: candidates ${cands.toSeq}")
+      val comps = Dedup.nearDupComponents(d, col("doc_id"), col("text"),
+        wordGrams = wordGrams)
+      val got = comps.collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
+      Dedup.releaseComponents(comps)
+      assert(got.isEmpty, s"wordGrams=$wordGrams: null texts clustered: $got")
+    }
+    val portable = Dedup.nearDupComponentsPortable(d, col("doc_id"), col("text"))
+    assert(portable.collect().isEmpty)
+    Dedup.releaseComponents(portable)
   }
 
   test("signature similarity ranks near-dups above unrelated") {

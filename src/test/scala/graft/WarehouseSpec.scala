@@ -338,6 +338,43 @@ class WarehouseSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("the first loadJson into a schemaless table runs the same two jobs " +
+    "as the second: it inherits the empty generation's cached scan") {
+    val wh = freshWh()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    def jobsOf[A](body: => A): (A, Int) = {
+      org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark)
+      val j0 = jobs.get()
+      val r = body
+      org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark)
+      (r, jobs.get() - j0)
+    }
+    def lines(from: Int) = (from until from + 150).map(i =>
+      s"""{"id":$i,"name":"n$i","score":${i * 0.25}}""")
+    assert(wh.create("sl").isRight)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (first, firstJobs) = jobsOf(wh.loadJson("sl", lines(0)))
+      assert(first == Right(150L))
+      val (second, secondJobs) = jobsOf(wh.loadJson("sl", lines(150)))
+      assert(second == Right(150L))
+      assert(firstJobs == 2 && secondJobs == 2,
+        s"loadJson ran $firstJobs jobs into the schemaless table, " +
+          s"$secondJobs on the second load")
+      val (all, getJobs) = jobsOf(wh.get("sl"))
+      assert(getJobs == 0, s"get after loadJson ran $getJobs jobs")
+      val df = all.toOption.get
+      assert(df.schema.fieldNames.toSet == Set("id", "name", "score"))
+      assert(df.count() == 300L)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("after every verb, get's schema equals a full mergeSchema read of " +
     "the live generation's files") {
     val wh = freshWh()
