@@ -68,15 +68,10 @@ object Graph {
     require(iters >= 0, "iters must be non-negative")
     require(dampingPct >= 0 && dampingPct <= 100, "dampingPct in [0,100]")
 
-    // Edges cross the wire ONCE, hash-partitioned by the per-iteration
-    // join key (r19): the previous checkpoint kept the distinct's
-    // (src, dst) partitioning, which the rank join cannot reuse, so
-    // every iteration re-shuffled the FULL edge list; with hash(src)
-    // each iteration shuffles only the node-sized rank table (guide
-    // §2.4 — establish the partitioning once).
+    // no repartition ahead of the checkpoint: a local checkpoint
+    // reports no partitioning, so the joins below shuffle anyway
     val e = edges.select(src.cast("long").as("src"), dst.cast("long").as("dst"))
       .distinct()
-      .repartition(col("src"))
       .localCheckpoint()
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
@@ -84,9 +79,8 @@ object Graph {
     val n = nodes.count()
     require(n > 0, "pageRank requires a non-empty edge list")
 
-    // out-degree groups on e's own partitioning (no exchange) and the
-    // loop-invariant e ⨝ outDeg join is co-partitioned — hoisted out of
-    // the loop and materialized once (r19: it was re-joined per pass)
+    // the loop-invariant e ⨝ outDeg join is hoisted out of the loop and
+    // materialized once (r19: it was re-joined per pass)
     val eDeg = e
       .join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
       .localCheckpoint()

@@ -1081,10 +1081,12 @@ object OpsQueries {
       }
     }),
 
-    // ---- merge-on-read DML (r10): deletion-vector sidecar instead of
-    // a file rewrite — DELETE appends (file, row-position) tombstones,
-    // UPDATE appends delta row versions + tombstones, reads anti-join
-    // them out, compact FOLDS them. The oracle replays the same verbs
+    // ---- merge-on-read DML (r10): deletion vectors instead of a file
+    // rewrite — DELETE commits a generation naming one vector file of
+    // (file, row-position) tombstones, UPDATE commits delta row
+    // versions and their vector in one generation, reads anti-join the
+    // generation's vectors out, compact FOLDS them (materializes and
+    // retires them in its own generation). The oracle replays the same verbs
     // as SQL over the input (= the copy-on-write semantics), so
     // MoR ≡ CoW is exactly the hash property; the gate additionally
     // asserts vectors were pending before the fold and gone after.

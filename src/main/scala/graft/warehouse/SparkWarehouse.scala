@@ -112,43 +112,29 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
     try {
       if (!fs.exists(tablePath(name))) Left(TableNotFound(name))
       else {
-        // mergeSchema: after additive schema evolution (load appends new
-        // fields) the table holds file GENERATIONS with different
-        // footers; a single-footer read could silently drop the appended
-        // columns. Merging unions the footers (older rows read null in
-        // newer columns) at the cost of one parallel footer pass at
-        // planning.
-        readManifestGen(name).flatMap(gen =>
-            scanFrameFor(name, name, gen.header, gen.entries)) match {
-          case Some(raw) =>
-            // zone-map skipping, TRANSPARENT: the scan's FileIndex is
-            // wrapped so any predicate later pushed onto this frame —
-            // DataFrame filter, SQL over the registered view, a DML
-            // matched-set scan — prunes provably non-matching files at
-            // listing time. The stats thunk is consulted per listing
-            // (sidecar state always current); tables without a sidecar
-            // list identically to the plain index. The scan PLAN itself
-            // is served from the committed generation (zero directory
-            // listing; merged schema cached per generation).
-            // merge-on-read: rows tombstoned by pending deletion vectors
-            // are filtered out at read time (anti-join on file+row
-            // position). Tables never touched by MoR DML keep the plain
-            // scan plan — zero overhead.
-            Right(
-              if (!hasDeletionVectors(name)) raw
-              else liveWithPositions(name, raw).drop(RelCol, RidxCol))
-          case None =>
-            // schemaless or not-yet-loaded table: empty frame on the
-            // recorded schema
-            val st = meta(name).map(m => Widen.toStructType(m.schema))
-              .getOrElse(new StructType())
-            Right(spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st))
-        }
+        // The plan is served from the committed generation: no listing,
+        // and the footer-merged schema (additive evolution leaves files
+        // with different footers) is cached per generation. Zone-map
+        // skipping is transparent: the scan's FileIndex prunes for any
+        // predicate later pushed onto this frame. The positions the
+        // generation's deletion vectors name are anti-joined out; a
+        // generation without vectors keeps the plain scan plan. A
+        // schemaless or emptied table reads its recorded schema.
+        Right(readManifestGen(name).flatMap(gen =>
+            scanFrameFor(name, name, gen.header, gen.entries)
+              .map(liveRows(name, _, gen.dvs)))
+          .getOrElse(emptyFrame(name)))
       }
     } catch {
       case e: Exception => Left(TableGenericError(e.getMessage, Some(e)))
     }
+
+  /** No rows, on the recorded schema. */
+  private def emptyFrame(name: String): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      meta(name).map(m => Widen.toStructType(m.schema))
+        .getOrElse(new StructType()))
 
   /** True when the committed generation names at least one data file. */
   private def hasDataFiles(name: String): Boolean =
@@ -226,11 +212,11 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
         // generation NUMBERS, so cached slots must not survive
         invalidateHistCaches(name)
       }
+      val st = Widen.toStructType(effectiveSchema)
       if (effectiveSchema.nonEmpty) {
-        val empty = spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          Widen.toStructType(effectiveSchema))
-        empty.write.mode(SaveMode.Overwrite).parquet(tablePath(name).toString)
+        spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
+          .write.mode(SaveMode.Overwrite).parquet(tablePath(name).toString)
       } else {
         // schemaless create (legal in the reference): directory + sidecar
         // only — parquet cannot represent a zero-column file
@@ -238,6 +224,14 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
       }
       writeMeta(name, TableMeta(effectiveSchema, expires.map(_.toEpochMilli)))
       importTable(name)
+      // the empty file's footer holds exactly `st`: seed the scan with it,
+      // so no read (and no first load inheriting it) merges that footer
+      if (effectiveSchema.nonEmpty) readManifestGen(name).foreach { g =>
+        val (idx, _) = org.apache.spark.sql.GraftFileIndexBridge.manifestIndex(
+          spark, fs.makeQualified(tablePath(name)),
+          statusesOf(name, g.entries), Some(st))
+        scanIndexCache.put(name, ScanIndex(g.header, g.entries, idx, st))
+      }
       registerView(name)
       Right(TableRef(name))
     } catch { case e: Exception => Left(TableGenericError(e.getMessage, Some(e))) }
@@ -345,7 +339,7 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
         .observe(stats, count(lit(1)).as("rows"),
           max(col("_graft_size")).as("max_row"))
         .drop("_graft_size")
-      val loaded = appendDataFiles(name) { tmp =>
+      val loaded = appendDataFiles[Long](name) { tmp =>
         // the writer sorts each task's rows by ordinal (already in order)
         // and opens one file per ordinal; maxRecordsPerFile is pinned so
         // a session conf can never split a chunk across files
@@ -419,7 +413,7 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
           .parquet(tablePath(name).toString)
         invalidateHistCaches(name)
       }
-      else appendDataFiles(name) { tmp =>
+      else appendDataFiles[Unit](name) { tmp =>
         Right(prepared.write.mode(SaveMode.Overwrite).parquet(tmp.toString))
       }
       // SaveMode.Overwrite deletes the whole directory including the
@@ -553,13 +547,14 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
       val touchedDirs = leafDirs(tmp, pcols.length)
       // entries under touched dirs retire, the rest carry over
       val curEntries = curGen.map(_.entries).getOrElse(IndexedSeq.empty)
+      val dvs = curGen.map(_.dvs).getOrElse(IndexedSeq.empty)
       val touchedUri = touchedUriPrefixes(name, touchedDirs)
       val (retiredAll, keptUntouched) = curEntries
         .partition(e => touchedUri.exists(e.rel.startsWith))
       // like materializeSwap: a file appended into a touched partition
       // AFTER the replacement plan was built is not in the plan and
       // was not rewritten — it must carry over, not retire
-      val (retired, kept) = planInputRels(name, replacement)
+      val (retired, kept) = planInputRels(name, replacement).map(_._1)
         .filter(_.nonEmpty) match {
         case Some(pr) =>
           val (r, keptConc) = retiredAll.partition(e => pr.contains(e.rel))
@@ -575,8 +570,10 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
             throw new java.io.IOException(
               s"$what of '$name' failed before commit; live table intact", e)
         } finally checkedDelete(tmp)
+      // vectors stay: the replacement applied them, and those over the
+      // retired files are inert
       publishRewrite(name, curGen, retired.map(_.rel).toSet, added,
-        kept ++ added)
+        kept ++ dvs ++ added)
       registerView(name)
     }
 
@@ -694,10 +691,11 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
     * tables' file counts bounded without [[compact]]'s whole-table
     * rewrite (at streaming cadence a full rewrite per maintenance tick
     * is O(table²) I/O over time; bin-packing is O(small files)).
-    * Reads ONLY the small files (explicit-inventory scan), applies any
-    * pending merge-on-read tombstones on those files (their deletions
-    * are MATERIALIZED in the packed output; vector rows for the
-    * retired rels become inert), and commits kept ∪ packed. Partition layout preserved. Returns the number of
+    * Reads ONLY the small files (explicit-inventory scan), applies the
+    * generation's deletion vectors on those files (their deletions are
+    * MATERIALIZED in the packed output; the vectors stay committed and
+    * their rows for the retired rels become inert), and commits kept ∪
+    * packed. Partition layout preserved. Returns the number of
     * files packed (0 = nothing to do — fewer than two small files).
     * Sidecar coverage stays incremental: the next analyze drops the
     * retired rels and covers the packed files.
@@ -718,20 +716,12 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
           .partition(_.bytes < smallBytes)
         if (small.size < 2) Right(0L)
         else {
-          val rootQ = fs.makeQualified(tablePath(name))
-          val prefix = rootQ.toUri.toString
-          val statuses = small.map { e =>
-            new org.apache.hadoop.fs.FileStatus(e.bytes, false, 1,
-              134217728L, e.mtime,
-              new Path(new java.net.URI(prefix + "/" + e.rel)))
-          }
           val (idx, ds) = org.apache.spark.sql.GraftFileIndexBridge
-            .manifestIndex(spark, rootQ, statuses, None)
-          val smallFrame = org.apache.spark.sql.GraftFileIndexBridge
-            .manifestFrame(spark, idx, ds, identity)
-          val content =
-            if (!hasDeletionVectors(name)) smallFrame
-            else liveWithPositions(name, smallFrame).drop(RelCol, RidxCol)
+            .manifestIndex(spark, fs.makeQualified(tablePath(name)),
+              statusesOf(name, small), None)
+          val dvs = curGen.map(_.dvs).getOrElse(IndexedSeq.empty)
+          val content = liveRows(name, org.apache.spark.sql
+            .GraftFileIndexBridge.manifestFrame(spark, idx, ds, identity), dvs)
           val parts = math.max(1L, (small.map(_.bytes).sum +
             targetBytes - 1) / targetBytes).toInt
           val pcols = meta(name).toOption.map(_.partitionCols).getOrElse(Nil)
@@ -748,9 +738,10 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
           // generation commit; see [[materializeSwap]]
           val added = try moveDataFilesIn(name, tmp) finally checkedDelete(tmp)
           // bin-packing preserves content exactly UNLESS it
-          // materialized pending deletion vectors into the output
+          // materialized deletion vectors into the output; the vectors
+          // stay (those over packed files become inert)
           publishRewrite(name, curGen, small.map(_.rel).toSet, added,
-            kept ++ added, rowPreserving = !hasDeletionVectors(name))
+            kept ++ dvs ++ added, rowPreserving = dvs.isEmpty)
           registerView(name)
           Right(small.size.toLong)
         }
@@ -1049,24 +1040,26 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
     }
   }
 
-  /** Recursive walk of the data files on disk under the table root:
-    * (entry, absolute path), underscore/dot-prefixed sidecars (meta,
-    * stats, blooms, deletion vectors, history) excluded at every level.
-    * Only two callers may list: the one-shot import of a table that has
-    * no commit yet ([[importTable]]) and [[vacuumRetired]]. Every read
-    * and every other verb is served from the committed generation.
+  /** Recursive walk of the data and deletion-vector files on disk
+    * under the table root: (entry, absolute path), other underscore/
+    * dot-prefixed sidecars (meta, stats, blooms, history) excluded at
+    * every level. Only two callers may list: the one-shot import of a
+    * table that has no commit yet ([[importTable]]) and
+    * [[vacuumRetired]]. Every read and every other verb is served from
+    * the committed generation.
     */
   private def walkDataFiles(name: String): Seq[(ManifestEntry, Path)] = {
-    def walk(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    def walk(p: Path, top: Boolean): Seq[org.apache.hadoop.fs.FileStatus] =
       fs.listStatus(p).toSeq.flatMap { st =>
         val n = st.getPath.getName
-        if (n.startsWith("_") || n.startsWith(".")) Nil
-        else if (st.isDirectory) walk(st.getPath)
+        if (top && st.isDirectory && n == DvDir) walk(st.getPath, top = false)
+        else if (n.startsWith("_") || n.startsWith(".")) Nil
+        else if (st.isDirectory) walk(st.getPath, top = false)
         else if (n.endsWith(".parquet")) Seq(st)
         else Nil
       }
     val prefixes = rootUriPrefixes(name)
-    walk(tablePath(name)).map { st =>
+    walk(tablePath(name), top = true).map { st =>
       val uri = fs.makeQualified(st.getPath).toUri.toString
       val rel = prefixes.collectFirst {
         case pre if uri.startsWith(pre + "/") => uri.substring(pre.length + 1)
@@ -1139,16 +1132,29 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
       index: org.apache.spark.sql.execution.datasources.FileIndex,
       dataSchema: StructType)
 
-  /** One cached manifest generation: parsed entries plus LAZY derived
-    * views (rel vector, rel set) so the warm coverage math costs set
-    * probes — not a fresh O(files) Path/URI materialization per call
+  /** One cached manifest generation: its data entries and the
+    * deletion-vector files it names (`dvs`, under `_graft_dv/`) — its
+    * rows are the data files minus the positions the vectors name —
+    * plus LAZY derived views so the warm coverage math costs set
+    * probes, not a fresh O(files) Path/URI materialization per call
     * (measured ~0.7 GB of driver allocation per no-op analyze at 100k
     * files before this was cached).
     */
   private final case class ManifestGen(header: String, gen: Long,
-                                       entries: IndexedSeq[ManifestEntry]) {
+                                       entries: IndexedSeq[ManifestEntry],
+                                       dvs: IndexedSeq[ManifestEntry]) {
     lazy val rels: IndexedSeq[String] = entries.map(_.rel)
     lazy val relSet: Set[String] = rels.toSet
+    lazy val dvRels: Set[String] = dvs.map(_.rel).toSet
+    def all: IndexedSeq[ManifestEntry] = entries ++ dvs
+    def allRels: Set[String] = relSet ++ dvRels
+  }
+
+  /** A generation from its manifest lines: vector files apart from data. */
+  private def genOf(header: String, gen: Long,
+                    all: IndexedSeq[ManifestEntry]): ManifestGen = {
+    val (dvs, data) = all.partition(_.rel.startsWith(DvDir + "/"))
+    ManifestGen(header, gen, data, dvs)
   }
 
   // name -> generation; the header's nonce+count identify the
@@ -1158,7 +1164,7 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
   private val manifestCache = new LruFileBudgetCache[String, ManifestGen](
     () => spark.conf.getOption("spark.graft.manifest.cacheMaxFiles")
       .map(_.toLong).getOrElse(2000000L),
-    _.entries.size.toLong)
+    _.all.size.toLong)
 
   /** Test/ops hook: (tables resident, total manifest entries held) —
     * the driver-memory residency the file budget bounds.
@@ -1194,8 +1200,8 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
   // Values carry the slot's stamp captured at fill time; the entries
   // cache is budgeted at 1M retained manifest entries.
   private val histManifestCache = new LruFileBudgetCache[(String, Long),
-    ((String, IndexedSeq[ManifestEntry]), SlotStamp)](
-    () => 1000000L, _._1._2.size.toLong.max(1L))
+    (ManifestGen, SlotStamp)](
+    () => 1000000L, _._1.all.size.toLong.max(1L))
 
   // (rowPreserving, commit epoch) per retained generation — a few
   // dozen bytes per entry, bounded by count; values carry the slot's
@@ -1320,9 +1326,7 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
           // a writer may have published g+1 between the repair's header
           // check and its replace: roll the snapshot forward again
           healSnapshotForward(name, g)
-          readSnapshot(name).orElse(readRetainedManifest(name, g).map {
-            case (header, entries) => ManifestGen(header, g, entries)
-          })
+          readSnapshot(name).orElse(readRetainedManifest(name, g))
         case None =>
           val hasFiles = fs.exists(tablePath(name)) &&
             fs.listStatus(tablePath(name)).exists { f =>
@@ -1357,7 +1361,7 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
           return Some(cached)
         val (genNo, n) = parsedHeader.get
         parseEntries(in, n).map { entries =>
-          val gen = ManifestGen(header, genNo, entries)
+          val gen = genOf(header, genNo, entries)
           manifestCache.put(name, gen)
           gen
         }
@@ -1485,6 +1489,7 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
     * Any exception escaping this method therefore means NOTHING was
     * committed. `rowPreserving` stamps the header's dataChange flag
     * (compact/z-order) so CDC spans skip the transition's file churn.
+    * `entries` lists the generation's data AND deletion-vector files.
     */
   private[graft] def writeManifestCas(name: String,
                                       entries: Seq[ManifestEntry],
@@ -1528,8 +1533,7 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
       val out = fs.create(tmp, true)
       try out.write(bytes) finally out.close()
       atomicReplace(tmp, manifestPath(name))
-      manifestCache.put(name,
-        ManifestGen(header, newGen, entries.toIndexedSeq))
+      manifestCache.put(name, genOf(header, newGen, entries.toIndexedSeq))
     } catch {
       case _: Exception =>
         // the snapshot may now lag the commit: remove it so the next
@@ -1607,9 +1611,9 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
       else Right(importTable(name))
     } catch { case e: Exception => Left(TableGenericError(e.getMessage, Some(e))) }
 
-  /** Physically reclaim data files no retained generation still needs,
-    * and drop now-empty partition directories. Returns the number of
-    * data files deleted. The streaming/maintenance analog of Delta's
+  /** Physically reclaim data and deletion-vector files no retained
+    * generation still needs, and drop now-empty partition directories.
+    * Returns the number of files deleted. The streaming/maintenance analog of Delta's
     * VACUUM; `now` injected for tests like [[vacuum]]. One of the two
     * places that list the table directory:
     *  - RETIRED files: named by a generation superseded before the
@@ -1657,11 +1661,12 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
         val asOfCutoff = slots.filter(_._2 <= cutoff).map(_._1).maxOption
         val (expired, kept) = slots.map(_._1)
           .partition(g => asOfCutoff.exists(g < _))
+        // vector files are reclaimed like data files: by name
         def relsOf(gens: Seq[Long]): Map[Long, Set[String]] =
           gens.flatMap(g => readRetainedManifest(name, g)
-            .map(m => g -> m._2.map(_.rel).toSet)).toMap
+            .map(m => g -> m.allRels)).toMap
         val keptRels = relsOf(kept).values.flatten.toSet ++
-          cur.map(_.relSet).getOrElse(Set.empty)
+          cur.map(_.allRels).getOrElse(Set.empty)
         val expiredRels = relsOf(expired)
         val retired = expiredRels.values.flatten.toSet -- keptRels
         val oldestCommit = slots.map(_._2).minOption
@@ -1672,7 +1677,7 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
         val onDisk = walkDataFiles(name)
         // never delete what the generation live after the walk names
         val liveRels = keptRels ++
-          readManifestGen(name).map(_.relSet).getOrElse(Set.empty)
+          readManifestGen(name).map(_.allRels).getOrElse(Set.empty)
         var deleted = 0L
         onDisk.foreach { case (e, p) =>
           if (!liveRels.contains(e.rel) &&
@@ -1861,11 +1866,6 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
                            entries: IndexedSeq[ManifestEntry])
       : Option[DataFrame] = {
     val rootQ = fs.makeQualified(tablePath(name))
-    val prefix = rootQ.toUri.toString
-    def status(e: ManifestEntry) =
-      new org.apache.hadoop.fs.FileStatus(e.bytes, false, 1,
-        134217728L, e.mtime,
-        new Path(new java.net.URI(prefix + "/" + e.rel)))
     val cached = scanIndexCache.get(cacheKey)
     val scan =
       if (cached != null && cached.header == header) cached
@@ -1882,10 +1882,10 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
             .map { c =>
               val added = entries.drop(c.entries.length)
               org.apache.spark.sql.GraftFileIndexBridge.mergeFooterSchemas(
-                spark, c.dataSchema, added.map(status))
+                spark, c.dataSchema, statusesOf(name, added))
             }
         val (idx, ds) = org.apache.spark.sql.GraftFileIndexBridge
-          .manifestIndex(spark, rootQ, entries.map(status), inherited)
+          .manifestIndex(spark, rootQ, statusesOf(name, entries), inherited)
         val fresh = ScanIndex(header, entries, idx, ds)
         scanIndexCache.put(cacheKey, fresh)
         fresh
@@ -1899,12 +1899,20 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
           pruneMetaThunk(name))))
   }
 
+  /** Entries as the file statuses a seeded scan lists (exact lengths). */
+  private def statusesOf(name: String, es: Seq[ManifestEntry])
+      : Seq[org.apache.hadoop.fs.FileStatus] = {
+    val prefix = fs.makeQualified(tablePath(name)).toUri.toString
+    es.map(e => new org.apache.hadoop.fs.FileStatus(e.bytes, false, 1,
+      134217728L, e.mtime, new Path(new java.net.URI(prefix + "/" + e.rel))))
+  }
+
   /** A retained history generation parsed from
     * `_graft_manifest_hist/` (same format + count validation as the
     * live manifest); None when not retained or unreadable.
     */
   private def readRetainedManifest(name: String, gen: Long)
-      : Option[(String, IndexedSeq[ManifestEntry])] =
+      : Option[ManifestGen] =
     try {
       val p = new Path(manifestHistDir(name), histFileName(gen))
       val hit = histManifestCache.get((name, gen))
@@ -1923,7 +1931,7 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
         val ph = parseManifestHeader(header)
         if (!ph.exists(_._1 == gen)) return None
         parseEntries(in, ph.get._2).map { entries =>
-          val v = (header, entries)
+          val v = genOf(header, gen, entries)
           // a retained slot that parsed as its generation's manifest is
           // immutable (the slot putIfAbsent is its only writer) — cache
           // both the entries and the header meta for the span walks
@@ -2019,22 +2027,16 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
   /** Snapshot (time-travel) read: the table exactly as of a retained
     * manifest generation — metadata-only plan construction (the
     * generation's seeded statuses; retired files are still at their
-    * paths until [[vacuumRetired]]). Defined on FILE generations:
-    * tables with PENDING merge-on-read deletion vectors are refused
-    * (vectors are read-time state, not versioned — compact first to
-    * materialize them, which rotates the generation). A vacuumed
-    * generation fails fast ("not retained"); a generation whose files
-    * were reclaimed mid-retention fails loudly at read, never serves
+    * paths until [[vacuumRetired]]). The generation's deletion vectors
+    * are part of it, so a generation committed by a merge-on-read verb
+    * reads with exactly the deletes it committed. A vacuumed generation
+    * fails fast ("not retained"); a generation whose files were
+    * reclaimed mid-retention fails loudly at read, never serves
     * partial rows.
     */
   def getAsOf(name: String, gen: Long): Either[WarehouseError, DataFrame] =
     try {
       if (!fs.exists(tablePath(name))) Left(TableNotFound(name))
-      else if (hasDeletionVectors(name))
-        Left(TableGenericError(
-          s"getAsOf('$name'): table has pending merge-on-read deletion " +
-            "vectors, which are not versioned — run compact() to " +
-            "materialize them into a file generation first"))
       else if (readManifestGen(name).exists(_.gen == gen)) get(name)
       else readRetainedManifest(name, gen) match {
         case None =>
@@ -2043,38 +2045,23 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
             s"generation $gen of '$name' is not retained " +
               s"(retained: ${avail.mkString(", ")}) — raise " +
               "spark.graft.manifest.retainGenerations or vacuum later"))
-        case Some((header, entries)) =>
-          if (entries.isEmpty) {
-            val st = meta(name).map(m => Widen.toStructType(m.schema))
-              .getOrElse(new StructType())
-            Right(spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st))
-          } else scanFrameFor(name, s"$name@g$gen", header, entries) match {
-            case Some(df) => Right(df)
-            case None => Left(TableGenericError(
-              s"getAsOf('$name', $gen): scan construction failed"))
-          }
+        case Some(g) =>
+          Right(scanFrameFor(name, s"$name@g$gen", g.header, g.entries)
+            .map(liveRows(name, _, g.dvs)).getOrElse(emptyFrame(name)))
       }
     } catch {
       case e: Exception => Left(TableGenericError(e.getMessage, Some(e)))
     }
 
   /** Metadata-only diff of two retained generations: one row per
-    * changed file, `change` ∈ added/removed — the manifest-history
+    * changed data file, `change` ∈ added/removed — the manifest-history
     * analog of a snapshot diff, zero data files touched.
     */
   def diffGenerations(name: String, fromGen: Long, toGen: Long)
-      : Either[WarehouseError, DataFrame] = {
-    def entriesOf(g: Long): Either[WarehouseError, IndexedSeq[ManifestEntry]] =
-      readManifestGen(name).filter(_.gen == g).map(m => Right(m.entries))
-        .getOrElse(readRetainedManifest(name, g) match {
-          case Some((_, es)) => Right(es)
-          case None => Left(TableGenericError(
-            s"generation $g of '$name' is not retained"))
-        })
+      : Either[WarehouseError, DataFrame] =
     for {
-      a <- entriesOf(fromGen)
-      b <- entriesOf(toGen)
+      a <- genAt(name, fromGen).map(_.entries)
+      b <- genAt(name, toGen).map(_.entries)
     } yield {
       val aSet = a.map(_.rel).toSet
       val bSet = b.map(_.rel).toSet
@@ -2093,19 +2080,15 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
           org.apache.spark.sql.types.StructField("bytes",
             org.apache.spark.sql.types.LongType))))
     }
-  }
 
-  /** Entries of a retained generation: the live manifest when current,
-    * otherwise the history slot. Left when not retained.
+  /** A retained generation: the live manifest when current, otherwise
+    * the history slot. Left when not retained.
     */
-  private def entriesOfGen(name: String, g: Long)
-      : Either[WarehouseError, IndexedSeq[ManifestEntry]] =
-    readManifestGen(name).filter(_.gen == g).map(m => Right(m.entries))
-      .getOrElse(readRetainedManifest(name, g) match {
-        case Some((_, es)) => Right(es)
-        case None => Left(TableGenericError(
-          s"generation $g of '$name' is not retained"))
-      })
+  private def genAt(name: String, g: Long)
+      : Either[WarehouseError, ManifestGen] =
+    readManifestGen(name).filter(_.gen == g)
+      .orElse(readRetainedManifest(name, g))
+      .toRight(TableGenericError(s"generation $g of '$name' is not retained"))
 
   /** The row-preserving (dataChange=false) flag of a retained
     * generation's header — one 1-line read; false when unreadable.
@@ -2161,47 +2144,43 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
     * DML) degrades gracefully to scanning the pre-compact inputs of
     * the real changes. Sound regardless of retention: a flagged
     * generation whose predecessor is no longer retained simply skips
-    * its substitution.
+    * its substitution. A transition touching a file in `named` (the
+    * files a deletion vector added or removed in the span names) is
+    * never substituted: that file's rows differ between the endpoints.
     */
-  private def cdcEntrySets(name: String, fromGen: Long, toGen: Long)
-      : Either[WarehouseError,
-               (IndexedSeq[ManifestEntry], IndexedSeq[ManifestEntry])] =
-    for {
-      a <- entriesOfGen(name, fromGen)
-      b <- entriesOfGen(name, toGen)
-    } yield {
-      val aRels = a.map(_.rel).toSet
-      val bRels = b.map(_.rel).toSet
-      var added: Map[String, ManifestEntry] =
-        b.iterator.filterNot(e => aRels.contains(e.rel))
-          .map(e => e.rel -> e).toMap
-      var removed: Map[String, ManifestEntry] =
-        a.iterator.filterNot(e => bRels.contains(e.rel))
-          .map(e => e.rel -> e).toMap
-      if (added.nonEmpty && toGen > fromGen) {
-        val flagged = ((fromGen + 1) to toGen).reverse
-          .filter(genRowPreserving(name, _))
-        flagged.foreach { g =>
-          (entriesOfGen(name, g).toOption,
-            entriesOfGen(name, g - 1).toOption) match {
-            case (Some(cur), Some(prev)) =>
-              val prevRels = prev.map(_.rel).toSet
-              val curRels = cur.map(_.rel).toSet
-              val aG = cur.filterNot(e => prevRels.contains(e.rel))
-              val rG = prev.filterNot(e => curRels.contains(e.rel))
-              if (aG.nonEmpty && aG.forall(e => added.contains(e.rel))) {
-                added --= aG.map(_.rel)
-                rG.foreach { e =>
-                  if (removed.contains(e.rel)) removed -= e.rel
-                  else added += e.rel -> e
-                }
+  private def cdcEntrySets(name: String, a: ManifestGen, b: ManifestGen,
+                           named: Set[String])
+      : (IndexedSeq[ManifestEntry], IndexedSeq[ManifestEntry]) = {
+    val aRels = a.relSet
+    val bRels = b.relSet
+    var added: Map[String, ManifestEntry] =
+      b.entries.iterator.filterNot(e => aRels.contains(e.rel))
+        .map(e => e.rel -> e).toMap
+    var removed: Map[String, ManifestEntry] =
+      a.entries.iterator.filterNot(e => bRels.contains(e.rel))
+        .map(e => e.rel -> e).toMap
+    if (added.nonEmpty && b.gen > a.gen) {
+      val flagged = ((a.gen + 1) to b.gen).reverse
+        .filter(genRowPreserving(name, _))
+      flagged.foreach { g =>
+        (genAt(name, g).toOption, genAt(name, g - 1).toOption) match {
+          case (Some(cur), Some(prev)) =>
+            val aG = cur.entries.filterNot(e => prev.relSet.contains(e.rel))
+            val rG = prev.entries.filterNot(e => cur.relSet.contains(e.rel))
+            if (aG.nonEmpty && aG.forall(e => added.contains(e.rel)) &&
+              !(aG ++ rG).exists(e => named.contains(e.rel))) {
+              added --= aG.map(_.rel)
+              rG.foreach { e =>
+                if (removed.contains(e.rel)) removed -= e.rel
+                else added += e.rel -> e
               }
-            case _ => () // predecessor not retained: substitution skipped
-          }
+            }
+          case _ => () // predecessor not retained: substitution skipped
         }
       }
-      (added.values.toIndexedSeq, removed.values.toIndexedSeq)
     }
+    (added.values.toIndexedSeq, removed.values.toIndexedSeq)
+  }
 
   /** The CDC span's (insert rows, delete rows) as LAZY frames — each
     * side's exceptAll appears EXACTLY ONCE, so a consumer that uses
@@ -2209,20 +2188,38 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
     * difference aggregates per action instead of recomputing a tagged
     * union per branch. Sides are schema-aligned across generations
     * (evolution pads missing columns with nulls).
+    *
+    * Each side's rows are its generation's rows: its files minus its
+    * own vectors' positions. A file both generations name cancels at
+    * the file level unless a vector added or removed in the span names
+    * it; such files are read on both sides, and finding them costs one
+    * small job over those vectors' `rel` column. A span that changes no
+    * vector plans exactly as a file-level diff.
     */
   private def changeFeedFrames(name: String, fromGen: Long, toGen: Long)
       : Either[WarehouseError, (Option[DataFrame], Option[DataFrame])] =
     try {
-      cdcEntrySets(name, fromGen, toGen).map { case (addedE, removedE) =>
-        def frameOf(es: IndexedSeq[ManifestEntry],
-                    tag: String): Option[DataFrame] =
+      for {
+        a <- genAt(name, fromGen)
+        b <- genAt(name, toGen)
+      } yield {
+        val changedDvs = a.dvs.filterNot(e => b.dvRels.contains(e.rel)) ++
+          b.dvs.filterNot(e => a.dvRels.contains(e.rel))
+        val named: Set[String] =
+          if (changedDvs.isEmpty) Set.empty
+          else vectorFrame(name, changedDvs).select("rel").distinct()
+            .collect().map(_.getString(0)).toSet
+        val (addedE, removedE) = cdcEntrySets(name, a, b, named)
+        def frameOf(g: ManifestGen, changed: IndexedSeq[ManifestEntry],
+                    tag: String): Option[DataFrame] = {
+          val es = (changed ++ g.entries.filter(e => named.contains(e.rel)))
+            .distinctBy(_.rel)
           if (es.isEmpty) None
           else scanFrameFor(name, s"$name@chg$fromGen-$toGen-$tag",
             s"graft-changes $fromGen-$toGen-$tag ${es.size}", es)
-        (frameOf(addedE, "a"), frameOf(removedE, "r")) match {
-          case (None, None) => (None, None)
-          case (Some(af), None) => (Some(af), None)
-          case (None, Some(rf)) => (None, Some(rf))
+            .map(liveRows(name, _, g.dvs))
+        }
+        (frameOf(b, addedE, "a"), frameOf(a, removedE, "r")) match {
           case (Some(af), Some(rf)) =>
             // schema evolution between the generations: pad each side
             // with the other's missing columns (nulls), then align the
@@ -2235,6 +2232,7 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
             val aAl = aPad.select(cols: _*)
             val rAl = rPad.select(cols: _*)
             (Some(aAl.exceptAll(rAl)), Some(rAl.exceptAll(aAl)))
+          case sides => sides
         }
       }
     } catch {
@@ -2247,13 +2245,18 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
     * files REMOVED between the generations and B = rows in files
     * ADDED, inserts = B ∖ A and deletes = A ∖ B (bag semantics — an
     * UPDATE therefore surfaces as delete-of-old-value +
-    * insert-of-new-value). Output adds `change_type`
+    * insert-of-new-value). Each side's rows exclude the positions its
+    * own generation's deletion vectors name, so merge-on-read deletes
+    * and updates show up like their copy-on-write twins; a file a
+    * vector added or removed in the span names is read on both sides
+    * ([[changeFeedFrames]]). Output adds `change_type`
     * ('insert' | 'delete').
     *
     * 100 TB shape: cost is O(changed files), never O(table) — an
     * append diffs only its new files, a partition-pruned rewrite only
-    * the touched partitions; unchanged files cancel at the FILE level
-    * (identical rels never enter either scan), and since r17 a
+    * the touched partitions; unchanged files that no changed vector
+    * names cancel at the FILE level (identical rels never enter either
+    * scan), and since r17 a
     * row-preserving compact/z-order inside the span cancels at the
     * METADATA level ([[cdcEntrySets]] — Delta's dataChange=false), so
     * a pure-compaction span reads ZERO data files. The bag-difference
@@ -3338,7 +3341,8 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
 
   private def hllFromMetadata(name: String, cols: Seq[String], lgK: Int)
       : Option[DataFrame] = {
-    if (hasDeletionVectors(name) || !fs.exists(hllPath(name))) return None
+    if (readManifestGen(name).exists(_.dvs.nonEmpty) ||
+      !fs.exists(hllPath(name))) return None
     val liveSeq = liveInventory(name)._1
     // past a file-count threshold the fold runs DISTRIBUTED: the
     // driver union is zero-jobs warm but collects O(files) sketch
@@ -3595,7 +3599,8 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
   // soundness condition failed (caller scans)
   private def fromMetadata(name: String, schema: StructType,
                            cols: Seq[String]): Option[DataFrame] = {
-    if (hasDeletionVectors(name) || !fs.exists(statsPath(name))) return None
+    if (readManifestGen(name).exists(_.dvs.nonEmpty) ||
+      !fs.exists(statsPath(name))) return None
     val stats = cachedStats(name)
     val live = liveInventory(name)._1
     if (!live.forall(stats.contains)) return None // uncovered file
@@ -3688,7 +3693,8 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
   // soundness condition failed (caller scans)
   private def sumFromMetadata(name: String, schema: StructType,
                               cols: Seq[String]): Option[DataFrame] = {
-    if (hasDeletionVectors(name) || !fs.exists(statsPath(name))) return None
+    if (readManifestGen(name).exists(_.dvs.nonEmpty) ||
+      !fs.exists(statsPath(name))) return None
     val stats = cachedStats(name)
     val live = liveInventory(name)._1
     if (!live.forall(stats.contains)) return None // uncovered/disabled
@@ -4004,14 +4010,18 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
       throw new java.io.IOException(s"failed to rename $src to $dst")
 
   /** Append a write's output files with an O(new files) manifest
-    * patch: write to a sibling temp dir, move the files in under their
-    * final names, commit current ∪ added. A `write` that returns Left
-    * refuses its own output: nothing is moved or committed and the temp
-    * dir is deleted. A failure or crash before the commit leaves the
-    * moved files as orphans no generation names (invisible; reclaimed
-    * by [[vacuumRetired]]) and the verb fails.
+    * patch: write to a sibling temp dir (deletion-vector files into its
+    * `_graft_dv/`), move the files in under their final names, commit
+    * current ∪ added. A `write` that returns Left refuses its own
+    * output: nothing is moved or committed and the temp dir is deleted.
+    * A failure or crash before the commit leaves the moved files as
+    * orphans no generation names (invisible; reclaimed by
+    * [[vacuumRetired]]) and the verb fails. `targets` names the data
+    * files a vector append points into: none commits nothing, and one
+    * no longer live where the commit would land refuses it (Left).
     */
-  private def appendDataFiles[T](name: String)(
+  private def appendDataFiles[T](name: String,
+      targets: T => Option[Set[String]] = (_: T) => None)(
       write: Path => Either[WarehouseError, T]): Either[WarehouseError, T] = {
     // staging dir is UNIQUE PER CALL: appends are the one verb two
     // writers legitimately race on (concurrent loaders, streaming
@@ -4028,31 +4038,41 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
     // with no atomic provider this throws here, so the verb fails
     // LOUDLY before writing anything (r17, judge #2)
     val _ = commitPrimitive
-    try write(tmp).map { result =>
-      val added = moveDataFilesIn(name, tmp)
-      fault("append:files-final") // files final, no commit yet
-      // O(batch) manifest patch with REBASE-on-lost-claim (r16):
-      // appends commute, so a loser of the generation claim re-reads
-      // the winner's generation and patches its files ON TOP — every
-      // concurrent writer's committed rows stay visible immediately
-      val addedRels = added.map(_.rel).toSet
-      var attempts = 0
-      var done = false
-      while (!done && attempts < 12) {
-        val g = readManifestGen(name)
-        done = writeManifestCas(name,
-          g.map(_.entries.filterNot(e => addedRels.contains(e.rel)))
-            .getOrElse(IndexedSeq.empty) ++ added,
-          g.map(_.header))
-        attempts += 1
-        if (!done) Thread.sleep(math.min(100L, 2L << attempts))
+    try write(tmp).flatMap { result =>
+      val aimed = targets(result)
+      if (aimed.exists(_.isEmpty)) Right(result)
+      else {
+        val added = moveDataFilesIn(name, tmp)
+        fault("append:files-final") // files final, no commit yet
+        // O(batch) manifest patch with REBASE-on-lost-claim (r16):
+        // appends commute, so a loser of the generation claim re-reads
+        // the winner's generation and patches its files ON TOP — every
+        // concurrent writer's committed rows stay visible immediately
+        val addedRels = added.map(_.rel).toSet
+        def commit(attempt: Int): Either[WarehouseError, T] = {
+          val g = readManifestGen(name)
+          aimed.flatMap(_.find(r => !g.exists(_.relSet.contains(r)))) match {
+            case Some(rel) =>
+              deleteUncommitted(name, added)
+              Left(TableGenericError(s"merge-on-read change to '$name' was " +
+                s"not committed: its target file $rel was retired by a " +
+                "rewrite that committed first — re-read and retry"))
+            // data entries keep their order, so the appended generation
+            // still starts with the one the scan cache holds
+            case None if writeManifestCas(name, g.map(_.all.filterNot(e =>
+                addedRels.contains(e.rel))).getOrElse(IndexedSeq.empty) ++
+                added, g.map(_.header)) => Right(result)
+            case None if attempt < 12 =>
+              Thread.sleep(math.min(100L, 2L << attempt))
+              commit(attempt + 1)
+            case None =>
+              deleteUncommitted(name, added)
+              throw new java.io.IOException(s"append to '$name' lost the " +
+                s"generation commit $attempt times to concurrent writers — retry")
+          }
+        }
+        commit(1)
       }
-      if (!done) {
-        deleteUncommitted(name, added)
-        throw new java.io.IOException(s"append to '$name' lost the " +
-          s"generation commit $attempts times to concurrent writers — retry")
-      }
-      result
     } finally checkedDelete(tmp)
   }
 
@@ -4087,8 +4107,8 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
   }
 
   /** Move every data file under `tmp` into the live table root,
-    * preserving its tmp-relative (partition) path; returns the moved
-    * files' manifest entries. Fresh UUID part names never collide with
+    * preserving its tmp-relative (partition or `_graft_dv/`) path;
+    * returns the moved files' manifest entries. Fresh UUID part names never collide with
     * live files. The `ChunkCol=k/` directories of a chunked load write
     * are flattened instead: each file lands at the table root with `k`
     * in its name (one task writes the same part name into every chunk
@@ -4102,7 +4122,7 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
     def walk(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
       fs.listStatus(p).toSeq.flatMap { st =>
         val n = st.getPath.getName
-        if (st.isDirectory && n.startsWith(chunkDir))
+        if (st.isDirectory && (n.startsWith(chunkDir) || n == DvDir))
           walk(st.getPath)
         else if (n.startsWith("_") || n.startsWith(".")) Nil
         else if (st.isDirectory) walk(st.getPath)
@@ -4215,39 +4235,45 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
 
   /** Rel paths of `data`'s scan inputs under this table's root — the
     * plan's pinned file snapshot (a scan's `inputFiles` lists without
-    * filters, so files a pruning index would skip are still named).
-    * Sidecar reads (deletion vectors, stats — underscore/dot
-    * segments) and other tables' files are excluded. None when the
-    * plan's inputs cannot be derived — callers then fall back to the
-    * manifest's current list.
+    * filters, so files a pruning index would skip are still named) —
+    * as (data files, deletion-vector files). Other sidecar reads
+    * (stats — underscore/dot segments) and other tables' files are
+    * excluded. None when the plan's inputs cannot be derived — callers
+    * then fall back to the manifest's current list.
     */
-  private def planInputRels(name: String,
-                            data: DataFrame): Option[Set[String]] =
+  private def planInputRels(name: String, data: DataFrame)
+      : Option[(Set[String], Set[String])] =
     try {
       val prefixes = rootUriPrefixes(name)
-      Some(data.inputFiles.iterator.flatMap { uri =>
+      val rels = data.inputFiles.iterator.flatMap { uri =>
         prefixes.collectFirst {
           case p if uri.startsWith(p + "/") => uri.substring(p.length + 1)
         }
-      }.filterNot(rel => rel.split('/')
-        .exists(seg => seg.startsWith("_") || seg.startsWith(".")))
-        .toSet)
+      }.toSet
+      Some((rels.filterNot(rel => rel.split('/')
+        .exists(seg => seg.startsWith("_") || seg.startsWith("."))),
+        rels.filter(_.startsWith(DvDir + "/"))))
     } catch { case _: Exception => None }
 
   /** Best-effort stale-snapshot guard: every input file of `data`
-    * under this table's root must be live in the current generation.
-    * Any guard failure other than a confirmed stale file skips the
-    * check (it is a detector, not a gatekeeper).
+    * under this table's root must be live in the current generation,
+    * and a plan that reads the table must have applied every vector
+    * the generation names (a vector committed after the plan was built
+    * would otherwise be retired unapplied, losing its deletes). Any
+    * guard failure other than a confirmed stale file skips the check
+    * (it is a detector, not a gatekeeper).
     */
   private def assertPlanCurrent(name: String, data: DataFrame,
                                 cur: Option[ManifestGen]): Unit =
     try {
-      val live = cur match {
-        case Some(g) => g.relSet
+      val g = cur match {
+        case Some(g) => g
         case None => return // listing-planned: nothing cheap to pin against
       }
-      planInputRels(name, data).flatMap(_.find(rel => !live.contains(rel)))
-        .foreach(rel => throw new StaleSnapshotException(
+      planInputRels(name, data).filter(_._1.nonEmpty).flatMap {
+        case (dataIn, dvIn) => dataIn.find(rel => !g.relSet.contains(rel))
+          .orElse(g.dvRels.find(rel => !dvIn.contains(rel)))
+      }.foreach(rel => throw new StaleSnapshotException(
           s"rewrite of '$name' was planned against a generation that " +
             s"is no longer current (stale input $rel) — re-read the " +
             "table and retry"))
@@ -4266,7 +4292,10 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
     * longer contains a retired rel (a concurrent rewrite slipped past
     * a broken/expired lock), or the claim keeps losing, this rewrite
     * deletes its own uncommitted files and throws — no view ever
-    * serves both derivations of the same snapshot.
+    * serves both derivations of the same snapshot. A concurrent vector
+    * commit is a conflict too: its positions may point into a file this
+    * rewrite retires, and its deletes would be lost. `retired` and
+    * `entries` cover data and vector files alike.
     */
   private def publishRewrite(name: String, snapshot: Option[ManifestGen],
                              retired: Set[String],
@@ -4274,25 +4303,28 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
                              entries: Seq[ManifestEntry],
                              rowPreserving: Boolean = false): Unit = {
     val addedRels = added.map(_.rel).toSet
+    val knownDvs = snapshot.map(_.dvRels).getOrElse(Set.empty[String])
     var expected = snapshot.map(_.header)
     var attempt = entries
     var n = 0
     while (!writeManifestCas(name, attempt, expected, rowPreserving)) {
       n += 1
       val g = readManifestGen(name)
-      val conflict = !retired.forall(r => g.exists(_.relSet.contains(r)))
+      val live = g.map(_.allRels).getOrElse(Set.empty[String])
+      val conflict = !retired.forall(live.contains) ||
+        g.exists(_.dvs.exists(e => !knownDvs.contains(e.rel)))
       if (conflict || n >= 12) {
         deleteUncommitted(name, added)
         throw new java.io.IOException(
           if (conflict)
             s"concurrent rewrite detected on '$name': a file this " +
-              "rewrite retired is no longer live — this rewrite was not " +
-              "committed; the other rewrite's result stands. Re-read " +
-              "and retry."
+              "rewrite retired is no longer live, or a merge-on-read " +
+              "change committed meanwhile — this rewrite was not " +
+              "committed; the other change stands. Re-read and retry."
           else s"rewrite of '$name' lost the generation commit $n times " +
             "to concurrent writers — not committed; retry")
       }
-      attempt = g.map(_.entries).getOrElse(IndexedSeq.empty).filterNot(e =>
+      attempt = g.map(_.all).getOrElse(IndexedSeq.empty).filterNot(e =>
         retired.contains(e.rel) || addedRels.contains(e.rel)) ++ added
       expected = g.map(_.header)
       Thread.sleep(math.min(100L, 2L << n))
@@ -4310,10 +4342,9 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
     * at their paths, so a reader holding a pre-rewrite plan keeps
     * working until [[vacuumRetired]] reclaims them, and retained
     * generations stay readable via [[getAsOf]]. Meta
-    * (schema/expiry/layout) survives; pending merge-on-read deletion
-    * vectors are MATERIALIZED by the rewrite (`data` derives from
-    * [[get]], which applies them) and therefore cleared after the
-    * commit.
+    * (schema/expiry/layout) survives; the deletion vectors the plan
+    * read are MATERIALIZED by the rewrite (`data` derives from [[get]],
+    * which applies them) and retired by the same commit.
     */
   private def materializeSwap(name: String, data: DataFrame,
                               rowPreserving: Boolean = false): Unit =
@@ -4345,26 +4376,23 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
       // drop a concurrent append's rows. A plan that reads none of the
       // table (update-overwrite replacing the content outright)
       // retires the full current snapshot — overwrite-wins semantics.
-      val retired = planInputRels(name, data).filter(_.nonEmpty)
-        .getOrElse(curGen.map(_.relSet).getOrElse(Set.empty[String]))
-      val hadDv = hasDeletionVectors(name)
+      // ... and the vectors it materialized are the ones its plan read
+      // (assertPlanCurrent: every committed one)
+      val (retired, retiredDvs) = planInputRels(name, data)
+        .filter(_._1.nonEmpty)
+        .getOrElse((curGen.map(_.relSet).getOrElse(Set.empty[String]),
+          curGen.map(_.dvRels).getOrElse(Set.empty[String])))
       val added = try moveDataFilesIn(name, tmp) finally checkedDelete(tmp)
       fault("rewrite:files-final") // crash window: files final, no commit
       // files committed since the plan's snapshot (concurrent appends)
       // carry over untouched
-      val kept = curGen.map(_.entries.filterNot(e =>
-        retired.contains(e.rel))).getOrElse(IndexedSeq.empty)
-      // a row-preserving rewrite that MATERIALIZED pending deletion
-      // vectors changed the file-level row bags (the vectors' rows are
-      // gone) — the dataChange=false stamp applies only when it did not
-      publishRewrite(name, curGen, retired, added, kept ++ added,
-        rowPreserving = rowPreserving && !hadDv)
-      // the rewrite materialized any pending MoR tombstones (data came
-      // through get()): clear the vector sidecar so reads drop the
-      // anti-join. Crash before this point leaves vectors that
-      // reference only retired rels — inert (no live position
-      // matches), cleaned by the next rewrite.
-      if (hadDv) checkedDelete(dvPath(name))
+      val kept = curGen.map(_.all.filterNot(e => retired.contains(e.rel) ||
+        retiredDvs.contains(e.rel))).getOrElse(IndexedSeq.empty)
+      // a row-preserving rewrite that MATERIALIZED deletion vectors
+      // changed the file-level row bags (the vectors' rows are gone) —
+      // the dataChange=false stamp applies only when it did not
+      publishRewrite(name, curGen, retired ++ retiredDvs, added,
+        kept ++ added, rowPreserving = rowPreserving && retiredDvs.isEmpty)
       registerView(name)
     }
 
@@ -4402,7 +4430,7 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
                 .getOrElse(IndexedSeq.empty)
                 .partition(e => touchedUri.exists(e.rel.startsWith))
               publishRewrite(name, curGen, retired.map(_.rel).toSet,
-                Nil, kept)
+                Nil, kept ++ curGen.map(_.dvs).getOrElse(IndexedSeq.empty))
             }
             registerView(name)
           } else {
@@ -4482,31 +4510,52 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
   //
   // The copy-on-write verbs above rewrite data files: a selective
   // predicate that is NOT partition-only on a 100 TB table pays a full
-  // (or full-partition) rewrite for a handful of rows — the one
-  // documented scale wall of the parquet backend. The MoR verbs instead
-  // append TOMBSTONES — (file, row-position) pairs — to an
-  // underscore-prefixed `_graft_dv/` sidecar directory the parquet
-  // scanner ignores; reads anti-join them out (Spark's hidden
-  // `_metadata.file_path`/`row_index` columns are the position source,
-  // the same device Delta's deletion vectors and Iceberg's positional
-  // deletes use). Cost model: DELETE writes O(matched) tombstone rows
-  // after one pushed-filter scan; UPDATE additionally appends O(matched)
-  // new row versions; the table-size-proportional rewrite disappears.
-  // Reads of a vectorless table keep the plain scan plan — zero
-  // overhead until the first MoR mutation. [[compact]] (or any
-  // whole-table rewrite) FOLDS pending vectors: it materializes the
-  // DV-applied view and the swap leaves no `_graft_dv/` behind.
+  // (or full-partition) rewrite for a handful of rows. The MoR verbs
+  // instead write TOMBSTONES — (file, row-position) pairs from Spark's
+  // hidden `_metadata.file_path`/`row_index`, the device of Delta's
+  // deletion vectors and Iceberg's positional deletes — as one vector
+  // file under `_graft_dv/`, committed as an entry of ONE manifest
+  // generation like a data file. A generation's rows are its data
+  // files minus the positions its own vectors name, so [[get]],
+  // [[getAsOf]] and CDC all anti-join the same seeded vector scan (no
+  // listing, no footer job). A vector commit rebases like an append and
+  // is refused when a file it targets was retired meanwhile. A
+  // whole-table rewrite materializes the vectors its plan read and
+  // retires them; [[compactSmall]] keeps them.
 
   private val RelCol = "__graft_rel"
   private val RidxCol = "__graft_ridx"
   // the chunk-ordinal partition column of a chunked load's staged write
   private val ChunkCol = "_graft_chunk"
+  // deletion-vector files live under this table-root directory
+  private final val DvDir = "_graft_dv"
+  private val DvSchema = StructType.fromDDL("rel STRING, ridx BIGINT")
 
-  private def dvPath(name: String) = new Path(tablePath(name), "_graft_dv")
+  /** The tombstones of vector files `dvs` (`rel`, `ridx`): a scan seeded
+    * from their entries with the schema the verbs write — no listing,
+    * no footer job.
+    */
+  private def vectorFrame(name: String, dvs: Seq[ManifestEntry]): DataFrame = {
+    val (idx, ds) = org.apache.spark.sql.GraftFileIndexBridge.manifestIndex(
+      spark, fs.makeQualified(new Path(tablePath(name), DvDir)),
+      statusesOf(name, dvs), Some(DvSchema))
+    org.apache.spark.sql.GraftFileIndexBridge.manifestFrame(spark, idx, ds,
+      identity)
+  }
 
-  private def hasDeletionVectors(name: String): Boolean =
-    try fs.listStatus(dvPath(name)).exists(_.getPath.getName.endsWith(".parquet"))
-    catch { case _: java.io.FileNotFoundException => false }
+  /** Both URI renderings of the table root (`_metadata.file_path`
+    * renders an empty authority as `scheme:/path` while
+    * `Path.toUri.toString` renders it `scheme:///path`), used for
+    * length-based prefix strips plan-side ([[relPathCol]]) and
+    * driver-side ([[planInputRels]]) with identical encoding rules.
+    */
+  private def rootUriPrefixes(name: String): Seq[String] = {
+    val q = fs.makeQualified(tablePath(name)).toUri
+    val auth = Option(q.getAuthority).filter(_.nonEmpty)
+    (Seq(
+      new java.net.URI(q.getScheme, auth.orNull, q.getPath, null, null)
+        .toString) ++ (if (auth.isEmpty) Seq(q.toString) else Nil)).distinct
+  }
 
   /** Table-root-RELATIVE path of each row's file. Relative — not the
     * full URI — so tombstones survive a table [[rename]]; computed with
@@ -4523,20 +4572,6 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
     * rename). A file_path that does NOT start with the expected root
     * raises at scan time instead of producing a wrong relative path.
     */
-  /** Both URI renderings of the table root (`_metadata.file_path`
-    * renders an empty authority as `scheme:/path` while
-    * `Path.toUri.toString` renders it `scheme:///path`), used for
-    * length-based prefix strips plan-side ([[relPathCol]]) and
-    * driver-side ([[relOf]]) with identical encoding rules.
-    */
-  private def rootUriPrefixes(name: String): Seq[String] = {
-    val q = fs.makeQualified(tablePath(name)).toUri
-    val auth = Option(q.getAuthority).filter(_.nonEmpty)
-    (Seq(
-      new java.net.URI(q.getScheme, auth.orNull, q.getPath, null, null)
-        .toString) ++ (if (auth.isEmpty) Seq(q.toString) else Nil)).distinct
-  }
-
   private def relPathCol(name: String): Column = {
     val prefixes = rootUriPrefixes(name)
     val fp = col("_metadata.file_path")
@@ -4549,89 +4584,117 @@ final class SparkWarehouse(val spark: SparkSession, val warehouseDir: String,
         lit(s"relPathCol: file outside table root ${prefixes.head}: "), fp)))
   }
 
-  /** The raw scan with positions, minus every tombstoned row. */
-  private def liveWithPositions(name: String, raw: DataFrame): DataFrame = {
+  /** `raw` — a scan of a generation's data files — with each row's
+    * position (`RelCol`, `RidxCol`), minus the positions `dvs` name.
+    */
+  private def liveWithPositions(name: String, raw: DataFrame,
+                                dvs: Seq[ManifestEntry]): DataFrame = {
     val pos = raw.select(col("*"), relPathCol(name).as(RelCol),
       col("_metadata.row_index").as(RidxCol))
-    if (!hasDeletionVectors(name)) pos
-    else pos.join(
-      spark.read.parquet(dvPath(name).toString)
+    if (dvs.isEmpty) pos
+    else pos.join(vectorFrame(name, dvs)
         .select(col("rel").as(RelCol), col("ridx").as(RidxCol)),
       Seq(RelCol, RidxCol), "left_anti")
   }
 
-  /** Count of pending tombstones — 0 means every read is a plain scan.
-    * Exposed so maintenance jobs can decide when a fold ([[compact]])
-    * pays for itself (read amplification grows with the anti-join's
-    * right side).
+  /** `raw` minus the positions `dvs` name; `raw` itself when none. */
+  private def liveRows(name: String, raw: DataFrame,
+                       dvs: Seq[ManifestEntry]): DataFrame =
+    if (dvs.isEmpty) raw
+    else liveWithPositions(name, raw, dvs).drop(RelCol, RidxCol)
+
+  /** Count of tombstones the committed generation's vectors hold — 0
+    * means every read is a plain scan. Exposed so maintenance jobs can
+    * decide when a fold ([[compact]]) pays for itself (read
+    * amplification grows with the anti-join's right side).
     */
   def pendingDeletionVectors(name: String): Either[WarehouseError, Long] =
     try {
       if (!fs.exists(tablePath(name))) Left(TableNotFound(name))
-      else if (!hasDeletionVectors(name)) Right(0L)
-      else Right(spark.read.parquet(dvPath(name).toString).count())
+      else Right(readManifestGen(name).filter(_.dvs.nonEmpty)
+        .fold(0L)(g => vectorFrame(name, g.dvs).count()))
     } catch { case e: Exception => Left(TableGenericError(e.getMessage, Some(e))) }
 
-  /** Merge-on-read DELETE ... WHERE: append tombstones for matching live
-    * rows; no data file is rewritten. One pushed-filter scan + an
-    * O(matched)-row write — the 100 TB path for selective predicates
-    * that aren't partition-only (where [[deleteWhere]] would rewrite
-    * the table). Same row semantics as [[deleteWhere]]: only
-    * predicate-TRUE rows die; already-tombstoned rows can't re-match.
+  /** The `rels` an observed `collect_set` gathered. */
+  private def observedRels(obs: org.apache.spark.sql.Observation): Set[String] =
+    obs.get("rels").asInstanceOf[scala.collection.Seq[_]]
+      .iterator.map(_.toString).toSet
+
+  /** Write the positions (`RelCol`, `RidxCol`) of `rows` as one vector
+    * file under `tmp`'s `_graft_dv/`.
+    */
+  private def writeVector(rows: DataFrame, tmp: Path): Unit =
+    rows.select(col(RelCol).as("rel"), col(RidxCol).as("ridx"))
+      .write.mode(SaveMode.Overwrite).parquet(new Path(tmp, DvDir).toString)
+
+  /** Merge-on-read DELETE ... WHERE: write the matching live rows'
+    * positions as one vector file and commit it in one generation; no
+    * data file is rewritten. One write job (the pushed-filter scan
+    * feeds it, and observes the files it targets) — the 100 TB path
+    * for selective predicates that aren't partition-only (where
+    * [[deleteWhere]] would rewrite the table). Same row semantics as
+    * [[deleteWhere]]: only predicate-TRUE rows die; already-tombstoned
+    * rows can't re-match. Nothing matched commits nothing. Refused
+    * (Left, nothing committed) when a file it targets was retired by a
+    * rewrite that committed first.
     */
   def deleteWhereMor(name: String, predicate: Column): Either[WarehouseError, Unit] =
     try {
       if (!fs.exists(tablePath(name))) return Left(TableNotFound(name))
       requireNotBucketed(name, "deleteWhereMor")
-      if (!hasDataFiles(name)) return Right(())
-      val raw = rawLiveFrame(name)
-      liveWithPositions(name, raw).filter(predicate)
-        .select(col(RelCol).as("rel"), col(RidxCol).as("ridx"))
-        .write.mode(SaveMode.Append).parquet(dvPath(name).toString)
-      registerView(name)
-      Right(())
+      readManifestGen(name).filter(_.entries.nonEmpty).fold(
+          Right(()): Either[WarehouseError, Unit]) { gen =>
+        val obs = new org.apache.spark.sql.Observation()
+        appendDataFiles(name, (t: Set[String]) => Some(t)) { tmp =>
+          writeVector(liveWithPositions(name, liveFrameOf(name, gen), gen.dvs)
+            .filter(predicate)
+            .observe(obs, collect_set(col(RelCol)).as("rels")), tmp)
+          Right(observedRels(obs))
+        }.map(_ => registerView(name))
+      }
     } catch { case e: Exception => Left(TableGenericError(e.getMessage, Some(e))) }
 
-  /** Merge-on-read UPDATE ... SET ... WHERE: append the updated row
-    * versions as delta files + tombstones for the old positions. Delta
-    * files are first-class table files (later vectors can tombstone
-    * them; partitioned layouts keep their directory scheme). Write
-    * order is deltas FIRST, tombstones second: a crash in the window
-    * leaves duplicate (old+new) versions visible, never lost rows. The
-    * matched set is pinned (localCheckpoint) before the delta append so
-    * the tombstone pass can never see — and kill — the rows it just
-    * wrote.
+  /** Merge-on-read UPDATE ... SET ... WHERE: write the updated row
+    * versions as delta files and the old positions as one vector file,
+    * and commit both in ONE generation — no reader ever sees both
+    * versions of a row, or neither. Delta files are first-class table
+    * files (later vectors can tombstone them; partitioned layouts keep
+    * their directory scheme). The matched set is pinned
+    * (localCheckpoint, which also observes the files it targets) so
+    * both writes read it once. Nothing matched commits nothing.
     */
   def updateWhereMor(name: String, set: Map[String, Column],
                      predicate: Column): Either[WarehouseError, Unit] =
     try {
       if (!fs.exists(tablePath(name))) return Left(TableNotFound(name))
       requireNotBucketed(name, "updateWhereMor")
-      if (!hasDataFiles(name)) return Right(())
-      val raw = rawLiveFrame(name)
-      val missing = set.keys.filterNot(raw.columns.contains)
-      require(missing.isEmpty, s"unknown update columns: $missing")
-      val matched = liveWithPositions(name, raw).filter(predicate)
-        .localCheckpoint()
-      try {
-        val dataCols = raw.columns.toIndexedSeq
-        val newVersions = matched.select(dataCols.map { c =>
-          set.get(c).map(_.as(c)).getOrElse(col(c))
-        }: _*)
-        val pcols = meta(name).toOption.map(_.partitionCols).getOrElse(Nil)
-          .filter(dataCols.contains)
-        appendDataFiles(name) { tmp =>
-          val writer = newVersions.write.mode(SaveMode.Overwrite)
-          Right(if (pcols.nonEmpty)
-            writer.partitionBy(pcols: _*).parquet(tmp.toString)
-          else writer.parquet(tmp.toString))
-        }
-        matched.select(col(RelCol).as("rel"), col(RidxCol).as("ridx"))
-          .write.mode(SaveMode.Append).parquet(dvPath(name).toString)
-      } finally
-        org.apache.spark.sql.GraftColumnBridge.unpersistCheckpoint(matched)
-      registerView(name)
-      Right(())
+      readManifestGen(name).filter(_.entries.nonEmpty).fold(
+          Right(()): Either[WarehouseError, Unit]) { gen =>
+        val raw = liveFrameOf(name, gen)
+        val missing = set.keys.filterNot(raw.columns.contains)
+        require(missing.isEmpty, s"unknown update columns: $missing")
+        val obs = new org.apache.spark.sql.Observation()
+        val matched = liveWithPositions(name, raw, gen.dvs).filter(predicate)
+          .observe(obs, collect_set(col(RelCol)).as("rels"))
+          .localCheckpoint()
+        try {
+          val targets = observedRels(obs)
+          val dataCols = raw.columns.toIndexedSeq
+          val pcols = meta(name).toOption.map(_.partitionCols).getOrElse(Nil)
+            .filter(dataCols.contains)
+          if (targets.isEmpty) Right(())
+          else appendDataFiles(name, (_: Unit) => Some(targets)) { tmp =>
+            val writer = matched.select(dataCols.map { c =>
+              set.get(c).map(_.as(c)).getOrElse(col(c))
+            }: _*).write.mode(SaveMode.Overwrite)
+            if (pcols.nonEmpty)
+              writer.partitionBy(pcols: _*).parquet(tmp.toString)
+            else writer.parquet(tmp.toString)
+            Right(writeVector(matched, tmp))
+          }.map(_ => registerView(name))
+        } finally
+          org.apache.spark.sql.GraftColumnBridge.unpersistCheckpoint(matched)
+      }
     } catch { case e: Exception => Left(TableGenericError(e.getMessage, Some(e))) }
 
   /** Rename a table: one atomic filesystem rename (the meta sidecar

@@ -159,7 +159,14 @@ object GraftFileIndexBridge {
       override def invalidateAll(): Unit = ()
     }
     val options = Map("mergeSchema" -> "true")
-    val index = new InMemoryFileIndex(session, Seq(root), options, None, cache)
+    // identity equality: the stock index equals any other over the same
+    // root, so two seeded scans of different file lists under one root
+    // (two generations, or two sets of deletion-vector files) would
+    // canonicalize alike and one plan could reuse the other's exchange
+    val index = new InMemoryFileIndex(session, Seq(root), options, None, cache) {
+      override def equals(other: Any): Boolean = this eq other.asInstanceOf[AnyRef]
+      override def hashCode(): Int = System.identityHashCode(this)
+    }
     val dataSchema = cachedDataSchema.getOrElse {
       new ParquetFileFormat().inferSchema(session, options, index.allFiles())
         .getOrElse(throw new IllegalStateException(

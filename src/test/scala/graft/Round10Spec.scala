@@ -151,17 +151,50 @@ class Round10Spec extends SparkSpec {
         unwrap(whM.load("t", base))
         unwrap(whC.load("t", base))
       }
+      val gensM = scala.collection.mutable.ArrayBuffer(
+        whM.currentGeneration("t").get)
+      val gensC = scala.collection.mutable.ArrayBuffer(
+        whC.currentGeneration("t").get)
+      def mark(): Unit = {
+        gensM += whM.currentGeneration("t").get
+        gensC += whC.currentGeneration("t").get
+      }
       // delete, update, then a second delete whose predicate can ONLY
       // match rows the update appended as delta files — vectors over
       // deltas are the part a naive implementation gets wrong
       unwrap(whM.deleteWhereMor("t", col("id") % 5 === 0))
       unwrap(whC.deleteWhere("t", col("id") % 5 === 0))
+      mark()
       unwrap(whM.updateWhereMor("t", Map("v" -> (col("v") + 10000L)),
         col("id") % 3 === 0))
       unwrap(whC.updateWhere("t", Map("v" -> (col("v") + 10000L)),
         col("id") % 3 === 0))
+      mark()
       unwrap(whM.deleteWhereMor("t", col("v") >= 10000L && col("id") % 2 === 0))
       unwrap(whC.deleteWhere("t", col("v") >= 10000L && col("id") % 2 === 0))
+      mark()
+
+      // every generation reads the same under both, and so does the
+      // keyed change feed between consecutive generations
+      def asOf(wh: graft.warehouse.SparkWarehouse, g: Long) =
+        unwrap(wh.getAsOf("t", g)).select("id", "part", "v").collect()
+          .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+      def keyed(wh: graft.warehouse.SparkWarehouse, a: Long, b: Long) =
+        unwrap(wh.changesBetweenKeyed("t", a, b, Seq("id")))
+          .select("id", "part", "v", "change_type").collect()
+          .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
+            r.getString(3))).toSet
+      gensM.indices.foreach { i =>
+        assert(asOf(whM, gensM(i)) == asOf(whC, gensC(i)),
+          s"trial $trial (partitioned=$partitioned): step $i as-of diverges")
+        if (i > 0) {
+          val m = keyed(whM, gensM(i - 1), gensM(i))
+          assert(m.nonEmpty, s"trial $trial: step $i has no changes")
+          assert(m == keyed(whC, gensC(i - 1), gensC(i)),
+            s"trial $trial (partitioned=$partitioned): step $i keyed CDC " +
+              "diverges")
+        }
+      }
 
       def rows(wh: graft.warehouse.SparkWarehouse) =
         unwrap(wh.get("t")).select("id", "part", "v").collect()

@@ -52,7 +52,8 @@ class Round14Spec extends SparkSpec {
   }
 
   /** Authoritative walk, rel in the same URI rendering the warehouse
-    * uses (qualified-URI prefix strip), with exact lengths.
+    * uses (qualified-URI prefix strip), with exact lengths. Deletion-
+    * vector files under `_graft_dv/` are committed entries too.
     */
   private def walkOf(wh: graft.warehouse.SparkWarehouse,
                      t: String): Set[(String, Long)] = {
@@ -62,7 +63,8 @@ class Round14Spec extends SparkSpec {
     def walk(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
       fs.listStatus(p).toSeq.flatMap { st =>
         val n = st.getPath.getName
-        if (n.startsWith("_") || n.startsWith(".")) Nil
+        if (n == "_graft_dv" && p == root) walk(st.getPath)
+        else if (n.startsWith("_") || n.startsWith(".")) Nil
         else if (st.isDirectory) walk(st.getPath)
         else if (n.endsWith(".parquet")) Seq(st) else Nil
       }

@@ -350,19 +350,25 @@ class Round15Spec extends SparkSpec {
     assert(now.filter(col("b").isNull).count() == 100L)
   }
 
-  test("getAsOf refuses tables with pending merge-on-read vectors and " +
-    "serves them after compact materializes the deletions") {
+  test("getAsOf serves every generation of a merge-on-read table with " +
+    "the deletes it committed, before and after compact folds them") {
     val wh = tmpWh("r15-asofmor")
     val t = "t"
     unwrap(wh.load(t, spark.range(0, 300).toDF("id")))
+    val g0 = wh.currentGeneration(t).get
     unwrap(wh.deleteWhereMor(t, col("id") % 5 === 0))
+    val g1 = wh.currentGeneration(t).get
+    assert(g1 > g0, "the merge-on-read delete committed no generation")
     assert(unwrap(wh.get(t)).count() == 240L)
-    val g = wh.currentGeneration(t).get
-    assert(wh.getAsOf(t, g).isLeft, "as-of served unversioned MoR state")
+    assert(unwrap(wh.getAsOf(t, g0)).count() == 300L)
+    assert(unwrap(wh.getAsOf(t, g1)).count() == 240L)
     unwrap(wh.compact(t, 1))
     val g2 = wh.currentGeneration(t).get
     assert(unwrap(wh.getAsOf(t, g2)).count() == 240L)
-    // the compact materialized the vectors: reads drop the anti-join
+    assert(unwrap(wh.pendingDeletionVectors(t)) == 0L)
+    // older generations keep their own vectors after the fold
+    assert(unwrap(wh.getAsOf(t, g1)).count() == 240L)
+    assert(unwrap(wh.getAsOf(t, g0)).count() == 300L)
     assert(unwrap(wh.get(t)).count() == 240L)
   }
 }

@@ -489,4 +489,50 @@ class WarehouseSpec extends SparkSpec {
     assert(res.left.exists(_.message.contains("bucketed")))
     spark.sql("DROP TABLE IF EXISTS cmpb")
   }
+
+  test("a first load into a missing table runs at most two Spark jobs, " +
+    "and a created table reads the schema its empty parquet file gave") {
+    val wh = freshWh()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    val batch = spark.range(0, 100).select(col("id"),
+      concat(lit("n"), col("id").cast("string")).as("name"))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark)
+      val j0 = jobs.get()
+      assert(wh.load("fresh", batch) == Right(100L))
+      org.apache.spark.sql.GraftColumnBridge.drainListenerBus(spark)
+      val loadJobs = jobs.get() - j0
+      assert(loadJobs <= 2, s"first load ran $loadJobs jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(wh.get("fresh").toOption.get.count() == 100L)
+
+    // the schema a parquet round trip of the declared fields reads back
+    val schema = Seq(FieldRepr("id", "INTEGER", "REQUIRED"),
+      FieldRepr("name", "STRING", "NULLABLE"),
+      FieldRepr("amount", "NUMERIC", "NULLABLE", precision = Some(10),
+        scale = Some(2)),
+      FieldRepr("at", "TIMESTAMP", "NULLABLE"),
+      FieldRepr("tags", "STRING", "REPEATED"),
+      FieldRepr("geo", "RECORD", "NULLABLE", fields = Seq(
+        FieldRepr("lat", "FLOAT", "REQUIRED"),
+        FieldRepr("ok", "BOOLEAN", "NULLABLE"))))
+    val roundTrip = Files.createTempDirectory("graft-wh-schema").resolve("p")
+      .toString
+    spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        graft.schema.Widen.toStructType(schema))
+      .write.parquet(roundTrip)
+    val expected = spark.read.parquet(roundTrip).schema
+    assert(wh.create("declared", schema).isRight)
+    assert(wh.get("declared").toOption.get.schema == expected)
+    assert(wh.describe("declared").toOption.get ==
+      graft.schema.Describe("declared", schema))
+  }
 }
